@@ -48,16 +48,9 @@ def flatten_nodes(nodes: DataFrame, model: Model, kind: Kind) -> DataFrame:
     )
 
 
-def edge_kinds(
-    source: GraphSource, node_kind: DataFrame | None = None
-) -> DataFrame:
+def edge_kinds(source: GraphSource) -> DataFrame:
     """Edges tagged with endpoint kinds: edges ⋈ nodes(id,kind) twice —
     the distributed node_by_chksum lookup.
-
-    ``node_kind`` overrides the (id, kind) resolution frame — the
-    incremental path passes delta-nodes ∪ published-tables so a delta
-    edge whose endpoint is an UNCHANGED node (absent from the delta)
-    still resolves instead of silently dropping out of the inner join.
 
     No broadcast hint: the (id, kind) projection is small on collector
     graphs but unbounded in general, and a forced hint overrides
@@ -65,8 +58,7 @@ def edge_kinds(
     billion-node graph.  AQE picks broadcast at runtime when the
     projection fits (localShuffleReader converts to broadcast-hash);
     otherwise it sort-merge-joins — the only strategy that survives."""
-    if node_kind is None:
-        node_kind = source.nodes.select("id", "kind")
+    node_kind = source.nodes.select("id", "kind")
     e = source.default_edges()
     from_k = node_kind.withColumnRenamed("id", "from_id").withColumnRenamed(
         "kind", "from_kind"
@@ -77,14 +69,12 @@ def edge_kinds(
     return e.join(from_k, "from_id").join(to_k, "to_id")
 
 
-def link_tables(
-    source: GraphSource, node_kind: DataFrame | None = None
-) -> dict[tuple[str, str], DataFrame]:
+def link_tables(source: GraphSource) -> dict[tuple[str, str], DataFrame]:
     """One (from_id, to_id) DataFrame per endpoint-kind pair
     (reference sql.py:190-201).  The set of pairs is a distinct
     aggregation (collect_plugins.py:120-123) — small, so collecting it
     to drive view creation is driver-safe even on huge graphs."""
-    tagged = edge_kinds(source, node_kind=node_kind)
+    tagged = edge_kinds(source)
     pairs = [
         (r["from_kind"], r["to_kind"])
         for r in tagged.select("from_kind", "to_kind").distinct().collect()
@@ -102,19 +92,16 @@ def sync_views(
     source: GraphSource,
     model: Model,
     temp_prefix: bool = False,
-    node_kind: DataFrame | None = None,
 ) -> dict[str, DataFrame]:
     """Register every kind table and link table as temp views; returns
-    name -> DataFrame.  View names follow reference schema_utils.py:28-36.
-    ``node_kind`` overrides edge-endpoint kind resolution (see
-    ``edge_kinds``)."""
+    name -> DataFrame.  View names follow reference schema_utils.py:28-36."""
     out: dict[str, DataFrame] = {}
     for kind in model.table_kinds():
         name = get_table_name(kind.fqn, with_tmp_prefix=temp_prefix)
         df = flatten_nodes(source.nodes, model, kind)
         df.createOrReplaceTempView(name)
         out[name] = df
-    for (fk, tk), df in link_tables(source, node_kind=node_kind).items():
+    for (fk, tk), df in link_tables(source).items():
         name = get_link_table_name(fk, tk, with_tmp_prefix=temp_prefix)
         df.createOrReplaceTempView(name)
         out[name] = df

@@ -15,73 +15,221 @@ table advances by MERGE algebra instead of a rebuild:
   delta's edge set (so removed edges disappear), and rows pointing AT
   a deleted node are dropped (no dangling links).  Inbound edges of
   unchanged nodes are untouched.
-* untouched tables — not rewritten at all (the incremental win: a
-  generation that changes 0.1% of nodes rewrites only the tables those
-  nodes live in).
+* untouched tables — not read and not rewritten at all (the
+  incremental win: a generation that changes 0.1% of nodes rewrites
+  only the tables those nodes live in or own links in).
 
-All staged tables publish through ONE ``swap_staging`` pass, so a
-reader sees generation N or N+1, never a mix — the same all-or-nothing
-guarantee the reference gets from its single transaction
-(collect_plugins.py:193-194).
+Tables publish through ``swap_staging`` only after every write has
+finished, so a crash before the publish leaves generation N.  The pass
+renames one table at a time: it is crash-safe, not gap-free, and a
+reader that lists tables during it can see some tables of N and some
+of N+1.  ``_node_index`` is published by a second pass after the
+tables, so a crash during the publish leaves the index at N.
+Replaying the same delta (as the stream does after a failed batch)
+then plans against generation N again and completes the generation:
+a table already at N+1 merges to the same rows.
 
-Scale shape: every step is an equi anti-join/union on the table key —
-shuffle-partitioned by ``_id``/``from_id``, exchange-free when the
-table layout is bucketed by that key (sinks/bucketing.py); the
-deleted-id set is collector metadata (broadcast-sized).  No
-driver-side row loops; the per-table Python loop is metadata-scale
-(table count), same as collect_to_files.
+Scale shape — one planning action, then one write per affected table:
+
+* plan: one collect returns the delta's (id, kind) rows and edges and,
+  for every id the delta mentions, its published kind: the ids are
+  broadcast against the narrow ``_node_index`` (one scan of it, no
+  shuffle).  All of it is change-sized by contract, and the broadcast
+  brings the ids to the driver in any case.  The driver tags the delta edges with endpoint
+  kinds and derives every table's ``upserted`` count and the affected
+  set: the old and new kind table of each changed id, the kind table
+  of each deleted id, link tables whose from-kind is the kind of a
+  changed or deleted id, link tables whose to-kind is the kind of a
+  deleted id, and the link pairs in the delta;
+* skip: every other table is reported ``{"upserted": 0, "removed": 0}``
+  without being read;
+* merge: an affected table is swept by a broadcast anti join against
+  the changed and deleted ids (no shuffle of the table), unioned with
+  its delta rows and written once; ``removed`` is observed during that
+  write, not counted by extra jobs.  The write is coalesced to the
+  table's current file count, so a generation never adds files.
 """
 
 from __future__ import annotations
 
+import functools
 import os
+import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from resotodatalink_spark.model.kinds import Model, get_table_name
-from resotodatalink_spark.operators.flatten import sync_views
+from resotodatalink_spark.model.compiler import link_table_schema
+from resotodatalink_spark.model.kinds import Model, get_link_table_name, get_table_name
+# sync_views is not called here; syncbench/spans.py wraps it in this module
+from resotodatalink_spark.operators.flatten import flatten_nodes, sync_views  # noqa: F401
 from resotodatalink_spark.operators.sync import Feedback, NoFeedback
-from resotodatalink_spark.sinks.files import NODE_INDEX, swap_staging, write_table
+from resotodatalink_spark.sinks.files import (
+    NODE_INDEX,
+    OLD_SUFFIX,
+    STAGING_SUFFIX,
+    swap_staging,
+    write_table,
+)
 from resotodatalink_spark.sources.graph import GraphSource
 
 
-def _resolved_node_kinds(
-    spark: SparkSession, delta: GraphSource, model: Model, dest_dir: str
-) -> DataFrame:
-    """(id, kind) resolution frame for delta-edge endpoints: delta
-    nodes win (a changed node's NEW kind), published tables fill in the
-    unchanged endpoints.  Without the published side, a delta edge
-    whose target is an unchanged node would silently drop out of the
-    endpoint inner join (the round-5 advisor's high finding).
+def _published_tables(dest_dir: str) -> set[str]:
+    """Kind and link tables on disk (the underscore-prefixed
+    ``_node_index`` is maintained separately)."""
+    if not os.path.isdir(dest_dir):
+        return set()
+    return {
+        e
+        for e in os.listdir(dest_dir)
+        if os.path.isdir(os.path.join(dest_dir, e))
+        and not e.endswith((STAGING_SUFFIX, OLD_SUFFIX))
+        and not e.startswith("_")
+    }
 
-    Scale shape, in preference order: a published ``_node_index``
-    table (collect_to_files(node_index=True)) makes this ONE narrow
-    key-partitioned table read; the fallback unions the pruned ``_id``
-    column of every published kind table (parquet column pruning makes
-    each a key-column scan, not a data read — correct everywhere, but
-    O(tables) scans per delta).  A collector that ships endpoint kinds
-    inside the edge doc could skip both."""
-    nk = delta.nodes.select("id", "kind")
+
+def _node_index(
+    spark: SparkSession, model: Model, dest_dir: str, on_disk: set[str]
+) -> DataFrame:
+    """The published (id, kind) index.  A destination published without
+    one (``collect_to_files(node_index=False)``) gets it built here from
+    its tables, once: ``sync_delta`` publishes the result with the
+    generation, so every later delta reads the index alone.
+
+    The plan trusts the index to list every node that has a row in any
+    table.  A built index takes each kind table's ids with that kind,
+    and every other id found in a link table with a NULL kind: a link
+    table's name truncates its kinds, so the kind of a node without a
+    table cannot be read back.  Such a node is planned conservatively
+    until a delta ships it with its kind."""
     idx_path = os.path.join(dest_dir, NODE_INDEX)
     if os.path.isdir(idx_path):
-        pub = spark.read.parquet(idx_path).select("id", "kind")
-        return nk.unionByName(pub.join(nk.select("id"), "id", "left_anti"))
-    pubs: list[DataFrame] = []
+        return spark.read.schema("id string, kind string").parquet(idx_path)
+    index = _local(spark, id=[], kind=[])
     for kind in model.table_kinds():
-        path = os.path.join(dest_dir, get_table_name(kind.fqn))
-        if os.path.isdir(path):
-            pubs.append(
-                spark.read.parquet(path).select(
+        if (name := get_table_name(kind.fqn)) in on_disk:
+            index = index.unionByName(
+                spark.read.parquet(os.path.join(dest_dir, name)).select(
                     F.col("_id").alias("id"), F.lit(kind.fqn).alias("kind")
                 )
             )
-    if pubs:
-        pub = pubs[0]
-        for p in pubs[1:]:
-            pub = pub.unionByName(p)
-        nk = nk.unionByName(pub.join(nk.select("id"), "id", "left_anti"))
-    return nk
+    ends = [
+        spark.read.schema(link_table_schema())
+        .parquet(os.path.join(dest_dir, name))
+        .select(F.explode(F.array("from_id", "to_id")).alias("id"))
+        for name in sorted(on_disk)
+        if name.startswith("link_")
+    ]
+    if not ends:
+        return index
+    others = (
+        functools.reduce(DataFrame.unionByName, ends)
+        .distinct()
+        .join(index.select("id"), "id", "left_anti")
+        .select("id", F.lit(None).cast("string").alias("kind"))
+    )
+    return index.unionByName(others)
+
+
+def _merge(
+    existing: DataFrame,
+    sweeps: list[tuple[str, DataFrame]],
+    delta_rows: DataFrame | None,
+) -> tuple[DataFrame, Observation, Observation]:
+    """``existing`` minus the rows whose key column is in a sweep's id
+    set, plus ``delta_rows``, held at ``existing``'s file count.  The two
+    observations count the rows before and after the sweeps while the
+    result is written."""
+    before, after = Observation(), Observation()
+    kept = existing.observe(before, F.count(F.lit(1)).alias("n"))
+    for key, ids in sweeps:
+        kept = kept.join(F.broadcast(ids), kept[key] == ids["id"], "left_anti")
+    kept = kept.observe(after, F.count(F.lit(1)).alias("n"))
+    merged = kept if delta_rows is None else delta_rows.unionByName(kept)
+    return merged.coalesce(max(1, len(existing.inputFiles()))), before, after
+
+
+def _tag(df: DataFrame, what: str, a: str, b: str) -> DataFrame:
+    return df.select(F.lit(what).alias("what"), F.col(a).alias("a"), F.col(b).alias("b"))
+
+
+def _local(spark: SparkSession, **columns: list) -> DataFrame:
+    """Driver-side string columns as a local relation, built in one JVM
+    call (a parallelized list would run Python tasks on every read)."""
+    return spark.createDataFrame(
+        pa.table({c: pa.array(v, pa.string()) for c, v in columns.items()})
+    )
+
+
+def _plan(
+    rows: list,
+    deleted: list[str],
+    kind_tables: set[str],
+    on_disk: set[str],
+) -> tuple[dict[str, int], dict[str, list[tuple[str, str]]], set[str], list[str]]:
+    """From the planning rows — ``("node", id, kind)`` per delta node,
+    ``("edge", from_id, to_id)`` per delta edge, ``("old", id, kind)``
+    per published index row of an id the delta mentions — derive the
+    per-table upserted counts, the delta's link rows by table, the set
+    of tables the generation may change, and the changed ids.  A
+    changed id the index does not list is a new node, with no rows to
+    sweep."""
+    new_kind: dict[str, str] = {}
+    old_kind: dict[str, str] = {}
+    edges: list[tuple[str, str]] = []
+    upserted: dict[str, int] = {}
+    for what, a, b in rows:
+        if what == "edge":
+            edges.append((a, b))
+        elif what == "old":
+            old_kind[a] = b
+        else:
+            if b is not None and (name := get_table_name(b)) in kind_tables:
+                upserted[name] = upserted.get(name, 0) + 1
+            if a is not None:
+                new_kind[a] = b
+    # endpoint kinds: the delta's nodes win (a changed node's NEW kind),
+    # the index fills in the unchanged endpoints; an edge with an
+    # unresolved endpoint lands in no table, as in a full sync
+    kind_of = {**old_kind, **new_kind}
+    links: dict[str, list[tuple[str, str]]] = {}
+    for f, t in edges:
+        if kind_of.get(f) is not None and kind_of.get(t) is not None:
+            links.setdefault(get_link_table_name(kind_of[f], kind_of[t]), []).append((f, t))
+    upserted.update((name, len(r)) for name, r in links.items())
+
+    # kinds whose tables may hold rows a changed (owners) or deleted
+    # (gone) id owns; a changed id's new kind is an owner too, which
+    # covers nodes of kinds without a table, absent from a built index
+    owners = {old_kind[i] for i in new_kind if i in old_kind} | set(new_kind.values())
+    gone = {old_kind[i] for i in deleted if i in old_kind}
+    owners.discard(None)
+    gone.discard(None)
+
+    def link_tables(kinds: set[str], end: str) -> set[str]:
+        # link names truncate kind names, so a prefix may match a few
+        # extra tables; those merge to no change and are not published
+        stems = {get_table_name(k)[0:25] for k in kinds}
+        return {
+            t
+            for t in on_disk
+            if t.startswith("link_")
+            and any(
+                t.startswith(f"link_{s}_") if end == "from" else t.endswith(f"_{s}")
+                for s in stems
+            )
+        }
+
+    affected = set(upserted) | {get_table_name(k) for k in owners | gone}
+    affected |= link_tables(owners | gone, "from") | link_tables(gone, "to")
+    # an id whose published kind is unknown (NULL in a built index, or
+    # a deleted id the index does not list) may sit in any link table
+    unknown = {i for i, k in old_kind.items() if k is None}
+    unknown |= {i for i in deleted if i not in old_kind}
+    if unknown & (set(new_kind) | set(deleted)):
+        affected |= {t for t in on_disk if t.startswith("link_")}
+    return upserted, links, affected, list(new_kind)
 
 
 def sync_delta(
@@ -97,109 +245,100 @@ def sync_delta(
     complete current outbound edge set of those nodes; ``deleted_ids``
     lists nodes that vanished.  Returns per-table
     ``{"upserted": n, "removed": m}`` (removed = replaced + deleted
-    rows); tables with both zero are skipped, not rewritten."""
+    rows) for every kind table of the model, link pair of the delta and
+    table on disk; tables with both zero are not rewritten.
+
+    ``delta`` is read once per affected kind table: pass a materialized
+    one (``streaming.delta_sync.apply_delta_batch`` does) when its
+    source is expensive to re-read.
+
+    Size bound: the planning collect brings to the driver one row per
+    delta node, per delta edge and per index row of an id the delta
+    mentions, and each link table's delta rows go back as a local
+    relation.  The driver holds the delta's ids and edges at once, so
+    a delta must be change-sized; publish a whole graph, or a catch-up
+    of many generations, with ``collect_to_files`` instead."""
     feedback = feedback or NoFeedback()
-    node_kind = _resolved_node_kinds(spark, delta, model, dest_dir)
-    views = sync_views(spark, delta, model, node_kind=node_kind)
-    # The sweep key set: EVERY changed node id (not just the ids a
-    # given table's delta view happens to contain).  This is what makes
-    # the merge equivalent to a full resync in the two silent cases the
-    # per-view key set misses: a changed node whose outbound edges all
-    # vanished (no link-view row ⇒ stale links would survive) and a
-    # node whose kind changed (old kind's view has no row for it ⇒ the
-    # stale row in the old table would survive).
-    changed = delta.nodes.select("id").distinct()
-    del_df: DataFrame | None = None
-    if deleted_ids:
-        del_df = spark.createDataFrame(
-            [(i,) for i in deleted_ids], "id: string"
-        )
+    deleted = sorted(set(deleted_ids or []))
+    on_disk = _published_tables(dest_dir)
+    index = _node_index(spark, model, dest_dir, on_disk)
+    kind_tables = {get_table_name(k.fqn): k for k in model.table_kinds()}
 
-    # A delta with no rows/edges for a table produces no view for it,
-    # but deletions must still sweep every PUBLISHED table (a deleted
-    # node's rows and inbound links live in tables the delta never
-    # mentions), so the worklist is views ∪ on-disk tables.
-    on_disk = sorted(
-        e for e in (os.listdir(dest_dir) if os.path.isdir(dest_dir) else [])
-        if os.path.isdir(os.path.join(dest_dir, e))
-        and not e.endswith(("__staging", "__old"))
-        and not e.startswith("_")  # _node_index is maintained below
+    # The one planning action: the delta's node kinds and edges, and the
+    # published kind of every id the delta mentions (one scan of the
+    # narrow index against the broadcast ids, no shuffle of it).  All
+    # of it is change-sized by contract; broadcasting the ids brings
+    # them to the driver anyway.
+    nodes = delta.nodes.select("id", "kind")
+    edges = delta.default_edges().select("from_id", "to_id")
+    gone = _local(spark, id=deleted)
+    mentioned = (
+        nodes.select("id")
+        .unionByName(gone)
+        .unionByName(edges.select(F.col("from_id").alias("id")))
+        .unionByName(edges.select(F.col("to_id").alias("id")))
     )
-    names = sorted(set(views) | set(on_disk))
+    old = index.join(F.broadcast(mentioned), "id", "left_semi")
+    rows = (
+        _tag(nodes, "node", "id", "kind")
+        .unionByName(_tag(edges, "edge", "from_id", "to_id"))
+        .unionByName(_tag(old, "old", "id", "kind"))
+        .collect()
+    )
+    upserted, links, affected, changed = _plan(rows, deleted, set(kind_tables), on_disk)
+    # The sweep key set: EVERY changed node id, not just the ids a
+    # table's delta rows contain.  A changed node whose outbound edges
+    # all vanished ships no link row, and a node whose kind changed has
+    # no row in its old kind's delta; both still own stale rows.
+    swept = _local(spark, id=changed + deleted)
 
+    names = sorted(set(kind_tables) | set(links) | on_disk)
     stats: dict[str, dict[str, int]] = {}
     staged: list[str] = []
     for i, name in enumerate(names, 1):
-        dv = views.get(name)
-        path = os.path.join(dest_dir, name)
-        n_delta = dv.count() if dv is not None else 0
-        if not os.path.exists(path):
-            # brand-new table this generation (e.g. first node of a kind)
-            if n_delta:
-                write_table(dv, dest_dir, name, staging=True)
-                staged.append(name)
-            stats[name] = {"upserted": n_delta, "removed": 0}
-            feedback.progress_done("sync_delta", i, len(names))
-            continue
-
-        existing = spark.read.parquet(path)
-        kept = existing
-        if name.startswith("link_"):
-            # ownership merge: drop rows whose from-side node changed or
-            # died, drop rows pointing at dead nodes, add the delta edges.
-            # Owners = ALL changed node ids, not the delta edges'
-            # from_ids: a changed node whose outbound edges all vanished
-            # ships no edge rows, yet still owns (and thus retracts) its
-            # old links.
-            owners = changed.select(F.col("id").alias("from_id"))
-            if del_df is not None:
-                owners = owners.unionByName(
-                    del_df.select(F.col("id").alias("from_id"))
-                ).distinct()
-            kept = kept.join(owners, "from_id", "left_anti")
-            if del_df is not None:
-                kept = kept.join(
-                    del_df.select(F.col("id").alias("to_id")),
-                    "to_id",
-                    "left_anti",
-                )
-        else:
-            # sweep by the FULL changed-id set so a node whose kind
-            # changed leaves no stale row in its old kind's table
-            kept = kept.join(
-                changed.select(F.col("id").alias("_id")), "_id", "left_anti"
-            )
-            if del_df is not None:
-                kept = kept.join(
-                    del_df.select(F.col("id").alias("_id")), "_id", "left_anti"
-                )
-        kept = kept.select(*existing.columns)  # joins reorder key columns
-        n_kept = kept.count()
-        n_removed = existing.count() - n_kept
-        if n_delta == 0 and n_removed == 0:
-            stats[name] = {"upserted": 0, "removed": 0}  # untouched: no IO
-            feedback.progress_done("sync_delta", i, len(names))
-            continue
-        merged = kept.unionByName(dv) if dv is not None else kept
-        write_table(merged, dest_dir, name, staging=True)
-        staged.append(name)
-        stats[name] = {"upserted": n_delta, "removed": n_removed}
+        n_up, removed = upserted.get(name, 0), 0
+        if name in affected:
+            dv: DataFrame | None = None
+            if name in kind_tables:
+                dv = flatten_nodes(delta.nodes, model, kind_tables[name])
+            elif name in links:
+                f, t = zip(*links[name])
+                dv = _local(spark, from_id=list(f), to_id=list(t))
+            if name not in on_disk:
+                # brand-new table this generation (e.g. first node of a
+                # kind): change-sized, one file
+                if n_up:
+                    write_table(dv.coalesce(1), dest_dir, name, staging=True)
+                    staged.append(name)
+            else:
+                # A known schema saves the job that infers one from a
+                # file footer.  A kind table reads in the current model's
+                # columns: a property the model gained is NULL in old rows.
+                if name.startswith("link_"):
+                    schema = link_table_schema()
+                    sweeps = [("from_id", swept)] + ([("to_id", gone)] if deleted else [])
+                else:
+                    schema = dv.schema if dv is not None else None
+                    sweeps = [("_id", swept)]
+                reader = spark.read if schema is None else spark.read.schema(schema)
+                existing = reader.parquet(os.path.join(dest_dir, name))
+                merged, before, after = _merge(existing, sweeps, dv)
+                path = write_table(merged, dest_dir, name, staging=True)
+                removed = before.get["n"] - after.get["n"]
+                if n_up or removed:
+                    staged.append(name)
+                else:  # the plan could not rule it out; nothing changed
+                    shutil.rmtree(path)
+        stats[name] = {"upserted": n_up, "removed": removed}
         feedback.progress_done("sync_delta", i, len(names))
 
-    # _node_index advances by the same merge algebra as the kind
-    # tables (anti-join on changed ∪ deleted, union the delta nodes),
-    # inside the SAME publish pass — the index is never a generation
-    # behind the tables it summarizes
-    idx_path = os.path.join(dest_dir, NODE_INDEX)
-    if os.path.isdir(idx_path):
-        idx = spark.read.parquet(idx_path)
-        idx = idx.join(changed, "id", "left_anti")
-        if del_df is not None:
-            idx = idx.join(del_df, "id", "left_anti")
-        idx = idx.unionByName(delta.nodes.select("id", "kind"))
-        write_table(idx, dest_dir, NODE_INDEX, staging=True)
-        staged.append(NODE_INDEX)
+    # _node_index advances by the same merge algebra as the kind tables
+    merged, _, _ = _merge(index, [("id", swept)], nodes)
+    write_table(merged, dest_dir, NODE_INDEX, staging=True)
 
-    # one publish pass: readers see the whole generation or none of it
+    # publish after every table of the generation is staged; the index
+    # last, so a crash during the tables' pass leaves it at generation N
+    # and a replay of this delta plans against N again
     swap_staging(dest_dir, tables=staged)
+    swap_staging(dest_dir, tables=[NODE_INDEX])
     return stats

@@ -5,7 +5,7 @@
 The reference's lifecycle is collect -> model -> batch-stream ->
 DDL -> chunked inserts -> swap, all on a dedicated IO thread.  On
 Spark the same lifecycle is: graph DataFrames -> model-compiled
-flatten -> distributed write to staging -> atomic swap; Catalyst and
+flatten -> distributed write to staging -> staged swap; Catalyst and
 the cluster scheduler replace the hand-rolled batching and threading.
 
 Progress feedback mirrors the reference's ``CoreFeedback.progress_done``
@@ -63,30 +63,38 @@ def collect_to_files(
     feedback: Feedback | None = None,
     node_index: bool = False,
 ) -> list[str]:
-    """Graph -> staged table files -> atomic publish (collect_to_file +
-    swap_temp_tables semantics: readers see either the old or the new
-    complete set, never a mix).
+    """Graph -> staged table files -> one publish pass (collect_to_file
+    + swap_temp_tables semantics).  Every table is staged before any is
+    published, and ``swap_staging`` then renames one table at a time:
+    a crash leaves each table old or new, never missing, but the pass
+    is not gap-free, and a reader listing tables during it can see some
+    tables of the old generation and some of the new.
 
     ``node_index`` additionally publishes the narrow ``_node_index``
-    (id, kind) table; ``sync_delta`` then resolves delta-edge endpoint
-    kinds against that ONE table (and maintains it) instead of
-    scanning the id column of every published kind table per delta —
-    the difference between O(tables) scans and one key-partitioned
-    join at collector scale."""
-    from resotodatalink_spark.sinks.files import NODE_INDEX
+    (id, kind) table, against which ``sync_delta`` plans every delta
+    (and which it maintains); it is published after every other table,
+    so a crash during the pass never leaves it newer than a table.
+    Without ``node_index`` a published index would go stale under the
+    new tables, so it is deleted, and the next delta builds a new one
+    from the tables and publishes it with that generation."""
+    from resotodatalink_spark.sinks.files import NODE_INDEX, drop_table
 
     feedback = feedback or NoFeedback()
     views = sync_views(spark, source, model)
-    names = sorted(views)
+    tables = sorted(views)
     if node_index:
         views = dict(views)
         views[NODE_INDEX] = source.nodes.select("id", "kind")
-        names = sorted(views)
+    else:
+        drop_table(dest_dir, NODE_INDEX, spark)
+    names = sorted(views)
     for i, name in enumerate(names, 1):
         write_table(views[name], dest_dir, name, fmt=fmt, staging=True)
         feedback.progress_done("write_tables", i, len(names))
     if swap:
-        published = swap_staging(dest_dir, tables=names)
+        published = swap_staging(dest_dir, tables=tables)
+        if node_index:
+            published += swap_staging(dest_dir, tables=[NODE_INDEX])
         feedback.progress_done("swap", len(published), len(published))
         return published
     return names
@@ -238,7 +246,7 @@ def collect_plugin(
     The kind model comes from ``collector.graph.export_model()``
     (collect_plugins.py:116-117) and the data path is the standard
     docs -> GraphSource -> model-compiled flatten -> staged write ->
-    atomic swap pipeline.  ``from_docs`` parallelizes the in-memory
+    swap pipeline.  ``from_docs`` parallelizes the in-memory
     doc list; a collector too large for the driver should spill NDJSON
     and use ``GraphSource.from_json_lines`` instead (same downstream
     path)."""

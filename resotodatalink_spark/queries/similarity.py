@@ -1090,7 +1090,6 @@ def sparse_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # byte-identical, 1351.2 MB) while widening the checkpoint blocks
     # by the df column.  On an open-vocab corpus, where most bigrams
     # are unique, it is the first thing to re-try (guide §2.3).
-    wsh = w
     # join shingles by 64-bit hash, not the ~60-char string: 8x less
     # shuffle volume for the distinct + self-join.  A hash collision
     # can only ADD a candidate, which the exact-cosine verify then
@@ -1124,8 +1123,8 @@ def sparse_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # AQE into broadcasting one at sf10 (driver OOM) — pin sort-merge
     # on every join with a corpus-sized side; shuffling the weight
     # frame by doc id is the correct plan at any scale anyway.
-    wa = wsh.select(F.col("doc_id").alias("doc_a"), "tok", F.col("w").alias("wa"))
-    wb = wsh.select(F.col("doc_id").alias("doc_b"), "tok", F.col("w").alias("wb"))
+    wa = w.select(F.col("doc_id").alias("doc_a"), "tok", F.col("w").alias("wa"))
+    wb = w.select(F.col("doc_id").alias("doc_b"), "tok", F.col("w").alias("wb"))
     dot = (
         cand.join(wa.hint("merge"), "doc_a")
         .join(wb.hint("merge"), ["doc_b", "tok"])

@@ -2187,11 +2187,12 @@ def kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     3*n1f*n1b) / (4*c1*T) — so both engines compute the identical
     double with no libm call at all.
 
-    Scale shape: the adjacency pairing is a per-doc lead window (the
-    corpus-wide shuffle key is doc_id); the bigram-type collapse is
-    checkpointed and ALL marginals (left context mass, forward /
-    backward continuation type counts, the one-row type total) derive
-    from that bounded frame; top-k is TakeOrderedAndProject; the
+    Scale shape: the adjacency pairing is built inside each
+    document's token array before the explode (no window, no
+    exchange); the bigram-type collapse is checkpointed and ALL
+    marginals (left context mass, forward / backward continuation
+    type counts, the one-row type total) derive from that bounded
+    frame; top-k is TakeOrderedAndProject; the
     one-row total attaches via broadcast crossJoin (CARTESIAN_OK)."""
     d = table(spark, sf_dir, "documents")
     # Adjacency built IN-ARRAY before the explode (the bigram_lm

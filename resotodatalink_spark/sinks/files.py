@@ -36,11 +36,12 @@ from pyspark.sql.utils import AnalysisException
 
 STAGING_SUFFIX = "__staging"
 
-# Optional (id, kind) index table maintained alongside the kind tables
-# (leading underscore keeps it out of the kind/link namespace).  At
-# collector scale it turns incremental endpoint-kind resolution from
-# "scan the id column of EVERY published kind table" into one bucketed
-# join against one narrow table — see operators/incremental.py.
+# (id, kind) index table maintained alongside the kind tables (leading
+# underscore keeps it out of the kind/link namespace).  Every delta
+# generation is planned against it — see operators/incremental.py,
+# which builds it on a destination's first delta when a full sync did
+# not publish it.  It is always published after the tables it
+# describes.
 NODE_INDEX = "_node_index"
 
 
@@ -143,6 +144,30 @@ def _write_schema_marker(df: DataFrame, table_path: str) -> None:
 OLD_SUFFIX = "__old"
 
 
+def _fs(dest_dir: str, spark: SparkSession | None):
+    """(listdir, exists, rename, rmtree, join) for ``dest_dir``: ``os``
+    primitives for a plain local path, the Hadoop FileSystem of the
+    active session for a URI."""
+    if _is_uri(dest_dir):
+        spark = spark or SparkSession.getActiveSession()
+        if spark is None:
+            raise ValueError("URI destination needs an active SparkSession")
+        fs = _HadoopFs(spark, dest_dir)
+        join = lambda *parts: "/".join(p.rstrip("/") for p in parts)  # noqa: E731
+        return fs.listdir, fs.exists, fs.rename, fs.rmtree, join
+    return os.listdir, os.path.exists, os.rename, shutil.rmtree, os.path.join
+
+
+def drop_table(
+    dest_dir: str, table_name: str, spark: SparkSession | None = None
+) -> None:
+    """Delete a published table and any staged copy of it, if present."""
+    _, exists, _, rmtree, join = _fs(dest_dir, spark)
+    for name in (table_name, table_name + STAGING_SUFFIX):
+        if exists(path := join(dest_dir, name)):
+            rmtree(path)
+
+
 def swap_staging(
     dest_dir: str,
     tables: list[str] | None = None,
@@ -167,17 +192,7 @@ def swap_staging(
     publish to named tables; single-table writers (upsert/delete) pass
     it so a leftover staging dir from an unrelated failed job is never
     accidentally published."""
-    if _is_uri(dest_dir):
-        spark = spark or SparkSession.getActiveSession()
-        if spark is None:
-            raise ValueError("URI destination needs an active SparkSession")
-        fs = _HadoopFs(spark, dest_dir)
-        listdir, exists = fs.listdir, fs.exists
-        rename, rmtree = fs.rename, fs.rmtree
-        join = lambda *parts: "/".join(p.rstrip("/") for p in parts)  # noqa: E731
-    else:
-        listdir, exists = os.listdir, os.path.exists
-        rename, rmtree, join = os.rename, shutil.rmtree, os.path.join
+    listdir, exists, rename, rmtree, join = _fs(dest_dir, spark)
     published = []
     for entry in sorted(listdir(dest_dir)):
         if not entry.endswith(STAGING_SUFFIX):

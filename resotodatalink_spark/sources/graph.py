@@ -55,20 +55,34 @@ class GraphSource:
         return GraphSource._split(raw)
 
     @staticmethod
+    def parse_docs(raw: DataFrame) -> DataFrame:
+        """Every envelope field of every doc in one projection:
+        (type, id, kind, reported, ancestors, from_id, to_id, edge_type).
+        A doc leaves the fields of the other doc types NULL; ``id`` is
+        also the id of a ``deleted`` tombstone."""
+        field = lambda path: F.get_json_object("doc", path)  # noqa: E731
+        return raw.select(
+            field("$.type").alias("type"),
+            field("$.id").alias("id"),
+            field("$.reported.kind").alias("kind"),
+            field("$.reported").alias("reported"),
+            field("$.ancestors").alias("ancestors"),
+            field("$.from").alias("from_id"),
+            field("$.to").alias("to_id"),
+            field("$.edge_type").alias("edge_type"),
+        )
+
+    @staticmethod
+    def from_parsed(parsed: DataFrame) -> "GraphSource":
+        """Nodes and edges of a ``parse_docs`` frame."""
+        return GraphSource(
+            parsed.filter(F.col("type") == "node").select(*NODE_COLS),
+            parsed.filter(F.col("type") == "edge").select(*EDGE_COLS),
+        )
+
+    @staticmethod
     def _split(raw: DataFrame) -> "GraphSource":
-        typed = raw.withColumn("type", F.get_json_object("doc", "$.type"))
-        nodes = typed.filter(F.col("type") == "node").select(
-            F.get_json_object("doc", "$.id").alias("id"),
-            F.get_json_object("doc", "$.reported.kind").alias("kind"),
-            F.get_json_object("doc", "$.reported").alias("reported"),
-            F.get_json_object("doc", "$.ancestors").alias("ancestors"),
-        )
-        edges = typed.filter(F.col("type") == "edge").select(
-            F.get_json_object("doc", "$.from").alias("from_id"),
-            F.get_json_object("doc", "$.to").alias("to_id"),
-            F.get_json_object("doc", "$.edge_type").alias("edge_type"),
-        )
-        return GraphSource(nodes, edges)
+        return GraphSource.from_parsed(GraphSource.parse_docs(raw))
 
     def default_edges(self) -> DataFrame:
         """Keep only EdgeType.default edges (collect_plugins.py:45-47)."""

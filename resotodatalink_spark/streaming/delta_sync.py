@@ -7,19 +7,20 @@ reference remote_graph.py:59-91, extended with a ``{"type":
 "deleted", "id": ...}`` tombstone the full-resync reference never
 needed), and every micro-batch advances the published tables by ONE
 generation through ``operators/incremental.sync_delta`` — MERGE by
-key, untouched tables skipped, one atomic publish per batch.
+key, untouched tables skipped, one publish pass per batch.
 
 The reference's closest analog is re-running collect_and_sync on a
 timer (full rebuild per run); here steady-state work is proportional
 to the change rate, not the corpus.
 
 Scale notes: the foreachBatch body is the batch sync_delta — all data
-movement is distributed joins; only the tombstone id list (collector
-metadata, broadcast-sized) is collected to the driver.  With
-``Trigger.AvailableNow`` the stream drains spooled chunks and stops
-(the T3 end-of-stream semantic); ``maxFilesPerTrigger=1`` makes each
-spooled chunk file one generation, which is how the tests replay a
-multi-generation history deterministically.
+movement is distributed joins; only the tombstone id list and
+sync_delta's planning rows (change-sized, like a broadcast) are
+collected to the driver.  With ``Trigger.AvailableNow`` the stream
+drains spooled chunks and stops (the T3 end-of-stream semantic);
+``maxFilesPerTrigger=1`` makes each spooled chunk file one generation,
+which is how the tests replay a multi-generation history
+deterministically.
 """
 
 from __future__ import annotations
@@ -38,16 +39,23 @@ def apply_delta_batch(
     spark: SparkSession, docs: DataFrame, model: Model, dest_dir: str
 ) -> dict[str, dict[str, int]]:
     """One delta generation from a raw doc frame (column ``doc``:
-    NDJSON strings of node/edge/deleted records)."""
-    typed = docs.withColumn("type", F.get_json_object("doc", "$.type"))
-    deleted = [
-        r["id"]
-        for r in typed.filter(F.col("type") == DELETED_TYPE)
-        .select(F.get_json_object("doc", "$.id").alias("id"))
-        .collect()  # tombstones are collector metadata: broadcast-sized
-    ]
-    delta = GraphSource._split(typed.select("doc"))
-    return sync_delta(spark, delta, model, dest_dir, deleted_ids=deleted)
+    NDJSON strings of node/edge/deleted records).  The docs are parsed
+    once: the parsed frame is kept in memory for the tombstone collect
+    and every read ``sync_delta`` makes.  A batch must be change-sized:
+    its parsed docs are cached, and its ids and edges are collected to
+    the driver to plan the generation (see ``sync_delta``)."""
+    parsed = GraphSource.parse_docs(docs).persist()
+    try:
+        deleted = [
+            r["id"]
+            for r in parsed.filter(F.col("type") == DELETED_TYPE)
+            .select("id")
+            .collect()  # tombstones are collector metadata: broadcast-sized
+        ]
+        delta = GraphSource.from_parsed(parsed)
+        return sync_delta(spark, delta, model, dest_dir, deleted_ids=deleted)
+    finally:
+        parsed.unpersist()
 
 
 def stream_delta_sync(
@@ -60,7 +68,7 @@ def stream_delta_sync(
 ) -> None:
     """Drain a directory of spooled delta-NDJSON chunks; each
     micro-batch advances the tables under ``dest_dir`` by one
-    generation and publishes atomically.  Restart-safe: the streaming
+    generation and publishes it in one pass.  Restart-safe: the streaming
     checkpoint remembers which chunks were applied."""
     reader = spark.readStream
     if max_files_per_trigger is not None:

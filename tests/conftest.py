@@ -55,7 +55,7 @@ def pytest_configure(config):
         "slow: long dual-engine/property sweeps skipped by default so the "
         "suite fits the driver's verify window (round-13 verdict item 2: "
         "the 34-58 min full suite truncated the driver's pytest run at "
-        "~88%%).  Run them with SPARK_GRAFT_FULL_TESTS=1.",
+        "~88%).  Run them with SPARK_GRAFT_FULL_TESTS=1.",
     )
 
 

@@ -1,0 +1,322 @@
+"""The planned delta merge: Spark jobs per generation, untouched tables
+left unread, equivalence with a full resync over several generations,
+file counts held, a model that gained a property, the node index a
+destination gets on its first delta, a full resync without an index
+between deltas, and a delta replayed after a crash during its publish."""
+
+from __future__ import annotations
+
+import os
+
+import pytest
+
+from resotodatalink_spark.model.kinds import Kind, Model, Property
+from resotodatalink_spark.operators import incremental
+from resotodatalink_spark.operators.incremental import sync_delta
+from resotodatalink_spark.operators.sync import collect_to_files
+from resotodatalink_spark.sinks.files import NODE_INDEX, read_table, swap_staging
+from resotodatalink_spark.sources.graph import GraphSource
+from tests.fixtures import carz_ancestors, example_docs, example_model
+
+# Spark jobs one volume-only generation runs on the fixture graph: the
+# planning collect and the broadcast of its ids, then a broadcast of the
+# swept ids and a write each for the volume table and the node index.
+JOBS_PER_VOLUME_DELTA = 6
+
+
+def _rows(spark, dest, name):
+    if not os.path.isdir(os.path.join(dest, name)):
+        return []  # a table a full sync would not publish holds no rows
+    return sorted(tuple(r) for r in read_table(spark, dest, name).collect())
+
+
+def _tables(dest):
+    return {e for e in os.listdir(dest) if not e.endswith(("__staging", "__old"))}
+
+
+def _data_files(dest, name):
+    return [f for f in os.listdir(os.path.join(dest, name)) if f.endswith(".parquet")]
+
+
+def _mtimes(dest, name):
+    d = os.path.join(dest, name)
+    return {f: os.path.getmtime(os.path.join(d, f)) for f in os.listdir(d)}
+
+
+def _inst(iid, cores):
+    return {
+        "type": "node", "id": iid,
+        "reported": {"kind": "some_instance", "id": iid, "name": f"n{iid}",
+                     "alias": "a", "description": "d", "cores": cores,
+                     "memory": 1},
+        "ancestors": carz_ancestors(),
+    }
+
+
+def _vol(vid, cap):
+    return {
+        "type": "node", "id": vid,
+        "reported": {"kind": "some_volume", "id": vid, "name": f"n{vid}",
+                     "alias": "a", "description": "d", "capacity": cap},
+        "ancestors": carz_ancestors(),
+    }
+
+
+def _node(nid, kind):
+    return {
+        "type": "node", "id": nid,
+        "reported": {"kind": kind, "id": nid, "name": f"n{nid}"},
+        "ancestors": carz_ancestors(),
+    }
+
+
+def _edge(a, b):
+    return {"type": "edge", "from": a, "to": b, "edge_type": "default"}
+
+
+def _assert_full_sync_of(spark, dest, docs, ref, skip=()):
+    """Every table under ``dest`` equals a fresh indexed full sync of
+    ``docs`` written to ``ref``."""
+    collect_to_files(
+        spark, GraphSource.from_docs(spark, docs), example_model(), ref,
+        node_index=True,
+    )
+    for t in sorted((_tables(dest) | _tables(ref)) - set(skip)):
+        assert _rows(spark, dest, t) == _rows(spark, ref, t), t
+
+
+def test_volume_delta_job_count_and_untouched_tables(spark, tmp_path):
+    """One generation that changes a volume runs a pinned number of
+    Spark jobs, and the instance table, outside the affected set, is
+    neither read nor rewritten."""
+    dest = str(tmp_path)
+    collect_to_files(
+        spark, GraphSource.from_docs(spark, example_docs()), example_model(),
+        dest, node_index=True,
+    )
+    before = _mtimes(dest, "some_instance")
+    sc = spark.sparkContext
+    group = f"delta-{tmp_path.name}"
+    sc.setJobGroup(group, "one volume-only delta generation")
+    try:
+        stats = sync_delta(
+            spark, GraphSource.from_docs(spark, [_vol("v-123", 99)]),
+            example_model(), dest,
+        )
+    finally:
+        sc.setJobGroup("tests", "tests")
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= JOBS_PER_VOLUME_DELTA, f"{jobs} Spark jobs for one generation"
+    assert stats == {
+        "some_instance": {"upserted": 0, "removed": 0},
+        "some_volume": {"upserted": 1, "removed": 1},
+        "link_some_instance_some_volume": {"upserted": 0, "removed": 0},
+    }
+    assert _mtimes(dest, "some_instance") == before
+    assert _rows(spark, dest, "some_volume")[0][1] == 99
+
+
+def test_three_generations_equal_full_resync(spark, tmp_path):
+    """Three generations on an indexed destination: kind changes, a
+    tombstone with inbound links, an edge to an unchanged node, and a
+    changed node whose edges all vanish.  After each one every table
+    equals a fresh full sync of the graph, and no table holds more data
+    files than the base publish wrote."""
+    nodes = {
+        **{f"i-{k}": _inst(f"i-{k}", 1) for k in (1, 2, 3)},
+        **{f"v-{k}": _vol(f"v-{k}", 10) for k in (1, 2, 3)},
+    }
+    edges = {("i-1", "v-1"), ("i-1", "v-2"), ("i-2", "v-2"), ("i-3", "v-3")}
+
+    def graph():
+        return list(nodes.values()) + [_edge(a, b) for a, b in sorted(edges)]
+
+    def shipped(*ids):
+        return [nodes[i] for i in ids] + [
+            _edge(a, b) for a, b in sorted(edges) if a in ids
+        ]
+
+    def gen1():
+        # v-3 becomes an instance; its predecessor i-3 is re-shipped, as
+        # it owns the link that now points at an instance.  i-2 links to
+        # v-1, which the delta does not carry.
+        nodes["v-3"] = _inst("v-3", 5)
+        nodes["i-2"] = _inst("i-2", 2)
+        edges.add(("i-2", "v-1"))
+        return shipped("v-3", "i-3", "i-2"), []
+
+    def gen2():
+        # v-2 dies with two inbound links; i-3 loses its only edge
+        del nodes["v-2"]
+        edges.difference_update({("i-1", "v-2"), ("i-2", "v-2"), ("i-3", "v-3")})
+        nodes["i-3"] = _inst("i-3", 3)
+        return shipped("i-3"), ["v-2"]
+
+    def gen3():
+        # i-2 becomes a volume that keeps its edge; a new instance
+        # links to v-1; i-1 dies
+        nodes["i-2"] = _vol("i-2", 20)
+        nodes["i-4"] = _inst("i-4", 4)
+        edges.add(("i-4", "v-1"))
+        del nodes["i-1"]
+        edges.discard(("i-1", "v-1"))
+        return shipped("i-2", "i-4"), ["i-1"]
+
+    dest = str(tmp_path / "inc")
+    collect_to_files(
+        spark, GraphSource.from_docs(spark, graph()), example_model(), dest,
+        node_index=True,
+    )
+    base_files = {t: len(_data_files(dest, t)) for t in _tables(dest)}
+    for step, make in enumerate((gen1, gen2, gen3), 1):
+        delta, deleted = make()
+        sync_delta(
+            spark, GraphSource.from_docs(spark, delta), example_model(), dest,
+            deleted_ids=deleted,
+        )
+        ref = str(tmp_path / f"ref-{step}")
+        collect_to_files(
+            spark, GraphSource.from_docs(spark, graph()), example_model(), ref,
+            node_index=True,
+        )
+        for t in sorted(_tables(dest) | _tables(ref)):
+            assert _rows(spark, dest, t) == _rows(spark, ref, t), (step, t)
+        for t, n in base_files.items():
+            assert len(_data_files(dest, t)) <= n, (step, t)
+
+
+def test_model_gains_a_property_between_generations(spark, tmp_path):
+    """A delta published under a model whose kind gained a property
+    adds the column, in the new model's column order, NULL in the rows
+    the delta did not touch — what a full sync under that model gives."""
+    dest = str(tmp_path / "inc")
+    collect_to_files(
+        spark, GraphSource.from_docs(spark, example_docs()), example_model(),
+        dest,
+    )
+    base = example_model()
+    vol = base.kinds["some_volume"]
+    grown = Model(dict(base.kinds, some_volume=Kind(
+        "some_volume",
+        properties=[*vol.properties, Property("iops", "int32")],
+        bases=vol.bases, aggregate_root=True,
+    )))
+    new_vol = _vol("v-456", 20)
+    new_vol["reported"]["iops"] = 3000
+    stats = sync_delta(
+        spark, GraphSource.from_docs(spark, [new_vol]), grown, dest
+    )
+    assert stats["some_volume"] == {"upserted": 1, "removed": 0}
+
+    ref = str(tmp_path / "ref")
+    collect_to_files(
+        spark, GraphSource.from_docs(spark, example_docs() + [new_vol]),
+        grown, ref,
+    )
+    got = read_table(spark, dest, "some_volume")
+    assert got.columns == read_table(spark, ref, "some_volume").columns
+    assert "iops" in got.columns
+    assert _rows(spark, dest, "some_volume") == _rows(spark, ref, "some_volume")
+
+
+def test_first_delta_builds_the_node_index(spark, tmp_path):
+    """A destination published without a node index gets one on its
+    first delta, published with that generation.  It lists every live
+    node: regions, a kind without a table, are known only from link
+    tables, so the one the delta does not ship keeps a NULL kind.  The
+    region that changes kind still has its old links swept."""
+    dest = str(tmp_path / "inc")
+    base = example_docs() + [
+        _node("r-1", "region"), _node("r-2", "region"),
+        _edge("r-1", "i-123"), _edge("i-123", "r-2"),
+    ]
+    collect_to_files(
+        spark, GraphSource.from_docs(spark, base), example_model(), dest
+    )
+    assert NODE_INDEX not in os.listdir(dest)
+    delta = [_inst("i-9", 2), _node("r-1", "zone"), _edge("r-1", "i-123")]
+    sync_delta(
+        spark, GraphSource.from_docs(spark, delta), example_model(), dest,
+        deleted_ids=["v-123"],
+    )
+    idx = {(r.id, r.kind) for r in read_table(spark, dest, NODE_INDEX).collect()}
+    assert idx == {
+        ("i-123", "some_instance"), ("i-9", "some_instance"),
+        ("r-1", "zone"), ("r-2", None),
+    }
+    final = [d for d in base if d.get("id") not in ("r-1", "v-123")
+             and d.get("from") != "r-1" and d.get("to") != "v-123"] + delta
+    _assert_full_sync_of(
+        spark, dest, final, str(tmp_path / "ref"), skip=[NODE_INDEX]
+    )
+
+
+def test_full_resync_without_index_between_deltas(spark, tmp_path):
+    """An indexed destination takes a delta, then a full resync that
+    publishes no index, then a delta with a kind change and a tombstone
+    of nodes the resync changed.  The resync removes the index it would
+    have left stale, so the second delta plans against a fresh one."""
+    dest = str(tmp_path / "inc")
+
+    def sync(docs, **kw):
+        collect_to_files(
+            spark, GraphSource.from_docs(spark, docs), example_model(), dest,
+            **kw,
+        )
+
+    def delta(docs, deleted=()):
+        sync_delta(
+            spark, GraphSource.from_docs(spark, docs), example_model(), dest,
+            deleted_ids=list(deleted),
+        )
+
+    sync([_inst("i-1", 1), _vol("v-1", 10), _edge("i-1", "v-1")], node_index=True)
+    delta([_inst("i-1", 1), _vol("v-2", 20), _edge("i-1", "v-2")])
+    # v-1 is now an instance and i-5 is new: the old index knows neither
+    sync([
+        _inst("i-1", 1), _inst("v-1", 2), _vol("v-2", 20), _inst("i-5", 5),
+        _edge("i-1", "v-2"), _edge("i-5", "v-2"),
+    ])
+    assert NODE_INDEX not in os.listdir(dest)
+    # nothing else in this delta touches the instance table
+    delta([_vol("v-1", 11)], deleted=["i-5"])
+    final = [_inst("i-1", 1), _vol("v-1", 11), _vol("v-2", 20), _edge("i-1", "v-2")]
+    _assert_full_sync_of(spark, dest, final, str(tmp_path / "ref"))
+
+
+@pytest.mark.parametrize("published", [1, None], ids=["one-table", "all-tables"])
+def test_delta_replayed_after_crash_during_publish(
+    spark, tmp_path, monkeypatch, published
+):
+    """A crash during the publish leaves some tables at the new
+    generation and the node index at the old one; replaying the same
+    delta, as the stream does, completes the generation."""
+    dest = str(tmp_path / "inc")
+    base = [
+        _inst("i-1", 1), _inst("i-2", 2), _vol("v-1", 10), _vol("v-2", 20),
+        _edge("i-1", "v-1"), _edge("i-1", "v-2"), _edge("i-2", "v-2"),
+    ]
+    collect_to_files(
+        spark, GraphSource.from_docs(spark, base), example_model(), dest,
+        node_index=True,
+    )
+    # v-1 becomes an instance; v-2 dies with two inbound links
+    docs = [_inst("v-1", 3), _inst("i-1", 1), _edge("i-1", "v-1")]
+
+    def crash(dest_dir, tables=None, spark=None):
+        swap_staging(dest_dir, tables=sorted(tables)[:published])
+        raise RuntimeError("crash during publish")
+
+    monkeypatch.setattr(incremental, "swap_staging", crash)
+    with pytest.raises(RuntimeError):
+        sync_delta(
+            spark, GraphSource.from_docs(spark, docs), example_model(), dest,
+            deleted_ids=["v-2"],
+        )
+    monkeypatch.undo()
+    sync_delta(
+        spark, GraphSource.from_docs(spark, docs), example_model(), dest,
+        deleted_ids=["v-2"],
+    )
+    final = [_inst("i-1", 1), _inst("i-2", 2), _inst("v-1", 3), _edge("i-1", "v-1")]
+    _assert_full_sync_of(spark, dest, final, str(tmp_path / "ref"))
