@@ -29,7 +29,8 @@ Replaying the same delta (as the stream does after a failed batch)
 then plans against generation N again and completes the generation:
 a table already at N+1 merges to the same rows.
 
-Scale shape — one planning action, then one write per affected table:
+Scale shape — one planning action, then one write per affected table,
+the writes overlapping on up to ``defaultParallelism`` driver threads:
 
 * plan: one collect returns the delta's (id, kind) rows and edges and,
   for every id the delta mentions, its published kind: the ids are
@@ -47,14 +48,16 @@ Scale shape — one planning action, then one write per affected table:
   the changed and deleted ids (no shuffle of the table), unioned with
   its delta rows and written once; ``removed`` is observed during that
   write, not counted by extra jobs.  The write is coalesced to the
-  table's current file count, so a generation never adds files.
+  table's current file count, so a generation never adds files;
+* stage concurrently: each affected table's read, merge and write, and
+  the index's, is one stage function of ``sinks.files.stage_tables``.
+  The publish waits for all of them, so a failed write publishes
+  nothing; planning and the publish passes are unchanged.
 """
 
 from __future__ import annotations
 
 import functools
-import os
-import shutil
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -69,28 +72,33 @@ from resotodatalink_spark.sinks.files import (
     NODE_INDEX,
     OLD_SUFFIX,
     STAGING_SUFFIX,
+    _Fs,
+    _fs,
+    stage_tables,
     swap_staging,
     write_table,
 )
 from resotodatalink_spark.sources.graph import GraphSource
 
 
-def _published_tables(dest_dir: str) -> set[str]:
+def _published_tables(fs: _Fs, dest_dir: str) -> set[str]:
     """Kind and link tables on disk (the underscore-prefixed
-    ``_node_index`` is maintained separately)."""
-    if not os.path.isdir(dest_dir):
+    ``_node_index`` is maintained separately).  ``fs`` is
+    ``sinks.files._fs`` of ``dest_dir``, so a URI destination lists
+    through the Hadoop FileSystem."""
+    if not fs.isdir(dest_dir):
         return set()
     return {
         e
-        for e in os.listdir(dest_dir)
-        if os.path.isdir(os.path.join(dest_dir, e))
+        for e in fs.listdir(dest_dir)
+        if fs.isdir(fs.join(dest_dir, e))
         and not e.endswith((STAGING_SUFFIX, OLD_SUFFIX))
         and not e.startswith("_")
     }
 
 
 def _node_index(
-    spark: SparkSession, model: Model, dest_dir: str, on_disk: set[str]
+    spark: SparkSession, model: Model, fs: _Fs, dest_dir: str, on_disk: set[str]
 ) -> DataFrame:
     """The published (id, kind) index.  A destination published without
     one (``collect_to_files(node_index=False)``) gets it built here from
@@ -103,20 +111,20 @@ def _node_index(
     table's name truncates its kinds, so the kind of a node without a
     table cannot be read back.  Such a node is planned conservatively
     until a delta ships it with its kind."""
-    idx_path = os.path.join(dest_dir, NODE_INDEX)
-    if os.path.isdir(idx_path):
+    idx_path = fs.join(dest_dir, NODE_INDEX)
+    if fs.isdir(idx_path):
         return spark.read.schema("id string, kind string").parquet(idx_path)
     index = _local(spark, id=[], kind=[])
     for kind in model.table_kinds():
         if (name := get_table_name(kind.fqn)) in on_disk:
             index = index.unionByName(
-                spark.read.parquet(os.path.join(dest_dir, name)).select(
+                spark.read.parquet(fs.join(dest_dir, name)).select(
                     F.col("_id").alias("id"), F.lit(kind.fqn).alias("kind")
                 )
             )
     ends = [
         spark.read.schema(link_table_schema())
-        .parquet(os.path.join(dest_dir, name))
+        .parquet(fs.join(dest_dir, name))
         .select(F.explode(F.array("from_id", "to_id")).alias("id"))
         for name in sorted(on_disk)
         if name.startswith("link_")
@@ -248,6 +256,8 @@ def sync_delta(
     rows) for every kind table of the model, link pair of the delta and
     table on disk; tables with both zero are not rewritten.
 
+    Affected tables stage concurrently; feedback reports every table in
+    order, on the caller's thread, once all of them are staged.
     ``delta`` is read once per affected kind table: pass a materialized
     one (``streaming.delta_sync.apply_delta_batch`` does) when its
     source is expensive to re-read.
@@ -260,8 +270,9 @@ def sync_delta(
     of many generations, with ``collect_to_files`` instead."""
     feedback = feedback or NoFeedback()
     deleted = sorted(set(deleted_ids or []))
-    on_disk = _published_tables(dest_dir)
-    index = _node_index(spark, model, dest_dir, on_disk)
+    fs = _fs(dest_dir, spark)
+    on_disk = _published_tables(fs, dest_dir)
+    index = _node_index(spark, model, fs, dest_dir, on_disk)
     kind_tables = {get_table_name(k.fqn): k for k in model.table_kinds()}
 
     # The one planning action: the delta's node kinds and edges, and the
@@ -292,53 +303,57 @@ def sync_delta(
     # no row in its old kind's delta; both still own stale rows.
     swept = _local(spark, id=changed + deleted)
 
-    names = sorted(set(kind_tables) | set(links) | on_disk)
-    stats: dict[str, dict[str, int]] = {}
-    staged: list[str] = []
-    for i, name in enumerate(names, 1):
-        n_up, removed = upserted.get(name, 0), 0
-        if name in affected:
-            dv: DataFrame | None = None
-            if name in kind_tables:
-                dv = flatten_nodes(delta.nodes, model, kind_tables[name])
-            elif name in links:
-                f, t = zip(*links[name])
-                dv = _local(spark, from_id=list(f), to_id=list(t))
-            if name not in on_disk:
-                # brand-new table this generation (e.g. first node of a
-                # kind): change-sized, one file
-                if n_up:
-                    write_table(dv.coalesce(1), dest_dir, name, staging=True)
-                    staged.append(name)
-            else:
-                # A known schema saves the job that infers one from a
-                # file footer.  A kind table reads in the current model's
-                # columns: a property the model gained is NULL in old rows.
-                if name.startswith("link_"):
-                    schema = link_table_schema()
-                    sweeps = [("from_id", swept)] + ([("to_id", gone)] if deleted else [])
-                else:
-                    schema = dv.schema if dv is not None else None
-                    sweeps = [("_id", swept)]
-                reader = spark.read if schema is None else spark.read.schema(schema)
-                existing = reader.parquet(os.path.join(dest_dir, name))
-                merged, before, after = _merge(existing, sweeps, dv)
-                path = write_table(merged, dest_dir, name, staging=True)
-                removed = before.get["n"] - after.get["n"]
-                if n_up or removed:
-                    staged.append(name)
-                else:  # the plan could not rule it out; nothing changed
-                    shutil.rmtree(path)
-        stats[name] = {"upserted": n_up, "removed": removed}
-        feedback.progress_done("sync_delta", i, len(names))
+    def stage(name: str) -> int:
+        """Stage one affected table's merge; returns its removed rows."""
+        dv: DataFrame | None = None
+        if name in kind_tables:
+            dv = flatten_nodes(delta.nodes, model, kind_tables[name])
+        elif name in links:
+            f, t = zip(*links[name])
+            dv = _local(spark, from_id=list(f), to_id=list(t))
+        if name not in on_disk:
+            # brand-new table this generation (e.g. first node of a
+            # kind): change-sized, one file
+            if upserted.get(name):
+                write_table(dv.coalesce(1), dest_dir, name, staging=True)
+            return 0
+        # A known schema saves the job that infers one from a file
+        # footer.  A kind table reads in the current model's columns: a
+        # property the model gained is NULL in old rows.
+        if name.startswith("link_"):
+            schema = link_table_schema()
+            sweeps = [("from_id", swept)] + ([("to_id", gone)] if deleted else [])
+        else:
+            schema = dv.schema if dv is not None else None
+            sweeps = [("_id", swept)]
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        existing = reader.parquet(fs.join(dest_dir, name))
+        merged, before, after = _merge(existing, sweeps, dv)
+        path = write_table(merged, dest_dir, name, staging=True)
+        removed = before.get["n"] - after.get["n"]
+        if not (upserted.get(name) or removed):
+            fs.rmtree(path)  # the plan could not rule it out; nothing changed
+        return removed
 
-    # _node_index advances by the same merge algebra as the kind tables
-    merged, _, _ = _merge(index, [("id", swept)], nodes)
-    write_table(merged, dest_dir, NODE_INDEX, staging=True)
+    def stage_index() -> None:
+        # _node_index advances by the same merge algebra as the kind tables
+        merged, _, _ = _merge(index, [("id", swept)], nodes)
+        write_table(merged, dest_dir, NODE_INDEX, staging=True)
+
+    names = sorted(set(kind_tables) | set(links) | on_disk)
+    work = [n for n in names if n in affected]
+    *counts, _ = stage_tables(spark, [functools.partial(stage, n) for n in work] + [stage_index])
+    removed = dict(zip(work, counts))
+    staged = [n for n in work if upserted.get(n) or removed[n]]
+
+    stats: dict[str, dict[str, int]] = {}
+    for i, name in enumerate(names, 1):
+        stats[name] = {"upserted": upserted.get(name, 0), "removed": removed.get(name, 0)}
+        feedback.progress_done("sync_delta", i, len(names))
 
     # publish after every table of the generation is staged; the index
     # last, so a crash during the tables' pass leaves it at generation N
     # and a replay of this delta plans against N again
-    swap_staging(dest_dir, tables=staged)
-    swap_staging(dest_dir, tables=[NODE_INDEX])
+    swap_staging(dest_dir, tables=staged, spark=spark)
+    swap_staging(dest_dir, tables=[NODE_INDEX], spark=spark)
     return stats

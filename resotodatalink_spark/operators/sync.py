@@ -6,7 +6,9 @@ The reference's lifecycle is collect -> model -> batch-stream ->
 DDL -> chunked inserts -> swap, all on a dedicated IO thread.  On
 Spark the same lifecycle is: graph DataFrames -> model-compiled
 flatten -> distributed write to staging -> staged swap; Catalyst and
-the cluster scheduler replace the hand-rolled batching and threading.
+the cluster scheduler replace the hand-rolled batching, and the tables'
+staged writes overlap on a bounded driver pool instead of queueing on
+one IO thread.
 
 Progress feedback mirrors the reference's ``CoreFeedback.progress_done``
 threading (collect_plugins.py:34, 95-96, 196-212) as a plain callback
@@ -16,6 +18,7 @@ cluster's business, not the driver loop's.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Iterable
 from typing import Callable, Protocol
 
@@ -23,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from resotodatalink_spark.model.kinds import Model
 from resotodatalink_spark.operators.flatten import sync_views
-from resotodatalink_spark.sinks.files import swap_staging, write_table
+from resotodatalink_spark.sinks.files import stage_tables, swap_staging, write_table
 from resotodatalink_spark.sources.graph import GraphSource
 
 
@@ -64,8 +67,11 @@ def collect_to_files(
     node_index: bool = False,
 ) -> list[str]:
     """Graph -> staged table files -> one publish pass (collect_to_file
-    + swap_temp_tables semantics).  Every table is staged before any is
-    published, and ``swap_staging`` then renames one table at a time:
+    + swap_temp_tables semantics).  The tables stage concurrently, their
+    writes overlapping on up to ``defaultParallelism`` driver threads
+    (``stage_tables``); a failed write publishes nothing.  Every table
+    is staged before any is published, and ``swap_staging`` then renames
+    one table at a time:
     a crash leaves each table old or new, never missing, but the pass
     is not gap-free, and a reader listing tables during it can see some
     tables of the old generation and some of the new.
@@ -88,8 +94,14 @@ def collect_to_files(
     else:
         drop_table(dest_dir, NODE_INDEX, spark)
     names = sorted(views)
-    for i, name in enumerate(names, 1):
-        write_table(views[name], dest_dir, name, fmt=fmt, staging=True)
+    stage_tables(
+        spark,
+        [
+            functools.partial(write_table, views[name], dest_dir, name, fmt=fmt, staging=True)
+            for name in names
+        ],
+    )
+    for i in range(1, len(names) + 1):
         feedback.progress_done("write_tables", i, len(names))
     if swap:
         published = swap_staging(dest_dir, tables=tables)

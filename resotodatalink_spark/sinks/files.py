@@ -28,11 +28,14 @@ from __future__ import annotations
 
 import os
 import shutil
+from concurrent.futures import ThreadPoolExecutor
+from typing import Callable, NamedTuple, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.utils import AnalysisException
+from pyspark.util import inheritable_thread_target
 
 STAGING_SUFFIX = "__staging"
 
@@ -50,7 +53,7 @@ def _is_uri(path: str) -> bool:
 
 
 class _HadoopFs:
-    """Minimal list/exists/rename/rmtree over the JVM Hadoop
+    """Minimal list/isdir/exists/rename/rmtree over the JVM Hadoop
     FileSystem — the routing layer that makes the staged-publish
     sequence work on any scheme Spark can write to (K8, reference
     writer.py:187-219)."""
@@ -66,6 +69,10 @@ class _HadoopFs:
         if not self._fs.exists(p):
             return []
         return [s.getPath().getName() for s in self._fs.listStatus(p)]
+
+    def isdir(self, p: str) -> bool:
+        path = self._Path(p)
+        return bool(self._fs.exists(path) and self._fs.getFileStatus(path).isDirectory())
 
     def exists(self, p: str) -> bool:
         return bool(self._fs.exists(self._Path(p)))
@@ -144,28 +151,38 @@ def _write_schema_marker(df: DataFrame, table_path: str) -> None:
 OLD_SUFFIX = "__old"
 
 
-def _fs(dest_dir: str, spark: SparkSession | None):
-    """(listdir, exists, rename, rmtree, join) for ``dest_dir``: ``os``
-    primitives for a plain local path, the Hadoop FileSystem of the
-    active session for a URI."""
+class _Fs(NamedTuple):
+    listdir: Callable[[str], list[str]]
+    isdir: Callable[[str], bool]
+    exists: Callable[[str], bool]
+    rename: Callable[[str, str], None]
+    rmtree: Callable[[str], None]
+    join: Callable[..., str]
+
+
+def _fs(dest_dir: str, spark: SparkSession | None) -> _Fs:
+    """The file primitives for ``dest_dir``: ``os`` for a plain local
+    path, the Hadoop FileSystem of the active session for a URI."""
     if _is_uri(dest_dir):
         spark = spark or SparkSession.getActiveSession()
         if spark is None:
             raise ValueError("URI destination needs an active SparkSession")
         fs = _HadoopFs(spark, dest_dir)
         join = lambda *parts: "/".join(p.rstrip("/") for p in parts)  # noqa: E731
-        return fs.listdir, fs.exists, fs.rename, fs.rmtree, join
-    return os.listdir, os.path.exists, os.rename, shutil.rmtree, os.path.join
+        return _Fs(fs.listdir, fs.isdir, fs.exists, fs.rename, fs.rmtree, join)
+    return _Fs(
+        os.listdir, os.path.isdir, os.path.exists, os.rename, shutil.rmtree, os.path.join
+    )
 
 
 def drop_table(
     dest_dir: str, table_name: str, spark: SparkSession | None = None
 ) -> None:
     """Delete a published table and any staged copy of it, if present."""
-    _, exists, _, rmtree, join = _fs(dest_dir, spark)
+    fs = _fs(dest_dir, spark)
     for name in (table_name, table_name + STAGING_SUFFIX):
-        if exists(path := join(dest_dir, name)):
-            rmtree(path)
+        if fs.exists(path := fs.join(dest_dir, name)):
+            fs.rmtree(path)
 
 
 def swap_staging(
@@ -192,26 +209,56 @@ def swap_staging(
     publish to named tables; single-table writers (upsert/delete) pass
     it so a leftover staging dir from an unrelated failed job is never
     accidentally published."""
-    listdir, exists, rename, rmtree, join = _fs(dest_dir, spark)
+    fs = _fs(dest_dir, spark)
     published = []
-    for entry in sorted(listdir(dest_dir)):
+    for entry in sorted(fs.listdir(dest_dir)):
         if not entry.endswith(STAGING_SUFFIX):
             continue
         final = entry[: -len(STAGING_SUFFIX)]
         if tables is not None and final not in tables:
             continue
-        final_path = join(dest_dir, final)
+        final_path = fs.join(dest_dir, final)
         old_path = final_path + OLD_SUFFIX
-        if exists(old_path):  # leftover from a prior crash
-            rmtree(old_path)
-        had_old = exists(final_path)
+        if fs.exists(old_path):  # leftover from a prior crash
+            fs.rmtree(old_path)
+        had_old = fs.exists(final_path)
         if had_old:
-            rename(final_path, old_path)
-        rename(join(dest_dir, entry), final_path)
+            fs.rename(final_path, old_path)
+        fs.rename(fs.join(dest_dir, entry), final_path)
         if had_old:
-            rmtree(old_path)
+            fs.rmtree(old_path)
         published.append(final)
     return published
+
+
+R = TypeVar("R")
+
+
+def stage_tables(spark: SparkSession, stages: list[Callable[[], R]]) -> list[R]:
+    """Run one stage function per table (its staged write, and whatever
+    that write needs) on ``min(len(stages), defaultParallelism)`` driver
+    threads, and return their results in ``stages`` order.  A
+    generation's tables do not depend on each other, so their small
+    Spark jobs overlap instead of queueing behind one another.
+
+    Each function runs with the caller's job group, local properties
+    and tags, captured separately per function so no two threads share
+    them.  If any function fails, every submitted one still finishes
+    before the first failure in ``stages`` order is raised, so no job
+    of the call is left running and a caller that publishes only after
+    this returns publishes nothing."""
+    if not stages:
+        return []
+
+    def inheriting(fn: Callable[[], R]) -> Callable[[], R]:
+        carry = inheritable_thread_target(spark)  # captures them now
+        # with pinned-thread mode off there is no per-thread state to carry
+        return carry(fn) if callable(carry) else fn
+
+    width = min(len(stages), spark.sparkContext.defaultParallelism)
+    with ThreadPoolExecutor(max_workers=width, thread_name_prefix="stage") as pool:
+        futures = [pool.submit(inheriting(fn)) for fn in stages]
+    return [f.result() for f in futures]
 
 
 def read_table(

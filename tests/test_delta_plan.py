@@ -2,16 +2,20 @@
 left unread, equivalence with a full resync over several generations,
 file counts held, a model that gained a property, the node index a
 destination gets on its first delta, a full resync without an index
-between deltas, and a delta replayed after a crash during its publish."""
+between deltas, a delta replayed after a crash during its publish, a
+`file:` URI destination, and the concurrently staged writes: the
+caller's job group on every job, and a failed write that publishes
+nothing."""
 
 from __future__ import annotations
 
 import os
+import warnings
 
 import pytest
 
 from resotodatalink_spark.model.kinds import Kind, Model, Property
-from resotodatalink_spark.operators import incremental
+from resotodatalink_spark.operators import incremental, sync
 from resotodatalink_spark.operators.incremental import sync_delta
 from resotodatalink_spark.operators.sync import collect_to_files
 from resotodatalink_spark.sinks.files import NODE_INDEX, read_table, swap_staging
@@ -320,3 +324,133 @@ def test_delta_replayed_after_crash_during_publish(
     )
     final = [_inst("i-1", 1), _inst("i-2", 2), _inst("v-1", 3), _edge("i-1", "v-1")]
     _assert_full_sync_of(spark, dest, final, str(tmp_path / "ref"))
+
+
+def test_uri_destination_generations_equal_full_resync(spark, tmp_path):
+    """A destination addressed as a `file:` URI lists, reads and sweeps
+    its published tables and node index through the Hadoop FileSystem:
+    after a new node, a kind change and a tombstone, every table still
+    equals a fresh full sync, not the delta rows alone."""
+    dest = str(tmp_path / "inc")
+    uri = "file://" + dest
+    nodes = {d["id"]: d for d in example_docs() if d["type"] == "node"}
+    edges = {("i-123", "v-123")}
+
+    def graph():
+        return list(nodes.values()) + [_edge(a, b) for a, b in sorted(edges)]
+
+    collect_to_files(
+        spark, GraphSource.from_docs(spark, graph()), example_model(), uri,
+        node_index=True,
+    )
+
+    def gen1():
+        nodes["v-new"] = _vol("v-new", 5)
+        return [nodes["v-new"]], []
+
+    def gen2():
+        # v-new becomes an instance that links to v-123
+        nodes["v-new"] = _inst("v-new", 2)
+        edges.add(("v-new", "v-123"))
+        return [nodes["v-new"], _edge("v-new", "v-123")], []
+
+    def gen3():
+        # i-123 dies with its outbound link
+        del nodes["i-123"]
+        edges.discard(("i-123", "v-123"))
+        return [], ["i-123"]
+
+    for step, make in enumerate((gen1, gen2, gen3), 1):
+        docs, deleted = make()
+        sync_delta(
+            spark, GraphSource.from_docs(spark, docs), example_model(), uri,
+            deleted_ids=deleted,
+        )
+        _assert_full_sync_of(spark, dest, graph(), str(tmp_path / f"ref-{step}"))
+
+
+def _job_ids(sc, group):
+    return set(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _marker_job(spark, group):
+    """The id of one job run in ``group``: job ids are sequential, so
+    two markers bracket every job submitted between them."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "marker")
+    spark.range(1).collect()
+    return max(_job_ids(sc, group))
+
+
+def test_staged_jobs_keep_the_callers_job_group(spark, tmp_path):
+    """Every Spark job that ``collect_to_files`` and ``sync_delta``
+    submit from their staging threads carries the caller's job group,
+    and no warning about uninherited tags is raised."""
+    sc = spark.sparkContext
+    dest = str(tmp_path)
+    group = f"caller-{tmp_path.name}"
+    calls = [
+        lambda: collect_to_files(
+            spark, GraphSource.from_docs(spark, example_docs()),
+            example_model(), dest, node_index=True,
+        ),
+        lambda: sync_delta(
+            spark,
+            GraphSource.from_docs(
+                spark, [_inst("i-123", 5), _vol("v-9", 1), _edge("i-123", "v-9")]
+            ),
+            example_model(), dest, deleted_ids=["v-123"],
+        ),
+    ]
+    try:
+        for n, call in enumerate(calls):
+            lo = _marker_job(spark, f"{group}-before-{n}")
+            known = _job_ids(sc, group)
+            sc.setJobGroup(group, "the caller's group")
+            with warnings.catch_warnings(record=True) as caught:
+                warnings.simplefilter("always")
+                call()
+            hi = _marker_job(spark, f"{group}-after-{n}")
+            assert not [w for w in caught if "will not be inherited" in str(w.message)]
+            submitted = set(range(lo + 1, hi))
+            assert submitted, n
+            assert _job_ids(sc, group) - known == submitted, n
+    finally:
+        sc.setJobGroup("tests", "tests")
+
+
+@pytest.mark.parametrize("call", ["collect_to_files", "sync_delta"])
+def test_failed_staged_write_publishes_nothing(spark, tmp_path, monkeypatch, call):
+    """One table's staged write fails while the others are in flight:
+    the call re-raises that error once every other write has finished,
+    and every published table and the node index keep their files."""
+    dest = str(tmp_path)
+    collect_to_files(
+        spark, GraphSource.from_docs(spark, example_docs()), example_model(),
+        dest, node_index=True,
+    )
+    before = {t: _mtimes(dest, t) for t in _tables(dest)}
+    assert NODE_INDEX in before
+    module = sync if call == "collect_to_files" else incremental
+    real = module.write_table
+
+    def failing(df, dest_dir, name, **kw):
+        if name == "link_some_instance_some_volume":
+            raise OSError("disk full")
+        return real(df, dest_dir, name, **kw)
+
+    monkeypatch.setattr(module, "write_table", failing)
+    docs = [_inst("i-123", 5), _vol("v-123", 99), _inst("i-9", 1),
+            _edge("i-123", "v-123"), _edge("i-9", "v-123")]
+    with pytest.raises(OSError, match="disk full"):
+        if call == "collect_to_files":
+            collect_to_files(
+                spark, GraphSource.from_docs(spark, docs), example_model(),
+                dest, node_index=True,
+            )
+        else:
+            sync_delta(
+                spark, GraphSource.from_docs(spark, docs), example_model(), dest
+            )
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
+    assert {t: _mtimes(dest, t) for t in _tables(dest)} == before

@@ -4,6 +4,9 @@ collect_plugins.py:103-152, 220-228)."""
 
 from __future__ import annotations
 
+import threading
+
+from resotodatalink_spark.operators.incremental import sync_delta
 from resotodatalink_spark.operators.sql import execute_sql, stream_rows
 from resotodatalink_spark.operators.sync import (
     collect_to_files,
@@ -28,22 +31,40 @@ def test_collect_to_views_with_feedback(spark):
 
 
 def test_collect_to_files_swaps_atomically(spark, tmp_path):
+    """Progress arrives on the caller's thread, one call per table in
+    table order, although the tables stage concurrently; the same holds
+    for a delta generation."""
     dest = str(tmp_path)
-    steps = []
+    events = []
+
+    def record(step, current, total):
+        events.append((step, current, total, threading.get_ident()))
+
     published = collect_to_files(
         spark,
         GraphSource.from_docs(spark, example_docs()),
         example_model(),
         dest,
-        feedback=on_progress(lambda s, c, t: steps.append(s)),
+        feedback=on_progress(record),
     )
     assert sorted(published) == [
         "link_some_instance_some_volume",
         "some_instance",
         "some_volume",
     ]
-    assert steps[-1] == "swap"
+    me = threading.get_ident()
+    assert events == [("write_tables", i, 3, me) for i in (1, 2, 3)] + [
+        ("swap", 3, 3, me)
+    ]
     assert read_table(spark, dest, "some_volume").count() == 1
+
+    events.clear()
+    delta = [d for d in example_docs() if d.get("id") != "v-123"]
+    sync_delta(
+        spark, GraphSource.from_docs(spark, delta), example_model(), dest,
+        feedback=on_progress(record),
+    )
+    assert events == [("sync_delta", i, 3, me) for i in (1, 2, 3)]
 
 
 def test_execute_sql_bind_vars_and_row_stream(spark):
