@@ -97,47 +97,20 @@ def _published_tables(fs: _Fs, dest_dir: str) -> set[str]:
     }
 
 
-def _node_index(
-    spark: SparkSession, model: Model, fs: _Fs, dest_dir: str, on_disk: set[str]
-) -> DataFrame:
-    """The published (id, kind) index.  A destination published without
-    one (``collect_to_files(node_index=False)``) gets it built here from
-    its tables, once: ``sync_delta`` publishes the result with the
-    generation, so every later delta reads the index alone.
-
-    The plan trusts the index to list every node that has a row in any
-    table.  A built index takes each kind table's ids with that kind,
-    and every other id found in a link table with a NULL kind: a link
-    table's name truncates its kinds, so the kind of a node without a
-    table cannot be read back.  Such a node is planned conservatively
-    until a delta ships it with its kind."""
+def _node_index(spark: SparkSession, fs: _Fs, dest_dir: str, on_disk: set[str]) -> DataFrame:
+    """The published (id, kind) index, which lists every node of the
+    generation ``collect_to_files`` or the last delta published.  A
+    destination with no tables starts from an empty index (generation
+    0); one with tables but no index cannot be planned and is rejected
+    before anything is staged."""
     idx_path = fs.join(dest_dir, NODE_INDEX)
     if fs.isdir(idx_path):
         return spark.read.schema("id string, kind string").parquet(idx_path)
-    index = _local(spark, id=[], kind=[])
-    for kind in model.table_kinds():
-        if (name := get_table_name(kind.fqn)) in on_disk:
-            index = index.unionByName(
-                spark.read.parquet(fs.join(dest_dir, name)).select(
-                    F.col("_id").alias("id"), F.lit(kind.fqn).alias("kind")
-                )
-            )
-    ends = [
-        spark.read.schema(link_table_schema())
-        .parquet(fs.join(dest_dir, name))
-        .select(F.explode(F.array("from_id", "to_id")).alias("id"))
-        for name in sorted(on_disk)
-        if name.startswith("link_")
-    ]
-    if not ends:
-        return index
-    others = (
-        functools.reduce(DataFrame.unionByName, ends)
-        .distinct()
-        .join(index.select("id"), "id", "left_anti")
-        .select("id", F.lit(None).cast("string").alias("kind"))
-    )
-    return index.unionByName(others)
+    if on_disk:
+        raise ValueError(
+            f"{dest_dir} holds tables but no {NODE_INDEX}: republish it with collect_to_files"
+        )
+    return _local(spark, id=[], kind=[])
 
 
 def _merge(
@@ -208,12 +181,9 @@ def _plan(
     upserted.update((name, len(r)) for name, r in links.items())
 
     # kinds whose tables may hold rows a changed (owners) or deleted
-    # (gone) id owns; a changed id's new kind is an owner too, which
-    # covers nodes of kinds without a table, absent from a built index
-    owners = {old_kind[i] for i in new_kind if i in old_kind} | set(new_kind.values())
-    gone = {old_kind[i] for i in deleted if i in old_kind}
-    owners.discard(None)
-    gone.discard(None)
+    # (gone) id owns; a node without a kind has no rows
+    owners = {old_kind.get(i) for i in new_kind} - {None}
+    gone = {old_kind.get(i) for i in deleted} - {None}
 
     def link_tables(kinds: set[str], end: str) -> set[str]:
         # link names truncate kind names, so a prefix may match a few
@@ -231,12 +201,6 @@ def _plan(
 
     affected = set(upserted) | {get_table_name(k) for k in owners | gone}
     affected |= link_tables(owners | gone, "from") | link_tables(gone, "to")
-    # an id whose published kind is unknown (NULL in a built index, or
-    # a deleted id the index does not list) may sit in any link table
-    unknown = {i for i, k in old_kind.items() if k is None}
-    unknown |= {i for i in deleted if i not in old_kind}
-    if unknown & (set(new_kind) | set(deleted)):
-        affected |= {t for t in on_disk if t.startswith("link_")}
     return upserted, links, affected, list(new_kind)
 
 
@@ -256,6 +220,12 @@ def sync_delta(
     rows) for every kind table of the model, link pair of the delta and
     table on disk; tables with both zero are not rewritten.
 
+    The generation is planned against the published ``_node_index``,
+    which ``collect_to_files`` and every delta publish with their
+    tables.  An empty destination starts from an empty index; one that
+    holds tables but no index raises ``ValueError`` before anything is
+    staged (republish it with ``collect_to_files``).
+
     Affected tables stage concurrently; feedback reports every table in
     order, on the caller's thread, once all of them are staged.
     ``delta`` is read once per affected kind table: pass a materialized
@@ -272,7 +242,7 @@ def sync_delta(
     deleted = sorted(set(deleted_ids or []))
     fs = _fs(dest_dir, spark)
     on_disk = _published_tables(fs, dest_dir)
-    index = _node_index(spark, model, fs, dest_dir, on_disk)
+    index = _node_index(spark, fs, dest_dir, on_disk)
     kind_tables = {get_table_name(k.fqn): k for k in model.table_kinds()}
 
     # The one planning action: the delta's node kinds and edges, and the

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from resotodatalink_spark.model.kinds import Model
 from resotodatalink_spark.operators.flatten import sync_views
-from resotodatalink_spark.sinks.files import stage_tables, swap_staging, write_table
+from resotodatalink_spark.sinks.files import NODE_INDEX, stage_tables, swap_staging, write_table
 from resotodatalink_spark.sources.graph import GraphSource
 
 
@@ -64,7 +64,7 @@ def collect_to_files(
     fmt: str = "parquet",
     swap: bool = True,
     feedback: Feedback | None = None,
-    node_index: bool = False,
+    node_index: bool = True,
 ) -> list[str]:
     """Graph -> staged table files -> one publish pass (collect_to_file
     + swap_temp_tables semantics).  The tables stage concurrently, their
@@ -76,40 +76,34 @@ def collect_to_files(
     is not gap-free, and a reader listing tables during it can see some
     tables of the old generation and some of the new.
 
-    ``node_index`` additionally publishes the narrow ``_node_index``
-    (id, kind) table, against which ``sync_delta`` plans every delta
-    (and which it maintains); it is published after every other table,
-    so a crash during the pass never leaves it newer than a table.
-    Without ``node_index`` a published index would go stale under the
-    new tables, so it is deleted, and the next delta builds a new one
-    from the tables and publishes it with that generation."""
-    from resotodatalink_spark.sinks.files import NODE_INDEX, drop_table
-
+    Every generation carries the narrow ``_node_index`` (id, kind)
+    table, against which ``sync_delta`` plans each delta.  It is staged
+    with the tables, as parquet whatever ``fmt`` is (only ``sync_delta``
+    reads it), and published by a second pass after them, so a crash
+    during the publish never leaves it newer than a table.  The return
+    value and the feedback list only the kind and link tables, the SQL
+    surface.  ``swap`` and ``node_index`` select nothing: they accept
+    ``True`` only, so callers that pass it keep working."""
+    if not (swap and node_index):
+        raise ValueError("collect_to_files always publishes its tables and _node_index")
     feedback = feedback or NoFeedback()
     views = sync_views(spark, source, model)
     tables = sorted(views)
-    if node_index:
-        views = dict(views)
-        views[NODE_INDEX] = source.nodes.select("id", "kind")
-    else:
-        drop_table(dest_dir, NODE_INDEX, spark)
-    names = sorted(views)
+    index = source.nodes.select("id", "kind")
     stage_tables(
         spark,
         [
             functools.partial(write_table, views[name], dest_dir, name, fmt=fmt, staging=True)
-            for name in names
-        ],
+            for name in tables
+        ]
+        + [functools.partial(write_table, index, dest_dir, NODE_INDEX, staging=True)],
     )
-    for i in range(1, len(names) + 1):
-        feedback.progress_done("write_tables", i, len(names))
-    if swap:
-        published = swap_staging(dest_dir, tables=tables)
-        if node_index:
-            published += swap_staging(dest_dir, tables=[NODE_INDEX])
-        feedback.progress_done("swap", len(published), len(published))
-        return published
-    return names
+    for i in range(1, len(tables) + 1):
+        feedback.progress_done("write_tables", i, len(tables))
+    published = swap_staging(dest_dir, tables=tables)
+    swap_staging(dest_dir, tables=[NODE_INDEX])
+    feedback.progress_done("swap", len(published), len(published))
+    return published
 
 
 def collect_sql(
@@ -244,9 +238,7 @@ def collect_plugin(
     collector: CollectorPlugin,
     dest_dir: str,
     fmt: str = "parquet",
-    swap: bool = True,
     feedback: Feedback | None = None,
-    node_index: bool = False,
 ) -> tuple[str, int, int]:
     """Invoke a collector plugin end-to-end — the U4 driver loop, the
     Spark analog of reference ``collect_to_file``/``collect_sql``
@@ -285,9 +277,7 @@ def collect_plugin(
         model,
         dest_dir,
         fmt=fmt,
-        swap=swap,
         feedback=_SyncDb(),
-        node_index=node_index,
     )
     feedback.progress_done(collector.cloud, 1, 1)
     return collector.cloud, n_nodes, n_edges

@@ -39,11 +39,11 @@ from pyspark.util import inheritable_thread_target
 
 STAGING_SUFFIX = "__staging"
 
-# (id, kind) index table maintained alongside the kind tables (leading
-# underscore keeps it out of the kind/link namespace).  Every delta
-# generation is planned against it — see operators/incremental.py,
-# which builds it on a destination's first delta when a full sync did
-# not publish it.  It is always published after the tables it
+# (id, kind) index table published with every generation (leading
+# underscore keeps it out of the kind/link namespace), always as
+# parquet.  Every delta generation is planned against it — see
+# operators/incremental.py, which rejects a destination that holds
+# tables but no index.  It is always published after the tables it
 # describes.
 NODE_INDEX = "_node_index"
 
@@ -175,16 +175,6 @@ def _fs(dest_dir: str, spark: SparkSession | None) -> _Fs:
     )
 
 
-def drop_table(
-    dest_dir: str, table_name: str, spark: SparkSession | None = None
-) -> None:
-    """Delete a published table and any staged copy of it, if present."""
-    fs = _fs(dest_dir, spark)
-    for name in (table_name, table_name + STAGING_SUFFIX):
-        if fs.exists(path := fs.join(dest_dir, name)):
-            fs.rmtree(path)
-
-
 def swap_staging(
     dest_dir: str,
     tables: list[str] | None = None,
@@ -206,9 +196,8 @@ def swap_staging(
     concurrent reader fails.  If true no-gap reads are required,
     publish through a symlink flipped atomically (or a metastore
     pointer) instead.  ``tables`` scopes the
-    publish to named tables; single-table writers (upsert/delete) pass
-    it so a leftover staging dir from an unrelated failed job is never
-    accidentally published."""
+    publish to named tables, so a leftover staging dir from an
+    unrelated failed job is never accidentally published."""
     fs = _fs(dest_dir, spark)
     published = []
     for entry in sorted(fs.listdir(dest_dir)):

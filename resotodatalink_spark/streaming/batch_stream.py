@@ -85,9 +85,9 @@ def run_keyed_batches(
     (collect_plugins.py:203-212).
 
     COMPAT SHIM — not the scale path.  This launches one filtered job
-    per (key, chunk): O(keys x chunks) driver-scheduled jobs.  At scale
-    use ``stream_sync_to_tables`` below, which partitions each
-    micro-batch by key and appends with zero driver loops.
+    per (key, chunk): O(keys x chunks) driver-scheduled jobs.  A sink
+    that needs no per-chunk callback writes each micro-batch in one
+    pass instead, as ``streaming.delta_sync.stream_delta_sync`` does.
 
     Chunk assignment is computed ONCE: the window orders by every
     column (deterministic), and the chunked frame is materialized with
@@ -116,25 +116,6 @@ def run_keyed_batches(
                     (F.col(key_col) == key) & (F.col("__chunk") == chunk)
                 ).drop("__chunk"),
             )
-
-    (
-        stream_df.writeStream.trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(handle)
-        .start()
-        .awaitTermination()
-    )
-
-
-def stream_sync_to_tables(
-    stream_df: DataFrame, key_col: str, dest_dir: str, checkpoint_dir: str
-) -> None:
-    """The scalable sink shape: partition each micro-batch by key and
-    append — no driver loop at all; the key is a partition column
-    (this is what replaces per-kind writers, reference writer.py:263-277)."""
-
-    def handle(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df.write.mode("append").partitionBy(key_col).parquet(dest_dir)
 
     (
         stream_df.writeStream.trigger(availableNow=True)

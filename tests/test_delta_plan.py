@@ -1,7 +1,7 @@
 """The planned delta merge: Spark jobs per generation, untouched tables
 left unread, equivalence with a full resync over several generations,
-file counts held, a model that gained a property, the node index a
-destination gets on its first delta, a full resync without an index
+file counts held, a model that gained a property, nodes only the
+node index knows, a destination without an index, a full resync
 between deltas, a delta replayed after a crash during its publish, a
 `file:` URI destination, and the concurrently staged writes: the
 caller's job group on every job, and a failed write that publishes
@@ -10,6 +10,7 @@ nothing."""
 from __future__ import annotations
 
 import os
+import shutil
 import warnings
 
 import pytest
@@ -78,14 +79,13 @@ def _edge(a, b):
     return {"type": "edge", "from": a, "to": b, "edge_type": "default"}
 
 
-def _assert_full_sync_of(spark, dest, docs, ref, skip=()):
-    """Every table under ``dest`` equals a fresh indexed full sync of
-    ``docs`` written to ``ref``."""
+def _assert_full_sync_of(spark, dest, docs, ref):
+    """Every table under ``dest``, the node index included, equals a
+    fresh full sync of ``docs`` written to ``ref``."""
     collect_to_files(
-        spark, GraphSource.from_docs(spark, docs), example_model(), ref,
-        node_index=True,
+        spark, GraphSource.from_docs(spark, docs), example_model(), ref
     )
-    for t in sorted((_tables(dest) | _tables(ref)) - set(skip)):
+    for t in sorted(_tables(dest) | _tables(ref)):
         assert _rows(spark, dest, t) == _rows(spark, ref, t), t
 
 
@@ -96,7 +96,7 @@ def test_volume_delta_job_count_and_untouched_tables(spark, tmp_path):
     dest = str(tmp_path)
     collect_to_files(
         spark, GraphSource.from_docs(spark, example_docs()), example_model(),
-        dest, node_index=True,
+        dest,
     )
     before = _mtimes(dest, "some_instance")
     sc = spark.sparkContext
@@ -169,7 +169,6 @@ def test_three_generations_equal_full_resync(spark, tmp_path):
     dest = str(tmp_path / "inc")
     collect_to_files(
         spark, GraphSource.from_docs(spark, graph()), example_model(), dest,
-        node_index=True,
     )
     base_files = {t: len(_data_files(dest, t)) for t in _tables(dest)}
     for step, make in enumerate((gen1, gen2, gen3), 1):
@@ -181,7 +180,6 @@ def test_three_generations_equal_full_resync(spark, tmp_path):
         ref = str(tmp_path / f"ref-{step}")
         collect_to_files(
             spark, GraphSource.from_docs(spark, graph()), example_model(), ref,
-            node_index=True,
         )
         for t in sorted(_tables(dest) | _tables(ref)):
             assert _rows(spark, dest, t) == _rows(spark, ref, t), (step, t)
@@ -223,49 +221,77 @@ def test_model_gains_a_property_between_generations(spark, tmp_path):
     assert _rows(spark, dest, "some_volume") == _rows(spark, ref, "some_volume")
 
 
-def test_first_delta_builds_the_node_index(spark, tmp_path):
-    """A destination published without a node index gets one on its
-    first delta, published with that generation.  It lists every live
-    node: regions, a kind without a table, are known only from link
-    tables, so the one the delta does not ship keeps a NULL kind.  The
-    region that changes kind still has its old links swept."""
+def test_default_publish_resolves_nodes_known_only_to_the_index(spark, tmp_path):
+    """A destination published with no keywords carries its node index.
+    A new instance links to a region (a kind without a table) that has
+    no link row, so only the index knows it; another region changes
+    kind and keeps its edge, so its old link row goes.  Every table,
+    the index included, equals a fresh full sync."""
     dest = str(tmp_path / "inc")
     base = example_docs() + [
-        _node("r-1", "region"), _node("r-2", "region"),
-        _edge("r-1", "i-123"), _edge("i-123", "r-2"),
+        _node("r-1", "region"), _node("r-2", "region"), _edge("r-1", "i-123"),
     ]
     collect_to_files(
         spark, GraphSource.from_docs(spark, base), example_model(), dest
     )
-    assert NODE_INDEX not in os.listdir(dest)
-    delta = [_inst("i-9", 2), _node("r-1", "zone"), _edge("r-1", "i-123")]
+    delta = [
+        _inst("i-9", 2), _edge("i-9", "r-2"),
+        _node("r-1", "zone"), _edge("r-1", "i-123"),
+    ]
     sync_delta(
-        spark, GraphSource.from_docs(spark, delta), example_model(), dest,
-        deleted_ids=["v-123"],
+        spark, GraphSource.from_docs(spark, delta), example_model(), dest
     )
-    idx = {(r.id, r.kind) for r in read_table(spark, dest, NODE_INDEX).collect()}
-    assert idx == {
-        ("i-123", "some_instance"), ("i-9", "some_instance"),
-        ("r-1", "zone"), ("r-2", None),
-    }
-    final = [d for d in base if d.get("id") not in ("r-1", "v-123")
-             and d.get("from") != "r-1" and d.get("to") != "v-123"] + delta
-    _assert_full_sync_of(
-        spark, dest, final, str(tmp_path / "ref"), skip=[NODE_INDEX]
+    assert _rows(spark, dest, "link_some_instance_region") == [("i-9", "r-2")]
+    final = [d for d in base if "r-1" not in (d.get("id"), d.get("from"))] + delta
+    _assert_full_sync_of(spark, dest, final, str(tmp_path / "ref"))
+
+
+@pytest.mark.parametrize("published", [True, False], ids=["tables", "empty"])
+def test_delta_needs_a_node_index_beside_published_tables(spark, tmp_path, published):
+    """A delta into a destination that holds tables but no node index
+    is rejected before anything is staged, and every table keeps its
+    files; a delta into an empty directory publishes its tables and an
+    index, as a full sync of the delta would."""
+    dest = str(tmp_path / "inc")
+    os.makedirs(dest)
+    docs = [_inst("i-9", 2), _vol("v-9", 5), _edge("i-9", "v-9")]
+    if not published:
+        sync_delta(spark, GraphSource.from_docs(spark, docs), example_model(), dest)
+        _assert_full_sync_of(spark, dest, docs, str(tmp_path / "ref"))
+        return
+    collect_to_files(
+        spark, GraphSource.from_docs(spark, example_docs()), example_model(), dest
     )
+    shutil.rmtree(os.path.join(dest, NODE_INDEX))
+    before = {t: _mtimes(dest, t) for t in os.listdir(dest)}
+    with pytest.raises(ValueError, match="collect_to_files"):
+        sync_delta(spark, GraphSource.from_docs(spark, docs), example_model(), dest)
+    assert {t: _mtimes(dest, t) for t in os.listdir(dest)} == before
+
+
+@pytest.mark.parametrize("keyword", ["swap", "node_index"])
+def test_collect_to_files_publishes_tables_and_index_only(spark, tmp_path, keyword):
+    """``swap`` and ``node_index`` select nothing: ``False`` is refused
+    before any table is written."""
+    with pytest.raises(ValueError):
+        collect_to_files(
+            spark, GraphSource.from_docs(spark, example_docs()), example_model(),
+            str(tmp_path), **{keyword: False},
+        )
+    assert os.listdir(tmp_path) == []
 
 
 def test_full_resync_without_index_between_deltas(spark, tmp_path):
-    """An indexed destination takes a delta, then a full resync that
-    publishes no index, then a delta with a kind change and a tombstone
-    of nodes the resync changed.  The resync removes the index it would
-    have left stale, so the second delta plans against a fresh one."""
+    """A destination takes a delta, then a full resync called without
+    the ``node_index`` keyword, then a delta with a kind change and a
+    tombstone of nodes the resync changed.  The resync still publishes
+    an index of its own nodes, so the second delta plans against the
+    resync, not against the first delta."""
     dest = str(tmp_path / "inc")
 
-    def sync(docs, **kw):
+    def sync(docs):
         collect_to_files(
-            spark, GraphSource.from_docs(spark, docs), example_model(), dest,
-            **kw,
+            spark, GraphSource.from_docs(spark, docs), example_model(), dest
         )
 
     def delta(docs, deleted=()):
@@ -274,14 +300,18 @@ def test_full_resync_without_index_between_deltas(spark, tmp_path):
             deleted_ids=list(deleted),
         )
 
-    sync([_inst("i-1", 1), _vol("v-1", 10), _edge("i-1", "v-1")], node_index=True)
+    sync([_inst("i-1", 1), _vol("v-1", 10), _edge("i-1", "v-1")])
     delta([_inst("i-1", 1), _vol("v-2", 20), _edge("i-1", "v-2")])
     # v-1 is now an instance and i-5 is new: the old index knows neither
     sync([
         _inst("i-1", 1), _inst("v-1", 2), _vol("v-2", 20), _inst("i-5", 5),
         _edge("i-1", "v-2"), _edge("i-5", "v-2"),
     ])
-    assert NODE_INDEX not in os.listdir(dest)
+    idx = {(r.id, r.kind) for r in read_table(spark, dest, NODE_INDEX).collect()}
+    assert idx == {
+        ("i-1", "some_instance"), ("v-1", "some_instance"),
+        ("v-2", "some_volume"), ("i-5", "some_instance"),
+    }
     # nothing else in this delta touches the instance table
     delta([_vol("v-1", 11)], deleted=["i-5"])
     final = [_inst("i-1", 1), _vol("v-1", 11), _vol("v-2", 20), _edge("i-1", "v-2")]
@@ -302,7 +332,6 @@ def test_delta_replayed_after_crash_during_publish(
     ]
     collect_to_files(
         spark, GraphSource.from_docs(spark, base), example_model(), dest,
-        node_index=True,
     )
     # v-1 becomes an instance; v-2 dies with two inbound links
     docs = [_inst("v-1", 3), _inst("i-1", 1), _edge("i-1", "v-1")]
@@ -341,7 +370,6 @@ def test_uri_destination_generations_equal_full_resync(spark, tmp_path):
 
     collect_to_files(
         spark, GraphSource.from_docs(spark, graph()), example_model(), uri,
-        node_index=True,
     )
 
     def gen1():
@@ -392,7 +420,7 @@ def test_staged_jobs_keep_the_callers_job_group(spark, tmp_path):
     calls = [
         lambda: collect_to_files(
             spark, GraphSource.from_docs(spark, example_docs()),
-            example_model(), dest, node_index=True,
+            example_model(), dest,
         ),
         lambda: sync_delta(
             spark,
@@ -427,7 +455,7 @@ def test_failed_staged_write_publishes_nothing(spark, tmp_path, monkeypatch, cal
     dest = str(tmp_path)
     collect_to_files(
         spark, GraphSource.from_docs(spark, example_docs()), example_model(),
-        dest, node_index=True,
+        dest,
     )
     before = {t: _mtimes(dest, t) for t in _tables(dest)}
     assert NODE_INDEX in before
@@ -446,7 +474,7 @@ def test_failed_staged_write_publishes_nothing(spark, tmp_path, monkeypatch, cal
         if call == "collect_to_files":
             collect_to_files(
                 spark, GraphSource.from_docs(spark, docs), example_model(),
-                dest, node_index=True,
+                dest,
             )
         else:
             sync_delta(

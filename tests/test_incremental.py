@@ -369,7 +369,7 @@ def test_kind_change_sweeps_old_table(spark, tmp_path):
 
 
 def test_node_index_resolution_and_maintenance(spark, tmp_path):
-    """collect_to_files(node_index=True) publishes _node_index; a delta
+    """collect_to_files publishes _node_index; a delta
     then resolves edge endpoints against that ONE table (no per-kind
     scans) and advances it in the same publish pass — after arbitrary
     deltas the index must equal the live node set exactly."""
@@ -381,7 +381,8 @@ def test_node_index_resolution_and_maintenance(spark, tmp_path):
         spark, GraphSource.from_docs(spark, example_docs()),
         example_model(), dest, node_index=True,
     )
-    assert NODE_INDEX in published
+    assert NODE_INDEX not in published  # the SQL surface only
+    assert os.path.isdir(os.path.join(dest, NODE_INDEX))
     idx0 = {(r.id, r.kind) for r in read_table(spark, dest, NODE_INDEX).collect()}
     assert idx0 == {("i-123", "some_instance"), ("v-123", "some_volume")}
 

@@ -63,26 +63,3 @@ def test_dynamic_partition_pruning_plan(spark, tmp_path):
         assert joined.count() == ev.filter(F.col("event_type") == "click").count()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
-def test_upsert_and_delete(spark, tmp_path):
-    from resotodatalink_spark.sinks.upsert import delete_keys, upsert_table
-
-    dest = str(tmp_path)
-    base = spark.createDataFrame(
-        [(1, "a"), (2, "b"), (3, "c")], "k: long, v: string"
-    )
-    upsert_table(spark, dest, "t", base, "k")
-    # update key 2, insert key 4
-    upd = spark.createDataFrame([(2, "B"), (4, "d")], "k: long, v: string")
-    upsert_table(spark, dest, "t", upd, "k")
-    got = {
-        r["k"]: r["v"]
-        for r in spark.read.parquet(f"{dest}/t").collect()
-    }
-    assert got == {1: "a", 2: "B", 3: "c", 4: "d"}
-    # delete keys 1 and 4
-    dels = spark.createDataFrame([(1,), (4,)], "k: long")
-    delete_keys(spark, dest, "t", dels, "k")
-    got = {r["k"]: r["v"] for r in spark.read.parquet(f"{dest}/t").collect()}
-    assert got == {2: "B", 3: "c"}

@@ -13,7 +13,6 @@ from resotodatalink_spark.sources.tables import table
 from resotodatalink_spark.streaming.batch_stream import (
     run_keyed_batches,
     stream_events,
-    stream_sync_to_tables,
 )
 from resotodatalink_spark.streaming.windows import session_counts, tumbling_counts
 from tests.conftest import SF_DIR, drain_available_now
@@ -74,17 +73,6 @@ def test_keyed_batches_contract(spark, tmp_path):
     assert {k for k, _ in seen} == {"click", "signup", "purchase", "error", "view"}
 
 
-def test_stream_sync_partitioned_tables(spark, tmp_path):
-    ev = stream_events(spark, SF_DIR)
-    dest = str(tmp_path / "out")
-    stream_sync_to_tables(ev, "event_type", dest, str(tmp_path / "cp4"))
-    back = spark.read.parquet(dest)
-    assert back.count() == table(spark, SF_DIR, "events").count()
-    # partition pruning works: reading one key touches one partition dir
-    one = back.filter(F.col("event_type") == "click")
-    assert one.count() > 0
-
-
 def test_stateful_running_totals(spark, tmp_path):
     """applyInPandasWithState: the LAST emitted snapshot per user must
     equal the batch group-by (state survives across micro-batches —
@@ -124,31 +112,6 @@ def test_stateful_running_totals(spark, tmp_path):
     assert len(merged) == len(want)
     assert (merged["n_events_s"] == merged["n_events_b"]).all()
     assert (abs(merged["total_value_s"] - merged["total_value_b"]) < 1e-6).all()
-
-
-def test_stream_graph_sync(spark, tmp_path):
-    """NDJSON graph stream -> live kind tables (remote-graph S2 shape,
-    driven through real readStream with two source files)."""
-    import json
-
-    from resotodatalink_spark.streaming.graph_ingest import stream_graph_sync
-    from tests.fixtures import example_docs, example_model
-
-    src_dir = tmp_path / "graph_src"
-    src_dir.mkdir()
-    docs = example_docs()
-    (src_dir / "a.ndjson").write_text("\n".join(json.dumps(d) for d in docs[:1]))
-    (src_dir / "b.ndjson").write_text("\n".join(json.dumps(d) for d in docs[1:]))
-    dest = str(tmp_path / "tables")
-    stream_graph_sync(
-        spark, str(src_dir), example_model(), dest, str(tmp_path / "cp_g")
-    )
-    inst = spark.read.parquet(f"{dest}/some_instance")
-    vol = spark.read.parquet(f"{dest}/some_volume")
-    link = spark.read.parquet(f"{dest}/link_some_instance_some_volume")
-    assert inst.count() == 1 and vol.count() == 1
-    assert [tuple(r) for r in link.collect()] == [("i-123", "v-123")]
-    assert inst.filter(F.col("cloud") == "some_cloud").count() == 1
 
 
 def test_stream_stream_interval_join(spark, tmp_path):
