@@ -116,21 +116,6 @@ def in_list_sql(item: str, words: list[str], dialect: str) -> str:
 # --- shingling ------------------------------------------------------------
 
 
-def spark_shingle_hashes(text_col: str, n: int = 3) -> str:
-    """Spark SQL expression: array of word-``n``-gram hashes of ``text_col``.
-
-    NOTE: kept for reference/ad-hoc use, but operators.dedup uses the
-    staged explode-then-project form instead — expressions inside
-    higher-order-function lambdas are interpreted (no codegen/CSE), and
-    this inline form re-evaluates split/slice per ascii() call."""
-    toks = f"split({text_col}, ' ')"
-    sh = f"array_join(slice({toks}, i, {n}), ' ')"
-    return (
-        f"transform(sequence(1, greatest(size({toks}) - {n - 1}, 1)),"
-        f" i -> {str_hash_sql(sh)})"
-    )
-
-
 def duck_shingle_cte(table: str, id_col: str, text_col: str, n: int = 3) -> str:
     """DuckDB CTE body producing (``id_col``, h) — one row per word
     n-gram, hashed with the same portable hash."""

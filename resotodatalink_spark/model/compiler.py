@@ -28,7 +28,7 @@ from collections.abc import Callable
 
 from pyspark.sql import types as T
 
-from resotodatalink_spark.model.kinds import Kind, Model, Property
+from resotodatalink_spark.model.kinds import Kind, Model
 
 _SCALARS: dict[str, T.DataType] = {
     "int32": T.IntegerType(),
@@ -123,8 +123,3 @@ def link_table_schema() -> T.StructType:
             T.StructField("to_id", T.StringType(), True),
         ]
     )
-
-
-def property_for(model: Model, kind: Kind, name: str) -> Property | None:
-    props, _ = model.kind_properties(kind)
-    return next((p for p in props if p.name == name), None)

@@ -15,7 +15,7 @@ in queries/ outside this seam, so a future slug cannot ship with a
 blinded plan.
 
 operators/ call sites (connected-components label propagation,
-traversal frontiers, the signature store) keep calling
+traversal frontiers, minhash signatures) keep calling
 ``localCheckpoint`` directly: their checkpoints are CORRECTNESS
 infrastructure for driver-side iteration (lineage must truncate or the
 loop's plan grows unboundedly), not plan-shape conveniences, and their

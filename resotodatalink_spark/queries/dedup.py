@@ -264,7 +264,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/dedup.py minhash_pairs_between), so each increment costs
     O(batch + collisions) however large the corpus is; with signatures
     persisted (they are one narrow row per doc), the corpus side is a
-    plain scan of the signature store.  Verified pairs (>= 8/16
+    plain scan of that narrow table.  Verified pairs (>= 8/16
     agreeing hashes, est. Jaccard >= 0.5) are the batch docs to drop or
     cluster with their corpus twins."""
     d = table(spark, sf_dir, "documents")

@@ -1,43 +1,11 @@
-"""Compaction, schema evolution, and dynamic partition pruning."""
+"""Dynamic partition pruning on a kind-partitioned parquet layout."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import functions as F
 
-from resotodatalink_spark.sinks.maintenance import compact_table, read_evolved
 from resotodatalink_spark.sources.tables import table
 from tests.conftest import SF_DIR
-
-
-def test_compact_table(spark, tmp_path):
-    dest = str(tmp_path)
-    li = table(spark, SF_DIR, "lineitem")
-    li.repartition(24).write.parquet(os.path.join(dest, "t"))
-    before = compact_table(spark, dest, "t", target_files=4)
-    assert before == 24
-    after_files = [
-        f for f in os.listdir(os.path.join(dest, "t")) if f.endswith(".parquet")
-    ]
-    assert len(after_files) <= 4
-    assert spark.read.parquet(os.path.join(dest, "t")).count() == li.count()
-
-
-def test_read_evolved_schema(spark, tmp_path):
-    """Old files lack the new column -> NULL-filled, like the kind
-    model's absent-prop semantics across versions."""
-    path = str(tmp_path / "evo")
-    v1 = spark.range(3).select(F.col("id").alias("k"), F.lit("a").alias("x"))
-    v1.write.parquet(path)
-    v2 = spark.range(3, 5).select(
-        F.col("id").alias("k"), F.lit("b").alias("x"), F.lit(1.5).alias("y")
-    )
-    v2.write.mode("append").parquet(path)
-    back = read_evolved(spark, path)
-    assert set(back.columns) == {"k", "x", "y"}
-    assert back.count() == 5
-    assert back.filter(F.col("y").isNull()).count() == 3
 
 
 def test_dynamic_partition_pruning_plan(spark, tmp_path):

@@ -1,12 +1,11 @@
-"""Scale-infrastructure operators: salted aggregation equals plain
-groupBy; bucketed joins produce exchange-free plans."""
+"""Scale-infrastructure operators: salted aggregation and salted joins
+equal their plain counterparts."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from resotodatalink_spark.operators.skew import salted_agg
-from resotodatalink_spark.sinks.bucketing import bucketed_join, write_bucketed
 from resotodatalink_spark.sources.tables import table
 from tests.conftest import SF_DIR
 
@@ -40,37 +39,6 @@ def test_salted_agg_random_salt_still_exact(spark):
     )
     plain = li.groupBy("l_linestatus").count().withColumnRenamed("count", "n")
     assert sorted(map(tuple, salted.collect())) == sorted(map(tuple, plain.collect()))
-
-
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    # warehouse dir is a static conf; tables land in ./spark-warehouse
-    # (gitignored).  The in-memory catalog forgets tables across runs but
-    # the location survives — clear both up front.
-    import shutil
-
-    for t in ("b_orders", "b_customer"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(f"spark-warehouse/{t}", ignore_errors=True)
-    o = table(spark, SF_DIR, "orders")
-    c = table(spark, SF_DIR, "customer").withColumnRenamed("c_custkey", "o_custkey")
-    write_bucketed(o, "b_orders", "o_custkey", n_buckets=8)
-    write_bucketed(c, "b_customer", "o_custkey", n_buckets=8)
-    # at test scale Catalyst would broadcast (which disables bucketing);
-    # force the sort-merge path the layout is designed for at 100 TB
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = bucketed_join(spark, "b_orders", "b_customer", "o_custkey")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        assert "SortMergeJoin" in plan, plan
-        # and it still computes the right thing
-        expect = o.join(c, "o_custkey").count()
-        assert joined.count() == expect
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_customer")
 
 
 def test_salted_join_matches_plain_join(spark):
