@@ -23,8 +23,8 @@ Tables publish through ``swap_staging`` only after every write has
 finished, so a crash before the publish leaves generation N.  The pass
 renames one table at a time: it is crash-safe, not gap-free, and a
 reader that lists tables during it can see some tables of N and some
-of N+1.  ``_node_index`` is published by a second pass after the
-tables, so a crash during the publish leaves the index at N.
+of N+1.  ``_node_index`` is published last in the same pass, so a
+crash during the tables' renames leaves the index at N.
 Replaying the same delta (as the stream does after a failed batch)
 then plans against generation N again and completes the generation:
 a table already at N+1 merges to the same rows.
@@ -52,7 +52,7 @@ the writes overlapping on up to ``defaultParallelism`` driver threads:
 * stage concurrently: each affected table's read, merge and write, and
   the index's, is one stage function of ``sinks.files.stage_tables``.
   The publish waits for all of them, so a failed write publishes
-  nothing; planning and the publish passes are unchanged.
+  nothing; planning and the publish pass are unchanged.
 """
 
 from __future__ import annotations
@@ -102,10 +102,21 @@ def _node_index(spark: SparkSession, fs: _Fs, dest_dir: str, on_disk: set[str]) 
     generation ``collect_to_files`` or the last delta published.  A
     destination with no tables starts from an empty index (generation
     0); one with tables but no index cannot be planned and is rejected
-    before anything is staged."""
+    before anything is staged.
+
+    The index is read by its data files: Spark's ``DataSource`` treats
+    a path whose name starts with ``_`` as hidden, and reading the
+    directory itself logs a ``WARN`` on every delta."""
     idx_path = fs.join(dest_dir, NODE_INDEX)
     if fs.isdir(idx_path):
-        return spark.read.schema("id string, kind string").parquet(idx_path)
+        files = [
+            fs.join(idx_path, f)
+            for f in sorted(fs.listdir(idx_path))
+            if f.endswith(".parquet") and not f.startswith(("_", "."))
+        ]
+        if not files:
+            return _local(spark, id=[], kind=[])
+        return spark.read.schema("id string, kind string").parquet(*files)
     if on_disk:
         raise ValueError(
             f"{dest_dir} holds tables but no {NODE_INDEX}: republish it with collect_to_files"
@@ -321,9 +332,7 @@ def sync_delta(
         stats[name] = {"upserted": upserted.get(name, 0), "removed": removed.get(name, 0)}
         feedback.progress_done("sync_delta", i, len(names))
 
-    # publish after every table of the generation is staged; the index
-    # last, so a crash during the tables' pass leaves it at generation N
-    # and a replay of this delta plans against N again
-    swap_staging(dest_dir, tables=staged, spark=spark)
-    swap_staging(dest_dir, tables=[NODE_INDEX], spark=spark)
+    # publish once every table is staged, the index last: a crash during
+    # the tables' renames leaves it at N, and a replay plans against N again
+    swap_staging(dest_dir, tables=[*staged, NODE_INDEX], spark=spark)
     return stats

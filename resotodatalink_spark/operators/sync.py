@@ -79,8 +79,8 @@ def collect_to_files(
     Every generation carries the narrow ``_node_index`` (id, kind)
     table, against which ``sync_delta`` plans each delta.  It is staged
     with the tables, as parquet whatever ``fmt`` is (only ``sync_delta``
-    reads it), and published by a second pass after them, so a crash
-    during the publish never leaves it newer than a table.  The return
+    reads it), and published last in the same pass, so a crash during
+    the publish never leaves it newer than a table.  The return
     value and the feedback list only the kind and link tables, the SQL
     surface.  ``swap`` and ``node_index`` select nothing: they accept
     ``True`` only, so callers that pass it keep working."""
@@ -100,10 +100,9 @@ def collect_to_files(
     )
     for i in range(1, len(tables) + 1):
         feedback.progress_done("write_tables", i, len(tables))
-    published = swap_staging(dest_dir, tables=tables)
-    swap_staging(dest_dir, tables=[NODE_INDEX])
-    feedback.progress_done("swap", len(published), len(published))
-    return published
+    swap_staging(dest_dir, tables=[*tables, NODE_INDEX])
+    feedback.progress_done("swap", len(tables), len(tables))
+    return tables
 
 
 def collect_sql(

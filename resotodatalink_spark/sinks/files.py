@@ -15,7 +15,7 @@ writer.py:130-146).
 Cloud paths (s3a://, gs://) work through the Hadoop filesystem — the
 reference's spool-and-upload dance (writer.py:187-219) disappears:
 ``df.write`` resolves the scheme itself, and ``swap_staging`` routes
-its list/rename/delete through the Hadoop FileSystem API whenever the
+its exists/rename/delete through the Hadoop FileSystem API whenever the
 destination is a URI (exercised in CI over ``file:`` URIs, which take
 the exact same FS-API path as ``s3a://`` minus the S3 connector —
 tests/test_sinks.py).  NOTE on object stores: S3 "rename" is
@@ -43,8 +43,8 @@ STAGING_SUFFIX = "__staging"
 # underscore keeps it out of the kind/link namespace), always as
 # parquet.  Every delta generation is planned against it — see
 # operators/incremental.py, which rejects a destination that holds
-# tables but no index.  It is always published after the tables it
-# describes.
+# tables but no index.  It is always the last name of its generation's
+# one ``swap_staging`` call, so it is never newer than a table.
 NODE_INDEX = "_node_index"
 
 
@@ -177,16 +177,18 @@ def _fs(dest_dir: str, spark: SparkSession | None) -> _Fs:
 
 def swap_staging(
     dest_dir: str,
-    tables: list[str] | None = None,
+    tables: list[str],
     spark: SparkSession | None = None,
 ) -> list[str]:
-    """Publish ``*__staging`` dirs (reference swap_temp_tables,
-    sql.py:129-159).  A plain local path uses ``os`` primitives; a URI
-    destination (``file:``, ``hdfs://``, ``s3a://``, ``gs://``) routes
-    every list/rename/delete through the Hadoop FileSystem API of the
-    active Spark session — the same resolver ``df.write`` used, so any
-    scheme the write reached can also be published (K8, reference
-    writer.py:187-219).
+    """Publish the ``<t>__staging`` dir of each name in ``tables``, in
+    the order given, and return the names (reference swap_temp_tables,
+    sql.py:129-159).  A name with no staged dir fails in its rename, and
+    no unnamed staging dir is ever published.  A plain local path uses
+    ``os`` primitives; a URI destination (``file:``, ``hdfs://``,
+    ``s3a://``, ``gs://``) routes every rename/delete through the Hadoop
+    FileSystem API of the active Spark session — the same resolver
+    ``df.write`` used, so any scheme the write reached can also be
+    published (K8, reference writer.py:187-219).
 
     Per table the order is: rename the live dir aside to ``<t>__old``,
     rename staging into place, delete the old dir LAST.  This is
@@ -195,17 +197,9 @@ def swap_staging(
     there is a brief instant where the live path does not exist and a
     concurrent reader fails.  If true no-gap reads are required,
     publish through a symlink flipped atomically (or a metastore
-    pointer) instead.  ``tables`` scopes the
-    publish to named tables, so a leftover staging dir from an
-    unrelated failed job is never accidentally published."""
+    pointer) instead."""
     fs = _fs(dest_dir, spark)
-    published = []
-    for entry in sorted(fs.listdir(dest_dir)):
-        if not entry.endswith(STAGING_SUFFIX):
-            continue
-        final = entry[: -len(STAGING_SUFFIX)]
-        if tables is not None and final not in tables:
-            continue
+    for final in tables:
         final_path = fs.join(dest_dir, final)
         old_path = final_path + OLD_SUFFIX
         if fs.exists(old_path):  # leftover from a prior crash
@@ -213,11 +207,10 @@ def swap_staging(
         had_old = fs.exists(final_path)
         if had_old:
             fs.rename(final_path, old_path)
-        fs.rename(fs.join(dest_dir, entry), final_path)
+        fs.rename(final_path + STAGING_SUFFIX, final_path)
         if had_old:
             fs.rmtree(old_path)
-        published.append(final)
-    return published
+    return list(tables)
 
 
 R = TypeVar("R")

@@ -92,80 +92,3 @@ def user_totals_batch(events: DataFrame) -> DataFrame:
         F.sum("value").alias("total_value"),
     )
 
-
-def running_type_profiles(events: DataFrame) -> DataFrame:
-    """Streaming, Spark-4 ``transformWithStateInPandas`` surface: the
-    typed-state successor of ``applyInPandasWithState`` (ValueState /
-    MapState primitives managed per key by the state-store, instead of
-    one opaque tuple).  Per user we keep a ValueState row counter and a
-    MapState of per-event-type counts, and emit a cumulative snapshot
-    (n_events, n_types = distinct event types seen so far) per key per
-    micro-batch — integers only, so snapshots are micro-batch-boundary-
-    independent and the final per-key argmax is value-hash comparable
-    against a batch COUNT/COUNT DISTINCT.
-
-    The processor class is defined INSIDE this function (the
-    self-contained-closure rule): cloudpickle ships it by value, so
-    executor workers never import this package.
-
-    EXPERIMENTAL (round-7 status decision, VERDICT r6 item 9): this
-    operator is shipped but CANNOT be exercised in this sandbox — use
-    ``running_user_totals`` for verified stateful totals.
-
-    ENVIRONMENT GATE: the TWS Python runner needs ``google.protobuf``
-    (its driver-side worker speaks the Arrow/proto state protocol) and
-    the RocksDB state store provider
-    (``spark.sql.streaming.stateStore.providerClass`` =
-    ``...state.RocksDBStateStoreProvider``).  protobuf is not
-    installed in this sandbox (re-checked rounds 7-12: ``import
-    google.protobuf`` still raises and ``pip download`` has no DNS
-    egress), so
-    the operator is exercised by a skip-gated test
-    (tests/test_streaming.py) and the oracle-attested stateful slug
-    remains the ``applyInPandasWithState`` path
-    (``stream_stateful_totals``), which has no proto dependency.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class TypeProfile(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._n = handle.getValueState("n", "n long")
-            self._types = handle.getMapState(
-                "types", "event_type string", "c long"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as _pd
-
-            n = self._n.get()[0] if self._n.exists() else 0
-            for pdf in rows:
-                n += len(pdf)
-                for t, c in pdf.groupby("event_type").size().items():
-                    prev = (
-                        self._types.getValue((t,))[0]
-                        if self._types.containsKey((t,))
-                        else 0
-                    )
-                    self._types.updateValue((t,), (prev + int(c),))
-            self._n.update((n,))
-            n_types = sum(1 for _ in self._types.keys())
-            yield _pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "n_types": [n_types],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        TypeProfile(),
-        outputStructType="user_id long, n_events long, n_types long",
-        outputMode="Update",
-        timeMode="None",
-    )

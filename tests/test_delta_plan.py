@@ -2,8 +2,9 @@
 left unread, equivalence with a full resync over several generations,
 file counts held, a model that gained a property, nodes only the
 node index knows, a destination without an index, a full resync
-between deltas, a delta replayed after a crash during its publish, a
-`file:` URI destination, and the concurrently staged writes: the
+between deltas, a delta replayed after a crash during its publish, one
+publish call per generation with the node index last, a `file:` URI
+destination, and the concurrently staged writes: the
 caller's job group on every job, and a failed write that publishes
 nothing."""
 
@@ -318,7 +319,7 @@ def test_full_resync_without_index_between_deltas(spark, tmp_path):
     _assert_full_sync_of(spark, dest, final, str(tmp_path / "ref"))
 
 
-@pytest.mark.parametrize("published", [1, None], ids=["one-table", "all-tables"])
+@pytest.mark.parametrize("published", [1, -1], ids=["one-table", "all-tables"])
 def test_delta_replayed_after_crash_during_publish(
     spark, tmp_path, monkeypatch, published
 ):
@@ -336,16 +337,20 @@ def test_delta_replayed_after_crash_during_publish(
     # v-1 becomes an instance; v-2 dies with two inbound links
     docs = [_inst("v-1", 3), _inst("i-1", 1), _edge("i-1", "v-1")]
 
-    def crash(dest_dir, tables=None, spark=None):
-        swap_staging(dest_dir, tables=sorted(tables)[:published])
+    def crash(dest_dir, tables, spark=None):
+        # the publish renames in the order given, the index last: -1
+        # stops after every table but the index
+        swap_staging(dest_dir, tables=tables[:published])
         raise RuntimeError("crash during publish")
 
     monkeypatch.setattr(incremental, "swap_staging", crash)
+    index_n = _rows(spark, dest, NODE_INDEX)
     with pytest.raises(RuntimeError):
         sync_delta(
             spark, GraphSource.from_docs(spark, docs), example_model(), dest,
             deleted_ids=["v-2"],
         )
+    assert _rows(spark, dest, NODE_INDEX) == index_n
     monkeypatch.undo()
     sync_delta(
         spark, GraphSource.from_docs(spark, docs), example_model(), dest,
@@ -353,6 +358,39 @@ def test_delta_replayed_after_crash_during_publish(
     )
     final = [_inst("i-1", 1), _inst("i-2", 2), _inst("v-1", 3), _edge("i-1", "v-1")]
     _assert_full_sync_of(spark, dest, final, str(tmp_path / "ref"))
+
+
+def test_each_generation_publishes_in_one_call_with_the_index_last(
+    spark, tmp_path, monkeypatch
+):
+    """``collect_to_files`` and ``sync_delta`` each publish a generation
+    with one ``swap_staging`` call, the node index its last name, so a
+    crash during the tables' renames leaves the index at the old
+    generation.  The recorder rebinds the name in each entry point's
+    module, as a tracer does."""
+    calls = []
+    for module in (sync, incremental):
+
+        def recording(dest_dir, tables, spark=None, _real=module.swap_staging,
+                      _entry=module.__name__.rsplit(".", 1)[-1]):
+            calls.append((_entry, list(tables)))
+            return _real(dest_dir, tables, spark=spark)
+
+        monkeypatch.setattr(module, "swap_staging", recording)
+    dest = str(tmp_path)
+    collect_to_files(
+        spark, GraphSource.from_docs(spark, example_docs()), example_model(),
+        dest,
+    )
+    sync_delta(
+        spark, GraphSource.from_docs(spark, [_vol("v-123", 99)]),
+        example_model(), dest,
+    )
+    assert calls == [
+        ("sync", ["link_some_instance_some_volume", "some_instance",
+                  "some_volume", NODE_INDEX]),
+        ("incremental", ["some_volume", NODE_INDEX]),
+    ]
 
 
 def test_uri_destination_generations_equal_full_resync(spark, tmp_path):

@@ -26,7 +26,7 @@ def test_parquet_staging_swap_roundtrip(spark, tmp_path):
         write_table(df, dest, name)
     # nothing published yet
     assert all(e.endswith("__staging") for e in os.listdir(dest))
-    published = swap_staging(dest)
+    published = swap_staging(dest, tables=sorted(views))
     assert sorted(published) == [
         "link_some_instance_some_volume",
         "some_instance",
@@ -45,7 +45,7 @@ def test_swap_replaces_existing(spark, tmp_path):
     df2 = spark.range(5).withColumnRenamed("id", "v")
     write_table(df2, dest, "t")  # staged
     assert read_table(spark, dest, "t").count() == 3  # still old data
-    swap_staging(dest)
+    swap_staging(dest, tables=["t"])
     assert read_table(spark, dest, "t").count() == 5
 
 
@@ -221,7 +221,7 @@ def test_cloud_uri_staged_publish_roundtrip(spark, tmp_path):
     # staged, not yet live
     assert os.path.isdir(tmp_path / "bucket" / "t__staging")
     assert not os.path.exists(tmp_path / "bucket" / "t")
-    assert swap_staging(uri, spark=spark) == ["t"]
+    assert swap_staging(uri, tables=["t"], spark=spark) == ["t"]
     assert not os.path.exists(tmp_path / "bucket" / "t__staging")
     got = read_table(spark, uri, "t")
     assert sorted(r["v"] for r in got.collect()) == [0, 2, 4, 6, 8]
@@ -417,7 +417,7 @@ def test_published_text_tables_cross_read_by_duckdb(spark, tmp_path):
     dest = str(tmp_path)
     write_table(df, dest, "tj", fmt="json", staging=True)
     write_table(df, dest, "tc", fmt="csv", staging=True)
-    assert sorted(swap_staging(dest)) == ["tc", "tj"]
+    assert sorted(swap_staging(dest, tables=["tj", "tc"])) == ["tc", "tj"]
     con = duckdb.connect()
     # external readers apply their OWN inference (Spark's ISO-Z
     # timestamp strings read back as text); the claim under test is

@@ -368,48 +368,6 @@ def test_stream_dedup_agrees_with_batch(spark, tmp_path):
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
 
 
-def test_tws_running_type_profiles(spark, tmp_path):
-    """transformWithStateInPandas (Spark 4 typed-state API): final
-    snapshot per user must equal batch COUNT/COUNT DISTINCT.  Skips
-    where the TWS python runner's protobuf dependency is absent (this
-    sandbox); the logic is exercised wherever protobuf + RocksDB state
-    store are available."""
-    pytest.importorskip("google.protobuf")
-    from resotodatalink_spark.streaming.batch_stream import stream_events
-    from resotodatalink_spark.streaming.stateful import running_type_profiles
-
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    src = stream_events(spark, SF_DIR)
-    q = (
-        running_type_profiles(src)
-        .writeStream.format("memory")
-        .queryName("t_tws")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "cp_tws"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    drain_available_now(q)
-    out = spark.table("t_tws").toPandas()
-    truth = (
-        table(spark, SF_DIR, "events")
-        .groupBy("user_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.countDistinct("event_type").alias("n_types"),
-        )
-        .toPandas()
-    )
-    last = out.sort_values("n_events").groupby("user_id").last().reset_index()
-    m = last.merge(truth, on="user_id", suffixes=("_s", "_b"))
-    assert len(m) == len(truth)
-    assert (m.n_events_s == m.n_events_b).all()
-    assert (m.n_types_s == m.n_types_b).all()
-
-
 def test_nearest_event_join_tie_rules(spark, tmp_path):
     """Edge cases the parquet test data never exercises: equidistant
     backward/forward ties resolve to the EARLIER purchase, duplicate

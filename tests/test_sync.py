@@ -129,34 +129,6 @@ def test_example_collector_e2e_counts(spark, tmp_path):
     assert counts == expected_counts
 
 
-def test_progress_tree_renderer(spark, tmp_path):
-    """O1 parity: the sync entry points drive a renderable progress tree
-    (reference show_progress.py shape: done markers / percentages /
-    height cap) with no code changes to the pipeline."""
-    import io
-
-    from resotodatalink_spark.operators.progress import ProgressTree, TreeFeedback
-    from resotodatalink_spark.operators.sync import collect_to_files
-    from resotodatalink_spark.sources.graph import GraphSource
-    from tests.fixtures import example_docs, example_model
-
-    fb = TreeFeedback(out=io.StringIO())
-    src = GraphSource.from_docs(spark, example_docs())
-    collect_to_files(spark, src, example_model(), str(tmp_path), feedback=fb)
-    rendered = fb.tree.render()
-    assert "[x] write_tables (100%)" in rendered
-    assert "[x] swap (100%)" in rendered
-
-    t = ProgressTree()
-    t.add_progress("collect/scan", 1, 4)
-    assert "[ ] scan (25%)" in t.render()
-    assert "[ ] collect (25%)" in t.render()  # parent aggregates children
-    # height cap
-    for i in range(30):
-        t.add_progress(f"collect/s{i}", 1, 1)
-    assert len(t.render(max_height=10).splitlines()) == 10
-
-
 def test_collect_plugin_protocol_golden_counts(spark, tmp_path):
     """U4: a fake BaseCollectorPlugin-shaped object driven through
     ``collect_plugin`` reproduces the example-collector E2E goldens of
