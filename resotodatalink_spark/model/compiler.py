@@ -16,15 +16,11 @@ Reference bugs fixed, not replicated: ``float`` returns None there
 Datetime/date map to TimestampType/DateType internally with the UTC
 string codec applied at egress (reference sql.py:43-70), not stored as
 strings.
-
-A custom mapper can be layered on top (reference sql.py:172
-``kind_to_column_type`` kwarg) by passing ``overrides``.
 """
 
 from __future__ import annotations
 
 import re
-from collections.abc import Callable
 
 from pyspark.sql import types as T
 
@@ -46,21 +42,13 @@ _SCALARS: dict[str, T.DataType] = {
 _DICT_RE = re.compile(r"^dictionary\[\s*(.+?)\s*,\s*(.+)\s*\]$")
 
 
-def kind_to_spark_type(
-    model: Model,
-    kind_name: str,
-    overrides: Callable[[str], T.DataType | None] | None = None,
-) -> T.DataType:
-    if overrides is not None and (ov := overrides(kind_name)) is not None:
-        return ov
+def kind_to_spark_type(model: Model, kind_name: str) -> T.DataType:
     if "[]" in kind_name:
-        return T.ArrayType(
-            kind_to_spark_type(model, kind_name.replace("[]", "", 1), overrides)
-        )
+        return T.ArrayType(kind_to_spark_type(model, kind_name.replace("[]", "", 1)))
     if m := _DICT_RE.match(kind_name):
         return T.MapType(
-            kind_to_spark_type(model, m.group(1), overrides),
-            kind_to_spark_type(model, m.group(2), overrides),
+            kind_to_spark_type(model, m.group(1)),
+            kind_to_spark_type(model, m.group(2)),
         )
     if kind_name.startswith("dict"):
         return T.StringType()  # JSON blob (reference sql.py:77-78)
@@ -68,50 +56,33 @@ def kind_to_spark_type(
         return _SCALARS[kind_name]
     if kind := model.kinds.get(kind_name):
         if kind.runtime_kind is not None:
-            return kind_to_spark_type(model, kind.runtime_kind, overrides)
+            return kind_to_spark_type(model, kind.runtime_kind)
         if kind.properties:
             return T.StructType(
                 [
-                    T.StructField(
-                        p.name, kind_to_spark_type(model, p.kind, overrides), True
-                    )
+                    T.StructField(p.name, kind_to_spark_type(model, p.kind), True)
                     for p in kind.properties
                 ]
             )
     raise ValueError(f"Unknown kind: {kind_name}")
 
 
-def table_schema(
-    model: Model,
-    kind: Kind,
-    with_id: bool = True,
-    overrides: Callable[[str], T.DataType | None] | None = None,
-) -> T.StructType:
+def table_schema(model: Model, kind: Kind, with_id: bool = True) -> T.StructType:
     """Flattened per-kind table schema: _id + inherited props + carz
     (reference arrow/model.py:31-36 / sql.py:182-188)."""
     props, _ = model.kind_properties(kind, with_id=with_id)
     return T.StructType(
-        [
-            T.StructField(p.name, kind_to_spark_type(model, p.kind, overrides), True)
-            for p in props
-        ]
+        [T.StructField(p.name, kind_to_spark_type(model, p.kind), True) for p in props]
     )
 
 
-def reported_schema(
-    model: Model,
-    kind: Kind,
-    overrides: Callable[[str], T.DataType | None] | None = None,
-) -> T.StructType:
+def reported_schema(model: Model, kind: Kind) -> T.StructType:
     """Schema for parsing the raw ``reported`` JSON of one kind: the
     flattened props WITHOUT _id/carz (those come from the envelope)."""
     props, _ = model.kind_properties(kind, with_id=False)
     own = [p for p in props if p.name not in ("cloud", "account", "region", "zone")]
     return T.StructType(
-        [
-            T.StructField(p.name, kind_to_spark_type(model, p.kind, overrides), True)
-            for p in own
-        ]
+        [T.StructField(p.name, kind_to_spark_type(model, p.kind), True) for p in own]
     )
 
 

@@ -94,15 +94,19 @@ def sync_views(
     temp_prefix: bool = False,
 ) -> dict[str, DataFrame]:
     """Register every kind table and link table as temp views; returns
-    name -> DataFrame.  View names follow reference schema_utils.py:28-36."""
-    out: dict[str, DataFrame] = {}
-    for kind in model.table_kinds():
-        name = get_table_name(kind.fqn, with_tmp_prefix=temp_prefix)
-        df = flatten_nodes(source.nodes, model, kind)
-        df.createOrReplaceTempView(name)
-        out[name] = df
+    name -> DataFrame.  View names follow reference schema_utils.py:28-36.
+    Link names truncate each kind to 25 characters, so two kind pairs
+    can share one name; that table holds the union of their edges, as
+    a delta's link rows do (``operators.incremental._plan``)."""
+    out = {
+        get_table_name(kind.fqn, with_tmp_prefix=temp_prefix): flatten_nodes(
+            source.nodes, model, kind
+        )
+        for kind in model.table_kinds()
+    }
     for (fk, tk), df in link_tables(source).items():
         name = get_link_table_name(fk, tk, with_tmp_prefix=temp_prefix)
+        out[name] = out[name].unionByName(df) if name in out else df
+    for name, df in out.items():
         df.createOrReplaceTempView(name)
-        out[name] = df
     return out

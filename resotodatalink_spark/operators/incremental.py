@@ -49,10 +49,17 @@ the writes overlapping on up to ``defaultParallelism`` driver threads:
   its delta rows and written once; ``removed`` is observed during that
   write, not counted by extra jobs.  The write is coalesced to the
   table's current file count, so a generation never adds files;
-* stage concurrently: each affected table's read, merge and write, and
-  the index's, is one stage function of ``sinks.files.stage_tables``.
-  The publish waits for all of them, so a failed write publishes
-  nothing; planning and the publish pass are unchanged.
+* stage concurrently: two calls of ``sinks.files.stage_tables``.  The
+  first builds every affected table's frames (lazy, so only the listing
+  of its data files runs, and a published table that is not parquet
+  raises before any write); in the second, each table's merge and
+  write, and the index's, is one stage function.  The publish waits
+  for all of them, so a failed write publishes nothing.
+
+The published layout belongs to ``sinks/files.py``: the planner lists
+tables with ``published_tables`` and reads them, the index included,
+with ``read_table``; its one file operation of its own removes a staged
+table the plan could not rule out that turned out unchanged.
 """
 
 from __future__ import annotations
@@ -70,10 +77,9 @@ from resotodatalink_spark.operators.flatten import flatten_nodes, sync_views  # 
 from resotodatalink_spark.operators.sync import Feedback, NoFeedback
 from resotodatalink_spark.sinks.files import (
     NODE_INDEX,
-    OLD_SUFFIX,
-    STAGING_SUFFIX,
-    _Fs,
     _fs,
+    published_tables,
+    read_table,
     stage_tables,
     swap_staging,
     write_table,
@@ -81,43 +87,16 @@ from resotodatalink_spark.sinks.files import (
 from resotodatalink_spark.sources.graph import GraphSource
 
 
-def _published_tables(fs: _Fs, dest_dir: str) -> set[str]:
-    """Kind and link tables on disk (the underscore-prefixed
-    ``_node_index`` is maintained separately).  ``fs`` is
-    ``sinks.files._fs`` of ``dest_dir``, so a URI destination lists
-    through the Hadoop FileSystem."""
-    if not fs.isdir(dest_dir):
-        return set()
-    return {
-        e
-        for e in fs.listdir(dest_dir)
-        if fs.isdir(fs.join(dest_dir, e))
-        and not e.endswith((STAGING_SUFFIX, OLD_SUFFIX))
-        and not e.startswith("_")
-    }
-
-
-def _node_index(spark: SparkSession, fs: _Fs, dest_dir: str, on_disk: set[str]) -> DataFrame:
+def _node_index(spark: SparkSession, dest_dir: str, listed: set[str]) -> DataFrame:
     """The published (id, kind) index, which lists every node of the
-    generation ``collect_to_files`` or the last delta published.  A
-    destination with no tables starts from an empty index (generation
-    0); one with tables but no index cannot be planned and is rejected
-    before anything is staged.
-
-    The index is read by its data files: Spark's ``DataSource`` treats
-    a path whose name starts with ``_`` as hidden, and reading the
-    directory itself logs a ``WARN`` on every delta."""
-    idx_path = fs.join(dest_dir, NODE_INDEX)
-    if fs.isdir(idx_path):
-        files = [
-            fs.join(idx_path, f)
-            for f in sorted(fs.listdir(idx_path))
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        ]
-        if not files:
-            return _local(spark, id=[], kind=[])
-        return spark.read.schema("id string, kind string").parquet(*files)
-    if on_disk:
+    generation ``collect_to_files`` or the last delta published.
+    ``listed`` is ``published_tables`` of ``dest_dir``.  A destination
+    with no tables starts from an empty index (generation 0); one with
+    tables but no index cannot be planned and is rejected before
+    anything is staged."""
+    if NODE_INDEX in listed:
+        return read_table(spark, dest_dir, NODE_INDEX, schema="id string, kind string")
+    if listed:
         raise ValueError(
             f"{dest_dir} holds tables but no {NODE_INDEX}: republish it with collect_to_files"
         )
@@ -251,9 +230,9 @@ def sync_delta(
     of many generations, with ``collect_to_files`` instead."""
     feedback = feedback or NoFeedback()
     deleted = sorted(set(deleted_ids or []))
-    fs = _fs(dest_dir, spark)
-    on_disk = _published_tables(fs, dest_dir)
-    index = _node_index(spark, fs, dest_dir, on_disk)
+    listed = published_tables(dest_dir, spark)
+    on_disk = listed - {NODE_INDEX}
+    index = _node_index(spark, dest_dir, listed)
     kind_tables = {get_table_name(k.fqn): k for k in model.table_kinds()}
 
     # The one planning action: the delta's node kinds and edges, and the
@@ -284,36 +263,42 @@ def sync_delta(
     # no row in its old kind's delta; both still own stale rows.
     swept = _local(spark, id=changed + deleted)
 
-    def stage(name: str) -> int:
-        """Stage one affected table's merge; returns its removed rows."""
-        dv: DataFrame | None = None
+    def frames(name: str) -> tuple[DataFrame | None, DataFrame | None]:
+        """One affected table's delta rows, and its published rows unless
+        it is new.  A known schema saves the job that infers one from a
+        file footer; a kind table reads in the current model's columns,
+        so a property the model gained is NULL in old rows."""
+        dv = None
         if name in kind_tables:
             dv = flatten_nodes(delta.nodes, model, kind_tables[name])
         elif name in links:
             f, t = zip(*links[name])
             dv = _local(spark, from_id=list(f), to_id=list(t))
         if name not in on_disk:
+            return dv, None
+        if name.startswith("link_"):
+            schema = link_table_schema()
+        else:
+            schema = dv.schema if dv is not None else None
+        return dv, read_table(spark, dest_dir, name, schema=schema)
+
+    def stage(name: str, dv: DataFrame | None, old: DataFrame | None) -> int:
+        """Stage one affected table's merge; returns its removed rows."""
+        if old is None:
             # brand-new table this generation (e.g. first node of a
             # kind): change-sized, one file
             if upserted.get(name):
                 write_table(dv.coalesce(1), dest_dir, name, staging=True)
             return 0
-        # A known schema saves the job that infers one from a file
-        # footer.  A kind table reads in the current model's columns: a
-        # property the model gained is NULL in old rows.
         if name.startswith("link_"):
-            schema = link_table_schema()
             sweeps = [("from_id", swept)] + ([("to_id", gone)] if deleted else [])
         else:
-            schema = dv.schema if dv is not None else None
             sweeps = [("_id", swept)]
-        reader = spark.read if schema is None else spark.read.schema(schema)
-        existing = reader.parquet(fs.join(dest_dir, name))
-        merged, before, after = _merge(existing, sweeps, dv)
+        merged, before, after = _merge(old, sweeps, dv)
         path = write_table(merged, dest_dir, name, staging=True)
         removed = before.get["n"] - after.get["n"]
         if not (upserted.get(name) or removed):
-            fs.rmtree(path)  # the plan could not rule it out; nothing changed
+            _fs(dest_dir, spark).rmtree(path)  # the plan could not rule it out; nothing changed
         return removed
 
     def stage_index() -> None:
@@ -323,7 +308,14 @@ def sync_delta(
 
     names = sorted(set(kind_tables) | set(links) | on_disk)
     work = [n for n in names if n in affected]
-    *counts, _ = stage_tables(spark, [functools.partial(stage, n) for n in work] + [stage_index])
+    # every table's frames are built before anything is staged: they
+    # are lazy, but a published table that is not parquet raises here.
+    # Building them is driver-side plan analysis (a flatten per kind
+    # table), so it overlaps on the stage pool too.
+    built = stage_tables(spark, [functools.partial(frames, n) for n in work])
+    *counts, _ = stage_tables(
+        spark, [functools.partial(stage, n, *b) for n, b in zip(work, built)] + [stage_index]
+    )
     removed = dict(zip(work, counts))
     staged = [n for n in work if upserted.get(n) or removed[n]]
 

@@ -8,15 +8,22 @@ cross-table all-or-nothing publish the reference gets from its single
 transaction (collect_plugins.py:193-194) is emulated with staging
 directories renamed in one final pass.
 
+This module alone owns the published layout: which directories under
+a destination are tables (``published_tables``), which files of a
+table hold its data (``read_table``), and how a generation is staged
+and published (``write_table``, ``stage_tables``, ``swap_staging``).
+Every other module lists and reads through these.
+
 CSV cannot hold nested types; nested columns are JSON-stringified the
 way the reference's CSV type map does (type_converter.py:35-55,
 writer.py:130-146).
 
 Cloud paths (s3a://, gs://) work through the Hadoop filesystem — the
 reference's spool-and-upload dance (writer.py:187-219) disappears:
-``df.write`` resolves the scheme itself, and ``swap_staging`` routes
-its exists/rename/delete through the Hadoop FileSystem API whenever the
-destination is a URI (exercised in CI over ``file:`` URIs, which take
+``df.write`` resolves the scheme itself, and ``published_tables``,
+``read_table`` and ``swap_staging`` route their list/exists/rename/
+delete through the Hadoop FileSystem API whenever the destination is a
+URI (exercised in CI over ``file:`` URIs, which take
 the exact same FS-API path as ``s3a://`` minus the S3 connector —
 tests/test_sinks.py).  NOTE on object stores: S3 "rename" is
 copy+delete (not atomic, O(data)); for heavy S3 publishing prefer a
@@ -34,7 +41,6 @@ from typing import Callable, NamedTuple, TypeVar
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.utils import AnalysisException
 from pyspark.util import inheritable_thread_target
 
 STAGING_SUFFIX = "__staging"
@@ -65,10 +71,7 @@ class _HadoopFs:
         self._fs = self._Path(base).getFileSystem(hconf)
 
     def listdir(self, d: str) -> list[str]:
-        p = self._Path(d)
-        if not self._fs.exists(p):
-            return []
-        return [s.getPath().getName() for s in self._fs.listStatus(p)]
+        return [s.getPath().getName() for s in self._fs.listStatus(self._Path(d))]
 
     def isdir(self, p: str) -> bool:
         path = self._Path(p)
@@ -243,38 +246,63 @@ def stage_tables(spark: SparkSession, stages: list[Callable[[], R]]) -> list[R]:
     return [f.result() for f in futures]
 
 
+def published_tables(dest_dir: str, spark: SparkSession | None = None) -> set[str]:
+    """The tables published under ``dest_dir``: every directory except
+    the ``<t>__staging`` and ``<t>__old`` dirs of a publish (in flight,
+    or left by a crash) and ``_``-prefixed names other than
+    ``NODE_INDEX``.  A URI destination lists through the Hadoop
+    FileSystem of ``spark`` (else the active session)."""
+    fs = _fs(dest_dir, spark)
+    if not fs.isdir(dest_dir):
+        return set()
+    return {
+        e
+        for e in fs.listdir(dest_dir)
+        if fs.isdir(fs.join(dest_dir, e))
+        and not e.endswith((STAGING_SUFFIX, OLD_SUFFIX))
+        and (e == NODE_INDEX or not e.startswith("_"))
+    }
+
+
 def read_table(
     spark: SparkSession,
     dest_dir: str,
     table_name: str,
     fmt: str = "parquet",
-    schema: T.StructType | None = None,
+    schema: T.StructType | str | None = None,
 ) -> DataFrame:
-    """Read a published table back.  Text formats (csv/json) take the
-    explicit ``schema`` when given, else the zero-row ``_schema.parquet``
-    marker (``SCHEMA_MARKER``) ``write_table`` publishes INSIDE the
-    table directory, else inference — the ladder that keeps
-    timestamp/date/decimal columns typed across a JSON/CSV round-trip."""
-    path = os.path.join(dest_dir, table_name)
-    if fmt in ("csv", "json") and schema is None:
-        # the marker lives inside the table dir, so this resolves on
-        # any scheme df.write reached (local, file:, s3a://, ...) —
-        # a plain reader probe, no local-only os.path.exists
-        try:
-            schema = spark.read.parquet(
-                path.rstrip("/") + "/" + SCHEMA_MARKER
-            ).schema
-        except AnalysisException:
-            schema = None  # pre-marker table: fall through to inference
+    """Read a published table back by its data files: the entries of its
+    directory, listed through ``_fs`` (a plain path or a URI), whose
+    names do not start with ``_`` or ``.``.  Spark's ``DataSource``
+    treats a path named ``_…`` as hidden, so reading files rather than
+    the directory lets ``_node_index`` and the schema marker read like
+    any table.
+
+    The schema is the explicit ``schema`` when given, for every format
+    (a column the files lack reads as NULL); else, for text formats
+    (csv/json), the zero-row ``_schema.parquet`` marker
+    (``SCHEMA_MARKER``) ``write_table`` publishes inside the table
+    directory; else inference — the ladder that keeps
+    timestamp/date/decimal columns typed across a JSON/CSV round-trip.
+    A data file whose name does not carry ``fmt`` (``….snappy.parquet``,
+    ``….csv``) raises ``ValueError`` before any Spark job: files are
+    never filtered by extension, so a table published in another format
+    cannot read as empty.  A table with no data file reads as an empty
+    frame of ``schema``."""
+    fs = _fs(dest_dir, spark)
+    path = fs.join(dest_dir, table_name)
+    entries = sorted(fs.listdir(path))
+    files = [fs.join(path, e) for e in entries if not e.startswith(("_", "."))]
+    if wrong := [f for f in files if fmt not in f.rsplit("/", 1)[-1].split(".")[1:]]:
+        raise ValueError(f"{table_name} under {dest_dir} holds {wrong[0]}, which is not {fmt}")
+    if fmt in ("csv", "json") and schema is None and SCHEMA_MARKER in entries:
+        schema = read_table(spark, path, SCHEMA_MARKER).schema
+    if not files:
+        return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema or T.StructType())
+    reader = spark.read.format(fmt)
     if fmt == "csv":
-        r = spark.read.option("header", True)
-        r = r.schema(schema) if schema is not None else r.option("inferSchema", True)
-        return r.csv(path)
-    if fmt == "orc":
-        return spark.read.orc(path)
-    if fmt == "json":
-        r = spark.read
-        if schema is not None:
-            r = r.schema(schema)
-        return r.json(path)
-    return spark.read.parquet(path)
+        reader = reader.option("header", True).option("inferSchema", schema is None)
+    if schema is not None:
+        reader = reader.schema(schema)
+    # format().load(), not orc(*files): orc's second positional is mergeSchema
+    return reader.load(files)

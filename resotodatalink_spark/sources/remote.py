@@ -61,13 +61,6 @@ def _sink(dest_dir: str):
     return handle
 
 
-def _spooled(spark: SparkSession, dest_dir: str) -> GraphSource:
-    return GraphSource(
-        spark.read.parquet(os.path.join(dest_dir, "nodes")),
-        spark.read.parquet(os.path.join(dest_dir, "edges")),
-    )
-
-
 def stream_graph_dir(
     spark: SparkSession, src_dir: str, checkpoint_dir: str, dest_dir: str
 ) -> GraphSource:
@@ -81,7 +74,7 @@ def stream_graph_dir(
         .start()
         .awaitTermination()
     )
-    return _spooled(spark, dest_dir)
+    return read_spooled_graph(spark, dest_dir)
 
 
 def stream_graph_socket(
@@ -106,7 +99,10 @@ def stream_graph_socket(
 
 def read_spooled_graph(spark: SparkSession, dest_dir: str) -> GraphSource:
     """GraphSource over a spool produced by either stream adapter."""
-    return _spooled(spark, dest_dir)
+    return GraphSource(
+        spark.read.parquet(os.path.join(dest_dir, "nodes")),
+        spark.read.parquet(os.path.join(dest_dir, "edges")),
+    )
 
 
 def stitch(source: GraphSource) -> GraphSource:

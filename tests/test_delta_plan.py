@@ -1,7 +1,9 @@
 """The planned delta merge: Spark jobs per generation, untouched tables
 left unread, equivalence with a full resync over several generations,
 file counts held, a model that gained a property, nodes only the
-node index knows, a destination without an index, a full resync
+node index knows, a destination without an index, link pairs that
+share one truncated name, a destination published in another format,
+a full resync
 between deltas, a delta replayed after a crash during its publish, one
 publish call per generation with the node index last, a `file:` URI
 destination, and the concurrently staged writes: the
@@ -268,6 +270,69 @@ def test_delta_needs_a_node_index_beside_published_tables(spark, tmp_path, publi
     with pytest.raises(ValueError, match="collect_to_files"):
         sync_delta(spark, GraphSource.from_docs(spark, docs), example_model(), dest)
     assert {t: _mtimes(dest, t) for t in os.listdir(dest)} == before
+
+
+GATEWAY = "azure_network_application_gateway"
+GROUP = "azure_network_application_security_group"
+COLLIDED = "link_vm_azure_network_application"
+
+
+def _colliding_model() -> Model:
+    """``vm`` links to two kinds that agree in their first 25
+    characters, so both pairs map to one link table, ``COLLIDED``."""
+    kinds = [
+        *example_model().kinds.values(),
+        Kind("vm", bases=["resource"], aggregate_root=True,
+             successor_kinds={"default": [GATEWAY, GROUP]}),
+        Kind(GATEWAY, bases=["resource"], aggregate_root=True),
+        Kind(GROUP, bases=["resource"], aggregate_root=True),
+    ]
+    return Model({k.fqn: k for k in kinds})
+
+
+def test_link_pairs_with_one_truncated_name_share_the_table(spark, tmp_path):
+    """A full sync publishes the edges of both kind pairs that map to
+    one link name, and a delta that renames their source node equals a
+    fresh full sync of the final graph."""
+    dest, ref = str(tmp_path / "inc"), str(tmp_path / "ref")
+    model = _colliding_model()
+    docs = [_node("v1", "vm"), _node("g1", GATEWAY), _node("s1", GROUP),
+            _edge("v1", "g1"), _edge("v1", "s1")]
+    collect_to_files(spark, GraphSource.from_docs(spark, docs), model, dest)
+    assert _rows(spark, dest, COLLIDED) == [("v1", "g1"), ("v1", "s1")]
+    renamed = {**docs[0], "reported": {**docs[0]["reported"], "name": "renamed"}}
+    delta = [renamed, _edge("v1", "g1"), _edge("v1", "s1")]
+    sync_delta(spark, GraphSource.from_docs(spark, delta), model, dest)
+    final = [renamed, *docs[1:]]
+    collect_to_files(spark, GraphSource.from_docs(spark, final), model, ref)
+    for t in sorted(_tables(dest) | _tables(ref)):
+        assert _rows(spark, dest, t) == _rows(spark, ref, t), t
+
+
+def test_delta_into_a_destination_of_another_format_stages_nothing(spark, tmp_path):
+    """A delta into a destination published as CSV raises
+    ``ValueError`` naming the table before anything is staged: the
+    listing and every table's rows are unchanged."""
+    dest = str(tmp_path)
+    collect_to_files(
+        spark, GraphSource.from_docs(spark, example_docs()), example_model(), dest,
+        fmt="csv",
+    )
+
+    def state():
+        rows = {
+            t: sorted(map(tuple, read_table(spark, dest, t, fmt=fmt).collect()))
+            for t, fmt in [(NODE_INDEX, "parquet")]
+            + [(t, "csv") for t in os.listdir(dest) if t != NODE_INDEX]
+        }
+        return sorted(os.listdir(dest)), rows
+
+    before = state()
+    with pytest.raises(ValueError, match="some_volume"):
+        sync_delta(
+            spark, GraphSource.from_docs(spark, [_vol("v-123", 99)]), example_model(), dest
+        )
+    assert state() == before
 
 
 @pytest.mark.parametrize("keyword", ["swap", "node_index"])

@@ -1,12 +1,14 @@
-"""One publish protocol: the staged-publish names have one definition and
-two callers.
+"""One publish protocol, one owner of the published layout.
 
-``swap_staging`` and its ``STAGING_SUFFIX``/``OLD_SUFFIX`` directory
-names are defined in ``sinks/files.py`` and used only by the two sync
-entry points, ``operators/sync.collect_to_files`` and
+``swap_staging`` is defined in ``sinks/files.py`` and called only by the
+two sync entry points, ``operators/sync.collect_to_files`` and
 ``operators/incremental.sync_delta``.  A new module that stages and
 swaps its own tables would be a second publish path with its own crash
-window; this scan fails the moment one appears.  No Spark is needed.
+window.  The ``STAGING_SUFFIX``/``OLD_SUFFIX`` directory names are used
+by no module but ``sinks/files.py``, which lists and reads every
+generation (``published_tables``, ``read_table``): a module that
+matches them itself would be a second owner of the layout.  These
+scans fail the moment either appears.  No Spark is needed.
 """
 
 from __future__ import annotations
@@ -16,12 +18,11 @@ from pathlib import Path
 
 import resotodatalink_spark
 
-PUBLISH_NAMES = {"swap_staging", "STAGING_SUFFIX", "OLD_SUFFIX"}
 PACKAGE = Path(resotodatalink_spark.__file__).parent
 
 
-def _publish_sites() -> tuple[set[str], set[str]]:
-    """(modules that define a publish name, modules that use one), as
+def _publish_sites(names: set[str]) -> tuple[set[str], set[str]]:
+    """(modules that define one of ``names``, modules that use one), as
     paths relative to the package root.  A use is an import of the name
     or an attribute access ``<module>.<name>``."""
     defines, uses = set(), set()
@@ -35,18 +36,24 @@ def _publish_sites() -> tuple[set[str], set[str]]:
                 bound = {t.id for t in targets if isinstance(t, ast.Name)}
             else:
                 bound = set()
-            if bound & PUBLISH_NAMES:
+            if bound & names:
                 defines.add(rel)
             if isinstance(node, ast.ImportFrom) and {
                 a.name for a in node.names
-            } & PUBLISH_NAMES:
+            } & names:
                 uses.add(rel)
-            if isinstance(node, ast.Attribute) and node.attr in PUBLISH_NAMES:
+            if isinstance(node, ast.Attribute) and node.attr in names:
                 uses.add(rel)
     return defines, uses
 
 
 def test_staged_publish_has_one_definition_and_two_callers():
-    defines, uses = _publish_sites()
+    defines, uses = _publish_sites({"swap_staging"})
     assert defines == {"sinks/files.py"}
     assert uses == {"operators/sync.py", "operators/incremental.py"}
+
+
+def test_staging_dir_names_are_used_only_by_the_sink():
+    defines, uses = _publish_sites({"STAGING_SUFFIX", "OLD_SUFFIX"})
+    assert defines == {"sinks/files.py"}
+    assert uses == set()

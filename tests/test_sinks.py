@@ -5,10 +5,14 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from resotodatalink_spark.operators.flatten import sync_views
 from resotodatalink_spark.sinks.files import (
+    NODE_INDEX,
+    published_tables,
     read_table,
     swap_staging,
     write_table,
@@ -455,3 +459,60 @@ def test_collect_sql_fallback_keys_on_link_prefix():
     # a kind table whose name failed to match col_types' keying:
     # unsized write, NOT the link fragment
     assert pick(TEMP_PREFIX + "unmatched_kind", col_types) is None
+
+
+def _dest(tmp_path, kind):
+    """``tmp_path`` as a plain path or as a ``file:`` URI, which takes the
+    Hadoop FileSystem route an ``s3a://`` destination would."""
+    return str(tmp_path) if kind == "plain" else "file:" + str(tmp_path)
+
+
+def test_read_table_applies_schema_to_parquet(spark, tmp_path):
+    """An explicit ``schema`` shapes a parquet read too: its columns in
+    its order, and a column the files lack reads as NULL."""
+    dest = str(tmp_path)
+    write_table(spark.range(2).select("id", F.lit("a").alias("s")), dest, "t", staging=False)
+    schema = T.StructType(
+        [T.StructField("s", T.StringType()), T.StructField("id", T.LongType()),
+         T.StructField("gained", T.IntegerType())]
+    )
+    back = read_table(spark, dest, "t", schema=schema)
+    assert back.columns == ["s", "id", "gained"]
+    assert sorted(tuple(r) for r in back.collect()) == [("a", 0, None), ("a", 1, None)]
+
+
+@pytest.mark.parametrize("kind", ["plain", "uri"])
+def test_read_table_reads_the_node_index_by_its_data_files(spark, tmp_path, kind):
+    """``_node_index`` is a hidden name to Spark's ``DataSource``; the
+    sink reads it by its data files, on a plain path and on a URI."""
+    dest = _dest(tmp_path, kind)
+    index = spark.createDataFrame([("a", "k1"), ("b", "k2")], "id string, kind string")
+    write_table(index, dest, NODE_INDEX, staging=False)
+    back = read_table(spark, dest, NODE_INDEX)
+    assert sorted(tuple(r) for r in back.collect()) == [("a", "k1"), ("b", "k2")]
+    files = back.inputFiles()
+    assert files and all(f.endswith(".parquet") for f in files)
+
+
+def test_read_table_rejects_another_format_and_reads_an_empty_table(spark, tmp_path):
+    """A table published as CSV raises ``ValueError`` when read as
+    parquet, before any Spark job, instead of reading as empty; a table
+    dir with no data file reads as an empty frame of ``schema``."""
+    dest = str(tmp_path)
+    write_table(spark.range(2), dest, "t", fmt="csv", staging=False)
+    with pytest.raises(ValueError, match="not parquet"):
+        read_table(spark, dest, "t")
+    assert read_table(spark, dest, "t", fmt="csv").count() == 2
+    os.makedirs(os.path.join(dest, "none"))
+    empty = read_table(spark, dest, "none", schema="id string, kind string")
+    assert empty.columns == ["id", "kind"] and empty.count() == 0
+
+
+@pytest.mark.parametrize("kind", ["plain", "uri"])
+def test_published_tables_lists_tables_and_the_node_index(spark, tmp_path, kind):
+    for name in ("t", "t__staging", "u__old", NODE_INDEX, "_junk"):
+        os.makedirs(tmp_path / name)
+    (tmp_path / "loose_file").write_text("")
+    dest = _dest(tmp_path, kind)
+    assert published_tables(dest, spark) == {"t", NODE_INDEX}
+    assert published_tables(_dest(tmp_path / "missing", kind), spark) == set()
