@@ -288,14 +288,14 @@ def sync_delta(
             # brand-new table this generation (e.g. first node of a
             # kind): change-sized, one file
             if upserted.get(name):
-                write_table(dv.coalesce(1), dest_dir, name, staging=True)
+                write_table(dv.coalesce(1), dest_dir, name)
             return 0
         if name.startswith("link_"):
             sweeps = [("from_id", swept)] + ([("to_id", gone)] if deleted else [])
         else:
             sweeps = [("_id", swept)]
         merged, before, after = _merge(old, sweeps, dv)
-        path = write_table(merged, dest_dir, name, staging=True)
+        path = write_table(merged, dest_dir, name)
         removed = before.get["n"] - after.get["n"]
         if not (upserted.get(name) or removed):
             _fs(dest_dir, spark).rmtree(path)  # the plan could not rule it out; nothing changed
@@ -304,7 +304,7 @@ def sync_delta(
     def stage_index() -> None:
         # _node_index advances by the same merge algebra as the kind tables
         merged, _, _ = _merge(index, [("id", swept)], nodes)
-        write_table(merged, dest_dir, NODE_INDEX, staging=True)
+        write_table(merged, dest_dir, NODE_INDEX)
 
     names = sorted(set(kind_tables) | set(links) | on_disk)
     work = [n for n in names if n in affected]

@@ -93,10 +93,10 @@ def collect_to_files(
     stage_tables(
         spark,
         [
-            functools.partial(write_table, views[name], dest_dir, name, fmt=fmt, staging=True)
+            functools.partial(write_table, views[name], dest_dir, name, fmt=fmt)
             for name in tables
         ]
-        + [functools.partial(write_table, index, dest_dir, NODE_INDEX, staging=True)],
+        + [functools.partial(write_table, index, dest_dir, NODE_INDEX)],
     )
     for i in range(1, len(tables) + 1):
         feedback.progress_done("write_tables", i, len(tables))
@@ -120,12 +120,15 @@ def collect_sql(
     (``jdbc:derby:memory:``, tests/test_jdbc_derby.py).  The swap
     statements come from the URL's dialect — plain drop+rename by
     default, Snowflake's atomic SWAP WITH, Derby's RENAME TABLE — and
-    with ``run_swap`` they are executed over a live JDBC connection
-    (the reference's engine-side publish, sql.py:129-159); otherwise
-    they are returned for the caller to run.  ``drop_existing_tables``
-    (requires ``run_swap``) then drops every production table this
-    sync did NOT update — the reference's stale-table cleanup
-    (sql.py:147-151, update_sql's flag, collect_plugins.py:176-178)."""
+    with ``run_swap`` every table's statements run as one transaction
+    over a live JDBC connection (the reference's engine-side publish,
+    sql.py:129-159): all-or-nothing across the generation where DDL is
+    transactional (Derby, Postgres), per table on MySQL and Snowflake,
+    whose DDL commits implicitly.  Otherwise they are returned for the
+    caller to run.  ``drop_existing_tables`` (requires ``run_swap``)
+    then drops every production table this sync did NOT update — the
+    reference's stale-table cleanup (sql.py:147-151, update_sql's flag,
+    collect_plugins.py:176-178)."""
     from resotodatalink_spark.model.kinds import TEMP_PREFIX, get_table_name
     from resotodatalink_spark.sinks.dialects import dialect_for, jdbc_column_types
     from resotodatalink_spark.sinks.jdbc import (
@@ -137,17 +140,19 @@ def collect_sql(
     feedback = feedback or NoFeedback()
     views = sync_views(spark, source, model, temp_prefix=True)
     names = sorted(views)
+    dialect = dialect_for(url)
     # P9 on the production path: Spark's JDBC writer generates the
-    # DDL, so the width heuristic reaches it via the
+    # DDL, so the dialect's widths reach it via the
     # createTableColumnTypes option (kind tables from the model's
     # metadata; link tables are two id columns).
     col_types = {
         get_table_name(k.fqn, with_tmp_prefix=True): jdbc_column_types(
-            model, k.fqn
+            dialect, model, k.fqn
         )
         for k in model.table_kinds()
     }
-    link_types = "`from_id` VARCHAR(255), `to_id` VARCHAR(255)"
+    id_type = dialect.string_type(None)
+    link_types = id_type and f"`from_id` {id_type}, `to_id` {id_type}"
     for i, name in enumerate(names, 1):
         # The link-table fragment applies ONLY to names carrying the
         # link-table convention (link_<from>_<to>); any other name
@@ -163,7 +168,6 @@ def collect_sql(
             column_types=col_types.get(name, link_types if is_link else None),
         )
         feedback.progress_done("write_jdbc", i, len(names))
-    dialect = dialect_for(url)
     stmts: list[str] = []
     updated: set[str] = set()
     for name in names:

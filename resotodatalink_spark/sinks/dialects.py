@@ -1,27 +1,24 @@
-"""Sink dialect registry + SQL statement generators (K3/K4/U2).
+"""Sink dialect registry: the publish statements and string widths of
+each JDBC engine (K4/U2).
 
 The reference dispatches database-specific behavior through a
 ``DialectUpdater`` registry keyed by SQLAlchemy dialect name (reference
 sql.py:264-272) with Snowflake as the one shipped specialization
 (reference snowflake.py:49-92).  This module is the Spark-side
 equivalent: a registry keyed by dialect name, resolved from a JDBC URL
-scheme, where each dialect contributes
+scheme, where each dialect contributes exactly what
+``operators/sync.collect_sql`` runs:
 
-* a kind -> SQL column type mapping (reference ``kind_to_snowflake_type``,
-  snowflake.py:20-46 — with its substring-equality bug FIXED: the
-  reference tests ``kind_name in "float"``, so any substring like
-  ``"loa"`` or ``"t"`` silently maps to Float; here comparisons are
-  equality, unknown kinds raise),
-* a DataFrame ``prepare`` step (how nested types are shipped), and
-* statement generators (CREATE TABLE, batch INSERT, the tmp-table swap)
-  that are unit-testable without a database server.
+* ``swap_sql``, the tmp -> prod publish statements of one table, which
+  ``sinks.jdbc.execute_statements`` runs as one JDBC transaction, and
+* ``string_type``, the P9 VARCHAR width of a string column, which
+  ``jdbc_column_types`` hands to Spark's JDBC writer as
+  ``createTableColumnTypes``.
 
-Snowflake needs the special INSERT (reference snowflake.py:61-88):
-VARIANT/ARRAY/OBJECT columns can't be bound as parameters, so nested
-values are JSON-encoded client-side and re-parsed server-side:
-
-    INSERT INTO tbl (col_string, col_json)
-    SELECT column1, parse_json(column2) FROM VALUES (?, ?), ...
+Spark's JDBC writer generates every CREATE TABLE and INSERT itself
+(the reference hands both to SQLAlchemy, sql.py:182-188, 245-261), and
+nested values ship as JSON text (``sinks.files.stringify_nested``), on
+Snowflake too.
 
 Custom dialects register with ``@register_dialect`` (the reference's
 ``DialectUpdater["name"] = cls`` extension point, U2).
@@ -31,52 +28,23 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame
-
 from resotodatalink_spark.model.kinds import Model
-from resotodatalink_spark.sinks.files import stringify_nested
 
-_DICT_RE = re.compile(r"^dictionary\[\s*(.+?)\s*,\s*(.+)\s*\]$")
-
-
-def _is_nested(model: Model, kind_name: str) -> bool:
-    """Array / dict / any / complex kinds ship as JSON (the reference's
-    ARRAY/OBJECT cases, snowflake.py:25-29,43-44)."""
-    if "[]" in kind_name or kind_name.startswith("dict") or kind_name == "any":
-        return True
-    kind = model.kinds.get(kind_name)
-    if kind is None:
-        return False
-    if kind.runtime_kind is not None:
-        return _is_nested(model, kind.runtime_kind)
-    return bool(kind.properties)
+# P9 (reference sql.py:92-100, pinned by sql_test.py:34-38): these
+# kinds size their column from the property's ``metadata["len"]``.
+_SIZED_KINDS = ("string", "duration")
 
 
 class SqlDialect:
-    """Default ANSI-ish dialect: nested values as JSON TEXT, plain
-    parameterized INSERT."""
+    """Default ANSI dialect: drop+rename publish, P9 VARCHAR widths."""
 
     name = "default"
 
-    _SCALARS = {
-        "int32": "INTEGER",
-        "int64": "BIGINT",
-        "float": "REAL",
-        "double": "DOUBLE PRECISION",
-        "boolean": "BOOLEAN",
-        "datetime": "TIMESTAMP",
-        "date": "DATE",
-        "any": "TEXT",
-    }
-
-    # P9 (reference sql.py:92-100, pinned by sql_test.py:34-38):
-    # string/duration columns size power-of-2 from the property's
-    # ``metadata["len"]`` — <=32 -> VARCHAR(32), 32..1024 -> next
-    # power of two, >1024 -> the dialect's unbounded text type; no
-    # length metadata -> VARCHAR(255).
-    _SIZED_KINDS = ("string", "duration")
-
-    def string_type(self, length: int | None) -> str:
+    def string_type(self, length: int | None) -> str | None:
+        """P9 width: <=32 -> VARCHAR(32), 32..1024 -> the next power of
+        two, no length metadata -> VARCHAR(255), >1024 -> None (no
+        override: the engine's unbounded default applies, since Spark's
+        DDL parser accepts VARCHAR(n) but not TEXT or CLOB)."""
         # isinstance guard mirrors the reference (sql.py:92-100):
         # malformed model metadata (e.g. a string '34') degrades to
         # the default width instead of crashing DDL generation.
@@ -84,71 +52,15 @@ class SqlDialect:
         if not isinstance(length, int) or isinstance(length, bool):
             return "VARCHAR(255)"
         if length > 1024:
-            return self.text_type()
+            return None
         width = 32
         while width < length:
             width *= 2
         return f"VARCHAR({width})"
 
-    def text_type(self) -> str:
-        """Unbounded text for >1024-char strings (and JSON blobs via
-        nested_type) — per-dialect: TEXT / CLOB / STRING."""
-        return "TEXT"
-
-    def column_type(
-        self, model: Model, kind_name: str, metadata: dict | None = None
-    ) -> str:
-        if "[]" in kind_name or kind_name.startswith("dict"):
-            return self.nested_type()
-        if kind_name in self._SIZED_KINDS:
-            return self.string_type((metadata or {}).get("len"))
-        if kind_name in self._SCALARS:
-            return self._SCALARS[kind_name]
-        kind = model.kinds.get(kind_name)
-        if kind is not None and kind.runtime_kind is not None:
-            return self.column_type(model, kind.runtime_kind, metadata)
-        if kind is not None and kind.properties:
-            return self.nested_type()
-        raise ValueError(f"Not able to handle kind {kind_name}")
-
-    def nested_type(self) -> str:
-        return self.text_type()
-
-    def quote_ident(self, name: str) -> str:
-        """Column-identifier quoting hook.  Default: bare (sqlite and
-        friends accept ``_id``); engines whose parsers reject
-        leading-underscore identifiers (Derby) quote here."""
-        return name
-
-    def prepare(self, df: DataFrame) -> DataFrame:
-        """Nested Spark types -> JSON strings before the JDBC write."""
-        return stringify_nested(df)
-
-    @staticmethod
-    def _unpack_prop(p) -> tuple[str, str, dict | None]:
-        """props entries are (name, kind) pairs or (name, kind,
-        metadata) triples — the triple form carries Property.metadata
-        so string columns can size per the P9 heuristic."""
-        return p[0], p[1], (p[2] if len(p) > 2 else None)
-
-    def create_table_sql(self, table: str, props, model: Model) -> str:
-        cols = ", ".join(
-            f"{self.quote_ident(name)} {self.column_type(model, kind, meta)}"
-            for name, kind, meta in map(self._unpack_prop, props)
-        )
-        return f"CREATE TABLE IF NOT EXISTS {table} ({cols})"
-
-    def insert_sql(self, table: str, props, model: Model, n_rows: int = 1) -> str:
-        names = ", ".join(
-            self.quote_ident(name) for name, _, _ in map(self._unpack_prop, props)
-        )
-        row = "(" + ", ".join("?" for _ in props) + ")"
-        rows = ", ".join(row for _ in range(n_rows))
-        return f"INSERT INTO {table} ({names}) VALUES {rows}"
-
     def swap_sql(self, tmp_table: str, prod_table: str) -> list[str]:
         """tmp -> prod publish statements (reference sql.py:129-159
-        drop+rename; executed for real in tests/test_jdbc_sqlite.py)."""
+        drop+rename)."""
         return [
             f"DROP TABLE IF EXISTS {prod_table}",
             f"ALTER TABLE {tmp_table} RENAME TO {prod_table}",
@@ -156,63 +68,21 @@ class SqlDialect:
 
 
 class SnowflakeDialect(SqlDialect):
-    """Snowflake: ARRAY/OBJECT columns + INSERT ... SELECT parse_json
-    (reference snowflake.py:20-88, substring bug fixed)."""
+    """Snowflake: unbounded strings and an atomic SWAP WITH publish
+    (reference snowflake.py:20-92).  Snowflake DDL commits implicitly,
+    so its publish stays atomic per table, not per generation."""
 
     name = "snowflake"
 
-    _SCALARS = {
-        "int32": "INTEGER",
-        "int64": "INTEGER",
-        "float": "FLOAT",
-        "double": "FLOAT",
-        "boolean": "BOOLEAN",
-        "string": "STRING",
-        "duration": "STRING",
-        "datetime": "STRING",
-        "date": "STRING",
-    }
-
-    def column_type(
-        self, model: Model, kind_name: str, metadata: dict | None = None
-    ) -> str:
-        # Snowflake keeps plain STRING regardless of metadata.len —
+    def string_type(self, length: int | None) -> str | None:
         # the reference's snowflake mapper has no width heuristic
-        # (snowflake.py:37-38 vs sql.py:92-100).
-        if "[]" in kind_name:
-            return "ARRAY"
-        if kind_name.startswith("dict") or kind_name == "any":
-            return "OBJECT"
-        if kind_name in self._SCALARS:
-            return self._SCALARS[kind_name]
-        kind = model.kinds.get(kind_name)
-        if kind is not None and kind.runtime_kind is not None:
-            return self.column_type(model, kind.runtime_kind, metadata)
-        if kind is not None and kind.properties:
-            return "OBJECT"
-        raise ValueError(f"Not able to handle kind {kind_name}")
-
-    def insert_sql(self, table: str, props, model: Model, n_rows: int = 1) -> str:
-        """The reference's structured-insert shape (snowflake.py:66-88):
-        positional column1..N aliases from VALUES, nested columns routed
-        through parse_json server-side."""
-        unpacked = [self._unpack_prop(p) for p in props]
-        names = ", ".join(name for name, _, _ in unpacked)
-        selects = ", ".join(
-            f"parse_json(column{i + 1})" if _is_nested(model, kind) else f"column{i + 1}"
-            for i, (_, kind, _) in enumerate(unpacked)
-        )
-        row = "(" + ", ".join("?" for _ in props) + ")"
-        rows = ", ".join(row for _ in range(n_rows))
-        return (
-            f"INSERT INTO {table} ({names}) SELECT {selects} FROM VALUES {rows}"
-        )
+        # (snowflake.py:37-38 vs sql.py:92-100): plain STRING
+        return None
 
     def swap_sql(self, tmp_table: str, prod_table: str) -> list[str]:
-        """Snowflake publishes atomically with SWAP WITH when the prod
-        table exists (one statement, both tables exchange identities —
-        no drop window); first sync falls back to rename-if-absent via
-        the guarded pair."""
+        """SWAP WITH exchanges both tables' identities in one statement
+        (no drop window); the first sync creates an empty prod table to
+        swap with."""
         return [
             f"CREATE TABLE IF NOT EXISTS {prod_table} LIKE {tmp_table}",
             f"ALTER TABLE {tmp_table} SWAP WITH {prod_table}",
@@ -220,41 +90,14 @@ class SnowflakeDialect(SqlDialect):
         ]
 
 
-class PostgresDialect(SqlDialect):
-    """PostgreSQL (reference engine via SQLAlchemy, README/pyproject
-    extras): nested values as JSONB (indexable, unlike TEXT), and the
-    tmp->prod publish wrapped in ONE transaction — Postgres DDL is
-    transactional, so the swap is genuinely atomic across ALL tables
-    of a sync, matching the reference's single-transaction publish
-    (collect_plugins.py:193-194) rather than per-table rename windows."""
-
-    name = "postgresql"
-
-    def nested_type(self) -> str:
-        return "JSONB"
-
-    def swap_sql(self, tmp_table: str, prod_table: str) -> list[str]:
-        return [
-            "BEGIN",
-            f"DROP TABLE IF EXISTS {prod_table}",
-            f"ALTER TABLE {tmp_table} RENAME TO {prod_table}",
-            "COMMIT",
-        ]
-
-
 class MySQLDialect(SqlDialect):
-    """MySQL/MariaDB (reference engine via SQLAlchemy): nested values
-    as native JSON, and the publish uses MySQL's atomic multi-table
-    ``RENAME TABLE old-out, new-in`` — both renames in one statement,
-    so readers never observe the table missing (the gap the plain
-    drop+rename swap has)."""
+    """MySQL/MariaDB (reference engine via SQLAlchemy): the publish uses
+    MySQL's atomic multi-table ``RENAME TABLE old-out, new-in``, so
+    readers never observe the table missing.  MySQL DDL commits
+    implicitly, so the publish stays atomic per table, not per
+    generation."""
 
     name = "mysql"
-
-    _SCALARS = dict(SqlDialect._SCALARS, double="DOUBLE", datetime="DATETIME")
-
-    def nested_type(self) -> str:
-        return "JSON"
 
     def swap_sql(self, tmp_table: str, prod_table: str) -> list[str]:
         trash = f"{prod_table}__old"
@@ -268,44 +111,13 @@ class MySQLDialect(SqlDialect):
 
 class DerbyDialect(SqlDialect):
     """Apache Derby (the engine embedded in Spark's own classpath for
-    the Hive metastore) — used as a LIVE second engine in CI: Derby has
-    no TEXT type, no ``IF [NOT] EXISTS`` guards, and renames with
-    ``RENAME TABLE`` instead of ``ALTER TABLE`` (the exact ANSI drift
-    the reference's DialectUpdater registry exists for, sql.py:264-272).
-    Executed for real in tests/test_jdbc_derby.py via
-    ``jdbc:derby:memory:``."""
+    the Hive metastore) — used as a LIVE engine in CI: Derby has no
+    ``IF [NOT] EXISTS`` guards and renames with ``RENAME TABLE`` instead
+    of ``ALTER TABLE`` (the ANSI drift the reference's DialectUpdater
+    registry exists for, sql.py:264-272).  Executed for real in
+    tests/test_jdbc_derby.py via ``jdbc:derby:memory:``."""
 
     name = "derby"
-
-    _SCALARS = {
-        "int32": "INTEGER",
-        "int64": "BIGINT",
-        "float": "REAL",
-        "double": "DOUBLE",
-        "boolean": "BOOLEAN",
-        "datetime": "TIMESTAMP",
-        "date": "DATE",
-        "any": "VARCHAR(32672)",
-    }
-
-    def text_type(self) -> str:
-        return "CLOB"  # Derby has no TEXT; CLOB accepts setString
-
-    def nested_type(self) -> str:
-        return "VARCHAR(32672)"  # Derby max VARCHAR; no TEXT type
-
-    def quote_ident(self, name: str) -> str:
-        # Derby's parser rejects leading-underscore identifiers (_id)
-        # unless delimited — same quoting Spark's JDBC writer applies
-        return f'"{name}"'
-
-    def create_table_sql(self, table: str, props, model: Model) -> str:
-        # Derby has no CREATE TABLE IF NOT EXISTS
-        cols = ", ".join(
-            f"{self.quote_ident(name)} {self.column_type(model, kind, meta)}"
-            for name, kind, meta in map(self._unpack_prop, props)
-        )
-        return f"CREATE TABLE {table} ({cols})"
 
     def swap_sql(self, tmp_table: str, prod_table: str) -> list[str]:
         """No DROP IF EXISTS in Derby: the first publish's DROP fails
@@ -326,41 +138,23 @@ def _resolve_scalar(model: Model, kind_name: str) -> str:
 
 
 def jdbc_column_types(
-    model: Model, kind_name: str, with_id: bool = True
+    dialect: SqlDialect, model: Model, kind_name: str, with_id: bool = True
 ) -> str | None:
-    """Spark JDBC ``createTableColumnTypes`` fragment applying the P9
-    width heuristic on the PRODUCTION write path (``write_jdbc`` ->
-    ``df.write.jdbc``, where Spark generates the DDL and would emit
-    its dialect default — TEXT/CLOB — for every string column).
-
-    Only VARCHAR widths are expressible: Spark validates the option
-    value with its own DDL parser, which accepts VARCHAR(n) but not
-    engine types like TEXT or CLOB, so >1024-length strings are
-    OMITTED (the dialect default is the unbounded type anyway — the
-    same outcome the full heuristic picks).  The widths come from the
-    SAME ``SqlDialect.string_type`` the per-dialect DDL uses — one
-    heuristic, two surfaces.  Returns None when no column needs an
-    override."""
-    base = DIALECTS["default"]
-    parts = []
-    for name, kind, meta in ddl_props(model, kind_name, with_id):
-        if _resolve_scalar(model, kind) not in SqlDialect._SIZED_KINDS:
-            continue
-        t = base.string_type((meta or {}).get("len"))
-        if t.startswith("VARCHAR"):
-            parts.append(f"`{name}` {t}")
-    return ", ".join(parts) if parts else None
-
-
-def ddl_props(
-    model: Model, kind_name: str, with_id: bool = True
-) -> list[tuple[str, str, dict | None]]:
-    """(name, kind, metadata) triples for ``create_table_sql`` from
-    the model's flattened properties — the production path that feeds
-    ``Property.metadata`` (and with it the P9 width heuristic) into
-    the DDL, reference sql.py:182-188 + 92-100."""
+    """Spark JDBC ``createTableColumnTypes`` fragment that applies the
+    dialect's P9 widths (``string_type``) to the string columns of
+    ``kind_name``'s table, from the model's property metadata (reference
+    sql.py:182-188 + 92-100).  Without it Spark's writer gives every
+    string column the engine's unbounded default.  Returns None when no
+    column needs an override (always, on Snowflake)."""
     props, _ = model.kind_properties(model.kinds[kind_name], with_id=with_id)
-    return [(p.name, p.kind, p.metadata) for p in props]
+    parts = []
+    for p in props:
+        if _resolve_scalar(model, p.kind) not in _SIZED_KINDS:
+            continue
+        t = dialect.string_type((p.metadata or {}).get("len"))
+        if t is not None:
+            parts.append(f"`{p.name}` {t}")
+    return ", ".join(parts) if parts else None
 
 
 DIALECTS: dict[str, SqlDialect] = {}
@@ -375,17 +169,16 @@ def register_dialect(dialect: type[SqlDialect]) -> type[SqlDialect]:
 
 register_dialect(SqlDialect)
 register_dialect(SnowflakeDialect)
-register_dialect(PostgresDialect)
 register_dialect(MySQLDialect)
 register_dialect(DerbyDialect)
 
 
 def dialect_for(url_or_name: str) -> SqlDialect:
-    """Resolve a dialect from a name or JDBC URL.  ``jdbc:postgresql://``
-    -> "postgresql"; subprotocol-only URLs like ``jdbc:derby:memory:x``
+    """Resolve a dialect from a name or JDBC URL.  ``jdbc:mysql://``
+    -> "mysql"; subprotocol-only URLs like ``jdbc:derby:memory:x``
     (no ``//``) resolve on the token after ``jdbc:``; unknown dialects
-    get the default (reference sql.py:268-271
-    ``DialectUpdater.get(..., SqlDefaultUpdater)``)."""
+    (Postgres and sqlite among them) get the default (reference
+    sql.py:268-271 ``DialectUpdater.get(..., SqlDefaultUpdater)``)."""
     name = url_or_name
     if "://" in name or name.startswith("jdbc:"):
         m = re.match(r"^(?:jdbc:)?([a-zA-Z0-9_+-]+)://", name) or re.match(

@@ -104,12 +104,11 @@ def write_table(
     dest_dir: str,
     table_name: str,
     fmt: str = "parquet",
-    staging: bool = True,
 ) -> str:
-    """Write one table under ``dest_dir``; with ``staging`` the data
-    lands in ``<table>__staging`` until ``swap_staging`` publishes it."""
-    name = table_name + STAGING_SUFFIX if staging else table_name
-    path = os.path.join(dest_dir, name)
+    """Stage one table under ``dest_dir``: the data lands in
+    ``<table>__staging`` until ``swap_staging`` publishes it.  Returns
+    the staged path."""
+    path = os.path.join(dest_dir, table_name + STAGING_SUFFIX)
     if fmt == "csv":
         flat = stringify_nested(df)
         flat.write.mode("overwrite").option("header", True).csv(path)

@@ -3,51 +3,45 @@
 The reference chunks INSERT statements at ``insert_batch_size`` (5000,
 sql.py:173); Spark's JDBC writer does the same via ``batchsize`` with
 one connection per partition, so ingest parallelism scales with the
-DataFrame's partitioning instead of a single connection.
+DataFrame's partitioning instead of a single connection.  Spark's
+writer also generates the CREATE TABLE; nested values ship as JSON
+text (``sinks.files.stringify_nested``).
 
-Dialect-specific behavior (column types, how nested values ship,
-statement shapes) lives in the ``sinks.dialects`` registry (reference
-DialectUpdater, sql.py:264-272; Snowflake specialization
-snowflake.py:49-92) — ``write_jdbc`` resolves the dialect from the URL
-and applies its ``prepare`` step before the write.
-
-The write path IS executed in CI against Apache Derby — the embedded
-engine already on Spark's classpath for the Hive metastore — via
-``jdbc:derby:memory:`` URLs (tests/test_jdbc_derby.py), and the
-statement generators additionally run against stdlib sqlite3
-(tests/test_jdbc_sqlite.py).  ``execute_statements`` runs swap/DDL
-over a live ``java.sql.Connection`` from the driver JVM — the analog
-of the reference's engine-side swap execution (sql.py:129-159).
+``operators/sync.collect_sql`` is the one caller: it writes each tmp
+table with ``write_jdbc``, then runs the publish statements of the
+URL's dialect (``sinks.dialects``, the reference's DialectUpdater,
+sql.py:264-272) through ``execute_statements`` over a live
+``java.sql.Connection`` from the driver JVM — the analog of the
+reference's engine-side swap (sql.py:129-159).  Both run in CI against
+Apache Derby, the embedded engine already on Spark's classpath for the
+Hive metastore, via ``jdbc:derby:memory:`` URLs
+(tests/test_jdbc_derby.py).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from resotodatalink_spark.sinks.dialects import dialect_for
+from resotodatalink_spark.sinks.files import stringify_nested
 
 
 def write_jdbc(
     df: DataFrame,
     url: str,
     table: str,
-    mode: str = "overwrite",
     batch_size: int = 5000,
-    properties: dict[str, str] | None = None,
-    stringify: bool = True,
     column_types: str | None = None,
 ) -> None:
-    """``df.write.jdbc`` with dialect prepare; ``column_types`` is a
-    Spark ``createTableColumnTypes`` fragment (see
-    ``dialects.jdbc_column_types``) that makes the P9 VARCHAR width
-    heuristic govern the DDL Spark generates — without it every string
-    column gets the JDBC dialect's unbounded default."""
-    props = {"batchsize": str(batch_size), **(properties or {})}
-    out = dialect_for(url).prepare(df) if stringify else df
-    w = out.write
+    """Overwrite ``table`` with ``df`` through ``df.write.jdbc``, nested
+    columns as JSON text.  ``column_types`` is a Spark
+    ``createTableColumnTypes`` fragment (see
+    ``dialects.jdbc_column_types``) that makes the P9 VARCHAR widths
+    govern the DDL Spark generates — without it every string column
+    gets the engine's unbounded default."""
+    w = stringify_nested(df).write
     if column_types:
         w = w.option("createTableColumnTypes", column_types)
-    w.jdbc(url=url, table=table, mode=mode, properties=props)
+    w.jdbc(url=url, table=table, mode="overwrite", properties={"batchsize": str(batch_size)})
 
 
 def execute_statements(
@@ -56,24 +50,33 @@ def execute_statements(
     statements: list[str],
     tolerate_sqlstates: tuple[str, ...] = ("42Y55",),
 ) -> list[str]:
-    """Execute DDL/DML statements over a live JDBC connection obtained
-    from the driver JVM's ``DriverManager`` (how the reference's engine
-    connection runs the swap, sql.py:129-159).  Driver-side on purpose:
-    swap/DDL is a handful of metadata statements, not data movement —
-    the data went through ``write_jdbc``'s distributed path.
+    """Execute DDL/DML statements as ONE JDBC transaction over a live
+    connection from the driver JVM's ``DriverManager`` (how the
+    reference's engine connection runs the swap, sql.py:129-159).
+    Driver-side on purpose: the swap is a handful of metadata
+    statements, not data movement — the data went through
+    ``write_jdbc``'s distributed path.
+
+    Autocommit is off and the transaction commits after the last
+    statement; any failure raised rolls it back before the connection
+    closes.  On an engine with transactional DDL (Derby, Postgres) a
+    publish is therefore all-or-nothing across every table of the
+    generation.  MySQL and Snowflake commit each DDL statement
+    implicitly, so there the publish stays atomic per table only.
 
     ``tolerate_sqlstates`` skips engines' missing-object errors where
     the dialect has no ``IF EXISTS`` guard (Derby 42Y55) — but ONLY on
-    ``DROP`` statements, which are the guardless case.  A RENAME that
-    hits the same state (e.g. the tmp table is missing after a partial
-    prior run) is a failed publish, not a benign first-run drop, and
-    must raise rather than let the old generation silently stay live.
-    Anything else re-raises.  Returns the statements that actually
-    executed."""
+    ``DROP`` statements, which are the guardless case, and without
+    ending the transaction.  A RENAME that hits the same state (e.g. the
+    tmp table is missing after a partial prior run) is a failed publish,
+    not a benign first-run drop, and must raise rather than let the old
+    generation silently stay live.  Anything else re-raises.  Returns
+    the statements that actually executed."""
     jvm = spark._jvm
     conn = jvm.java.sql.DriverManager.getConnection(url)
     executed: list[str] = []
     try:
+        conn.setAutoCommit(False)
         st = conn.createStatement()
         for s in statements:
             try:
@@ -89,6 +92,10 @@ def execute_statements(
                 is_drop = s.lstrip().upper().startswith("DROP ")
                 if not is_drop or state not in tolerate_sqlstates:
                     raise
+        conn.commit()
+    except BaseException:
+        conn.rollback()
+        raise
     finally:
         conn.close()
     return executed
@@ -96,8 +103,7 @@ def execute_statements(
 
 def list_jdbc_tables(spark: SparkSession, url: str) -> list[str]:
     """Table names visible through JDBC metadata, lowercased (Derby
-    reports unquoted identifiers uppercase) — the input
-    ``swap_temp_tables_sql`` expects, mirroring the reference's
+    reports unquoted identifiers uppercase), mirroring the reference's
     pre-swap metadata reflection (sql.py:129-143).
 
     Enumeration is scoped to the connection's CURRENT schema (the
@@ -120,30 +126,3 @@ def list_jdbc_tables(spark: SparkSession, url: str) -> list[str]:
         return sorted(out)
     finally:
         conn.close()
-
-
-def swap_temp_tables_sql(
-    tables: list[str],
-    temp_prefix: str = "tmp_",
-    drop_existing_tables: bool = False,
-) -> list[str]:
-    """The DDL the reference's swap performs (sql.py:129-159), emitted
-    as statements for the target database to run: each staged ``tmp_*``
-    table replaces its production counterpart atomically-per-table, and
-    with ``drop_existing_tables`` any production table that was NOT
-    updated this sync is dropped as stale (reference sql.py:147-151;
-    golden-tested against stdlib sqlite3 in tests/test_jdbc_sqlite.py)."""
-    stmts = []
-    updated = set()
-    for t in tables:
-        if not t.startswith(temp_prefix):
-            continue
-        prod = t[len(temp_prefix):]
-        updated.add(prod)
-        stmts.append(f"DROP TABLE IF EXISTS {prod}")
-        stmts.append(f"ALTER TABLE {t} RENAME TO {prod}")
-    if drop_existing_tables:
-        for t in tables:
-            if not t.startswith(temp_prefix) and t not in updated:
-                stmts.append(f"DROP TABLE IF EXISTS {t}")
-    return stmts

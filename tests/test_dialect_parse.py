@@ -1,23 +1,17 @@
-"""Grammar validation for the never-executed SQL dialects.
+"""Grammar validation for the publish statements of engines with no
+live server in CI.
 
-Postgres/MySQL/Snowflake have no live engine in this sandbox (the
-round-5 judge's missing item 2), so every statement the generators
-render (sinks/dialects.py create/insert/swap surface) is pushed
-through a real parser instead of string goldens:
+MySQL/Snowflake (and Postgres, which takes the default dialect) have no
+live engine here, so every statement a dialect's ``swap_sql`` renders
+(the only SQL ``collect_sql`` hands to ``execute_statements``) is
+pushed through a real parser instead of string goldens:
 
 * DuckDB's parser is PostgreSQL-derived — ``extract_statements`` is a
-  parse-only gate (no bind/execute), so the full Postgres set, the
-  ANSI default set, and the ANSI-shaped subset of MySQL/Snowflake/
-  Derby statements must parse verbatim.
+  parse-only gate (no bind/execute), so the ANSI-shaped statements of
+  every dialect must parse verbatim.
 * Engine-specific statements DuckDB's grammar lacks (``RENAME TABLE``,
-  ``SWAP WITH``, ``CREATE TABLE .. LIKE``, Snowflake's bare
-  ``FROM VALUES``) are validated two ways: an anchored regex pinned to
-  the target engine's documented grammar, and — where a mechanical
-  transliteration to PG syntax exists (``FROM VALUES`` ->
-  ``FROM (VALUES ..)``, type keyword ``ARRAY`` -> placeholder) — a
-  DuckDB parse of the transliterated statement so the interior
-  (select list, placeholder arity, identifier quoting) is still
-  parser-checked, not regexed.
+  ``SWAP WITH``, ``CREATE TABLE .. LIKE``) are validated by an anchored
+  regex pinned to the target engine's documented grammar.
 """
 
 from __future__ import annotations
@@ -27,38 +21,7 @@ import re
 import duckdb
 import pytest
 
-from resotodatalink_spark.model.kinds import Kind, Model, Property
 from resotodatalink_spark.sinks.dialects import DIALECTS
-from resotodatalink_spark.sinks.jdbc import swap_temp_tables_sql
-
-# Representative property surface: every scalar kind the compilers
-# map, plus array / dict / nested-object columns and the
-# leading-underscore identifier that forces quoting on Derby.
-_MODEL = Model(
-    {
-        "string": Kind("string"),
-        "inner": Kind(
-            "inner",
-            properties=[Property("a", "string")],
-            bases=[],
-        ),
-    }
-)
-_PROPS = [
-    ("_id", "string"),
-    ("cores", "int32"),
-    ("size", "int64"),
-    ("ratio", "double"),
-    ("frac", "float"),
-    ("ok", "boolean"),
-    ("name", "string"),
-    ("created", "datetime"),
-    ("day", "date"),
-    ("tags", "dict[string, string]"),
-    ("labels", "string[]"),
-    ("nested", "inner"),
-    ("anything", "any"),
-]
 
 _IDENT = r'(?:"[A-Za-z_]\w*"|[A-Za-z_]\w*)'
 # Engine-specific grammars DuckDB cannot parse, anchored end-to-end.
@@ -66,7 +29,6 @@ _ENGINE_SPECIFIC = {
     "snowflake": [
         rf"^ALTER TABLE {_IDENT} SWAP WITH {_IDENT}$",
         rf"^CREATE TABLE IF NOT EXISTS {_IDENT} LIKE {_IDENT}$",
-        rf"^INSERT INTO {_IDENT} \([^()]+\) SELECT (?:parse_json\(column\d+\)|column\d+)(?:, (?:parse_json\(column\d+\)|column\d+))* FROM VALUES \(\?(?:, \?)*\)(?:, \(\?(?:, \?)*\))*$",
     ],
     "mysql": [
         rf"^RENAME TABLE {_IDENT} TO {_IDENT}(?:, {_IDENT} TO {_IDENT})*$",
@@ -78,83 +40,14 @@ _ENGINE_SPECIFIC = {
 }
 
 
-def _all_statements(dialect) -> list[str]:
-    return [
-        dialect.create_table_sql("tmp_t", _PROPS, _MODEL),
-        dialect.insert_sql("tmp_t", _PROPS, _MODEL, n_rows=1),
-        dialect.insert_sql("tmp_t", _PROPS, _MODEL, n_rows=3),
-        *dialect.swap_sql("tmp_t", "t"),
-    ]
-
-
 def _duckdb_parses(sql: str) -> None:
     stmts = duckdb.connect().extract_statements(sql)  # raises on bad syntax
     assert len(stmts) == 1, f"expected one statement, got {len(stmts)}: {sql}"
 
 
-def _transliterate_for_pg(name: str, sql: str) -> str | None:
-    """Mechanical engine->PG syntax shims that keep the statement's
-    interior intact; None if no shim reaches PG grammar."""
-    out = sql
-    if name == "snowflake":
-        # bare FROM VALUES -> parenthesized derived table; ARRAY is a
-        # reserved word in DuckDB's grammar (type position only)
-        m = re.match(r"^(.*) FROM VALUES (.*)$", out)
-        if m:
-            out = f"{m.group(1)} FROM (VALUES {m.group(2)})"
-        out = re.sub(r"\bARRAY\b", "JSON", out)
-    if re.search(r"\b(RENAME TABLE|SWAP WITH|LIKE tmp_t)\b", out):
-        return None
-    return out
-
-
 @pytest.mark.parametrize("name", sorted(DIALECTS))
 def test_every_rendered_statement_parses(name):
-    dialect = DIALECTS[name]
     specific = [re.compile(p) for p in _ENGINE_SPECIFIC.get(name, [])]
-    for sql in _all_statements(dialect):
-        matched = [p for p in specific if p.match(sql)]
-        if matched:
-            # engine-specific grammar: regex-pinned; ALSO duckdb-parse
-            # a transliteration when one exists
-            shim = _transliterate_for_pg(name, sql)
-            if shim is not None:
-                _duckdb_parses(shim)
-        else:
-            # ANSI-shaped: must parse, modulo the type-keyword shim
-            # (Snowflake's ARRAY collides with a DuckDB reserved word)
-            shim = _transliterate_for_pg(name, sql)
-            assert shim is not None, f"unmatched engine-specific SQL: {sql}"
-            _duckdb_parses(shim)
-
-
-def test_swap_temp_tables_sql_parses():
-    stmts = swap_temp_tables_sql(
-        ["tmp_a", "tmp_b", "stale"], drop_existing_tables=True
-    )
-    for sql in stmts:
-        _duckdb_parses(sql)
-
-
-def test_snowflake_insert_placeholder_arity():
-    """The positional column1..N aliases must agree with the
-    placeholder count — the property the reference's structured insert
-    depends on (snowflake.py:66-88)."""
-    d = DIALECTS["snowflake"]
-    sql = d.insert_sql("t", _PROPS, _MODEL, n_rows=2)
-    n = len(_PROPS)
-    assert sql.count("?") == 2 * n
-    cols = re.findall(r"column(\d+)", sql)
-    assert [int(c) for c in cols] == list(range(1, n + 1))
-    # nested columns — and only those — route through parse_json
-    nested = {i + 1 for i, (_, k) in enumerate(_PROPS)
-              if "[]" in k or k.startswith("dict") or k in ("inner", "any")}
-    wrapped = {int(c) for c in re.findall(r"parse_json\(column(\d+)\)", sql)}
-    assert wrapped == nested
-
-
-def test_postgres_swap_is_one_transaction():
-    stmts = DIALECTS["postgresql"].swap_sql("tmp_t", "t")
-    assert stmts[0] == "BEGIN" and stmts[-1] == "COMMIT"
-    # the whole script parses as a unit too
-    duckdb.connect().extract_statements("; ".join(stmts))
+    for sql in DIALECTS[name].swap_sql("tmp_t", "t"):
+        if not any(p.match(sql) for p in specific):
+            _duckdb_parses(sql)

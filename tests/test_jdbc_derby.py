@@ -1,19 +1,17 @@
 """Execute the REAL Spark JDBC write path against embedded Derby.
 
 Apache Derby ships on Spark's own classpath (it backs the Hive
-metastore), so ``jdbc:derby:memory:`` gives this sandbox a live JDBC
-engine with zero extra dependencies.  These tests run what
-tests/test_jdbc_sqlite.py could only render as strings:
+metastore), so ``jdbc:derby:memory:`` gives CI a live JDBC engine
+with zero extra dependencies.  These tests run the production SQL
+path, ``collect_sql``:
 
 * ``write_jdbc`` (``df.write.jdbc`` → distributed INSERTs) against a
   real database, read back through ``spark.read.jdbc``;
 * the dialect swap DDL executed over a live ``java.sql.Connection``
-  (``execute_statements``), asserting the reference's
-  replacement-not-merge publish semantics (reference sql.py:129-159,
-  sql_test.py:54-128);
-* the dialect statement generators (CREATE/INSERT/swap) against TWO
-  live engines — sqlite3 and Derby — the ANSI-drift matrix the
-  reference's DialectUpdater registry exists for (sql.py:264-272).
+  (``execute_statements``) as one transaction, asserting the
+  reference's replacement-not-merge publish semantics (reference
+  sql.py:129-159, sql_test.py:54-128) and that a failed publish leaves
+  every table at the previous generation.
 
 Every test uses a fresh in-memory database name: Derby memory DBs live
 for the JVM's lifetime, and the Spark JVM is session-scoped.
@@ -21,24 +19,19 @@ for the JVM's lifetime, and the Spark JVM is session-scoped.
 
 from __future__ import annotations
 
-import sqlite3
 import uuid
 
 import pytest
 
-from resotodatalink_spark.model.kinds import (
-    get_link_table_name,
-    get_table_name,
-)
 from resotodatalink_spark.operators.sync import collect_sql
 from resotodatalink_spark.sinks.dialects import dialect_for
 from resotodatalink_spark.sinks.jdbc import (
     execute_statements,
     list_jdbc_tables,
+    write_jdbc,
 )
 from resotodatalink_spark.sources.graph import GraphSource
 from tests.fixtures import example_docs, example_model
-from tests.test_jdbc_sqlite import LINK_PROPS, _flatten, _props
 
 GOLDEN_INSTANCE = (
     "i-123", 4, 8, "i-123", "in1", "t1", "h1",
@@ -221,118 +214,49 @@ def test_example_collector_14_tables_to_derby(spark):
     assert counts == expected_counts
 
 
-class _DerbyCon:
-    """Minimal DB-API-ish shim over a JVM JDBC connection so the
-    dialect matrix below drives sqlite3 and Derby identically."""
+def test_failed_publish_leaves_every_table_at_generation_n(spark):
+    """``execute_statements`` runs a publish script as ONE transaction:
+    when its last statement fails, the swaps before it roll back, so
+    every production table still holds generation N (Derby DDL is
+    transactional).  The staged tmp tables survive, and re-running the
+    script publishes generation N+1 whole."""
+    url = _derby_url()
+    model = example_model()
+    collect_sql(spark, GraphSource.from_docs(spark, example_docs()), model, url,
+                run_swap=True)
 
-    def __init__(self, spark, url: str):
-        self._spark = spark
-        self.url = url
-        self._conn = spark._jvm.java.sql.DriverManager.getConnection(url)
+    docs2 = example_docs()
+    docs2[0]["reported"]["cores"] = 16
+    docs2[1]["reported"]["capacity"] = 99
+    stmts = collect_sql(spark, GraphSource.from_docs(spark, docs2), model, url)
+    with pytest.raises(Exception):
+        execute_statements(spark, url, [*stmts, "RENAME TABLE tmp_gone TO gone"])
+    assert _rows(spark, url, "some_instance") == [GOLDEN_INSTANCE]
+    assert _rows(spark, url, "some_volume") == [GOLDEN_VOLUME]
+    assert _rows(spark, url, "link_some_instance_some_volume") == [
+        ("i-123", "v-123")
+    ]
 
-    def execute(self, stmt: str, params: list | None = None):
-        if params is None:
-            self._conn.createStatement().execute(stmt)
-            return
-        ps = self._conn.prepareStatement(stmt)
-        for i, v in enumerate(params, 1):
-            ps.setObject(i, v)
-        ps.execute()
-
-    def query(self, sql: str) -> list[tuple]:
-        rs = self._conn.createStatement().executeQuery(sql)
-        ncols = rs.getMetaData().getColumnCount()
-        out = []
-        while rs.next():
-            out.append(tuple(rs.getObject(i) for i in range(1, ncols + 1)))
-        return out
-
-    def tables(self) -> list[str]:
-        return list_jdbc_tables(self._spark, self.url)
-
-    def close(self):
-        self._conn.close()
+    execute_statements(spark, url, stmts)
+    assert [r[1] for r in _rows(spark, url, "some_instance")] == [16]
+    assert [r[1] for r in _rows(spark, url, "some_volume")] == [99]
+    assert list_jdbc_tables(spark, url) == [
+        "link_some_instance_some_volume", "some_instance", "some_volume",
+    ]
 
 
-class _SqliteCon:
-    def __init__(self):
-        self.url = "jdbc:sqlite://mem"  # resolves the default dialect
-        self._con = sqlite3.connect(":memory:")
-
-    def execute(self, stmt: str, params: list | None = None):
-        self._con.execute(stmt, params or [])
-
-    def query(self, sql: str) -> list[tuple]:
-        return self._con.execute(sql).fetchall()
-
-    def tables(self) -> list[str]:
-        return sorted(
-            r[0]
-            for r in self._con.execute(
-                "SELECT name FROM sqlite_master WHERE type='table'"
-            ).fetchall()
-        )
-
-    def close(self):
-        self._con.close()
-
-
-@pytest.mark.parametrize("engine", ["sqlite", "derby"])
-def test_dialect_matrix_create_insert_swap(spark, engine):
-    """The SAME generator surface (create_table_sql / insert_sql /
-    swap_sql) executed against two live engines with different ANSI
-    dialects — Derby lacks TEXT, IF EXISTS, and ALTER...RENAME, which
-    is exactly the drift the dialect registry absorbs."""
-    con = _SqliteCon() if engine == "sqlite" else _DerbyCon(spark, _derby_url())
-    try:
-        model = example_model()
-        d = dialect_for(con.url)
-        docs = example_docs()
-        for kind in ("some_instance", "some_volume"):
-            con.execute(
-                d.create_table_sql(
-                    get_table_name(kind, with_tmp_prefix=True),
-                    _props(model, kind),
-                    model,
-                )
-            )
-        link = get_link_table_name(
-            "some_instance", "some_volume", with_tmp_prefix=True
-        )
-        con.execute(d.create_table_sql(link, LINK_PROPS, model))
-
-        for doc in (docs[0], docs[1]):
-            kind = doc["reported"]["kind"]
-            props = _props(model, kind)
-            con.execute(
-                d.insert_sql(
-                    get_table_name(kind, with_tmp_prefix=True), props, model
-                ),
-                _flatten(doc, props),
-            )
-        con.execute(
-            d.insert_sql(link, LINK_PROPS, model),
-            [docs[2]["from"], docs[2]["to"]],
-        )
-
-        for tmp in (get_table_name("some_instance", with_tmp_prefix=True),
-                    get_table_name("some_volume", with_tmp_prefix=True),
-                    link):
-            for stmt in d.swap_sql(tmp, tmp[len("tmp_"):]):
-                try:
-                    con.execute(stmt)
-                except Exception as e:
-                    je = getattr(e, "java_exception", None)
-                    if je is None or je.getSQLState() != "42Y55":
-                        raise  # only Derby's missing-prod DROP may skip
-
-        assert con.tables() == [
-            "link_some_instance_some_volume", "some_instance", "some_volume",
-        ]
-        assert con.query("SELECT * FROM some_instance") == [GOLDEN_INSTANCE]
-        assert con.query("SELECT * FROM some_volume") == [GOLDEN_VOLUME]
-        assert con.query(
-            "SELECT * FROM link_some_instance_some_volume"
-        ) == [("i-123", "v-123")]
-    finally:
-        con.close()
+def test_write_jdbc_ships_nested_values_as_json_text(spark):
+    """``write_jdbc`` ships array/map values as JSON text (the
+    reference's JSON column type, sql.py:75-80): identical strings come
+    back over JDBC, and NULLs stay NULL."""
+    url = _derby_url()
+    df = spark.sql(
+        "SELECT 't-1' AS id, map('env', 'prod') AS tags, array('a', 'b') AS aliases"
+        " UNION ALL SELECT 't-2', CAST(NULL AS map<string, string>),"
+        " CAST(NULL AS array<string>)"
+    )
+    write_jdbc(df, url, "thing")
+    assert _rows(spark, url, "thing") == [
+        ("t-1", '{"env":"prod"}', '["a","b"]'),
+        ("t-2", None, None),
+    ]

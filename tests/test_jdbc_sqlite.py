@@ -1,45 +1,46 @@
-"""Execute the JDBC statement path against stdlib sqlite3.
+"""Execute the default dialect's publish statements against stdlib sqlite3.
 
-No database server exists in this sandbox, so ``write_jdbc`` itself
-can't run — but every STATEMENT it relies on (dialect CREATE TABLE,
-parameterized INSERT, and the tmp->prod swap DDL) can be executed for
-real in ``sqlite3``.  These goldens reproduce the reference's
-SQLite-backed tests: create tmp schema -> insert node/edge docs -> swap
--> exact rows back (reference sql_test.py:70-128) and the two swap
-cases of reference sql_test.py:54-67.
+Spark has no sqlite JDBC driver on its classpath, so ``write_jdbc``
+runs live only against Derby (tests/test_jdbc_derby.py); but the
+default dialect's tmp->prod swap — the one every URL without a dialect
+of its own (sqlite, Postgres, ...) gets — can be executed for real in
+``sqlite3``.  The tmp tables are created and filled here with plain
+untyped sqlite DDL, the part Spark's JDBC writer does in production.
+These goldens reproduce the reference's SQLite-backed tests: create
+tmp schema -> insert node/edge docs -> swap -> exact rows back
+(reference sql_test.py:70-128).
 """
 
 from __future__ import annotations
 
-import json
 import sqlite3
 
 import pytest
 
 from resotodatalink_spark.model.kinds import (
     CARZ,
+    TEMP_PREFIX,
     Model,
     get_link_table_name,
     get_table_name,
 )
 from resotodatalink_spark.sinks.dialects import dialect_for
-from resotodatalink_spark.sinks.jdbc import swap_temp_tables_sql
 from tests.fixtures import example_docs, example_model
 
-LINK_PROPS = [("from_id", "string"), ("to_id", "string")]
+LINK_COLUMNS = ["from_id", "to_id"]
 
 
-def _props(model: Model, kind: str) -> list[tuple[str, str]]:
+def _columns(model: Model, kind: str) -> list[str]:
     props, _ = model.kind_properties(model.kinds[kind], with_id=True)
-    return [(p.name, p.kind) for p in props]
+    return [p.name for p in props]
 
 
-def _flatten(doc: dict, props: list[tuple[str, str]]) -> list:
+def _flatten(doc: dict, columns: list[str]) -> list:
     """Node doc -> row values in table-column order (the reference's
     node_to_json projection, sql.py:227-243): _id from the envelope,
     reported.* by name, carz from ancestors."""
     out = []
-    for name, _kind in props:
+    for name in columns:
         if name == "_id":
             out.append(doc["id"])
         elif name in CARZ:
@@ -64,51 +65,53 @@ def _tables(con) -> list[str]:
     ]
 
 
+def _create(con, table: str, columns: list[str]) -> None:
+    con.execute(f"CREATE TABLE {table} ({', '.join(columns)})")
+
+
+def _insert(con, table: str, values: list) -> None:
+    con.execute(f"INSERT INTO {table} VALUES ({', '.join('?' for _ in values)})", values)
+
+
 def _create_tmp_schema(con, model: Model) -> None:
-    d = dialect_for("jdbc:sqlite://mem")
     for kind in ("some_instance", "some_volume"):
-        con.execute(
-            d.create_table_sql(
-                get_table_name(kind, with_tmp_prefix=True), _props(model, kind), model
-            )
-        )
-    con.execute(
-        d.create_table_sql(
-            get_link_table_name("some_instance", "some_volume", with_tmp_prefix=True),
-            LINK_PROPS,
-            model,
-        )
+        _create(con, get_table_name(kind, with_tmp_prefix=True), _columns(model, kind))
+    _create(
+        con,
+        get_link_table_name("some_instance", "some_volume", with_tmp_prefix=True),
+        LINK_COLUMNS,
     )
 
 
-def test_insert_swap_roundtrip_golden(con):
-    """The reference's test_update flow (sql_test.py:70-128) driven by
-    OUR rendered statements: tmp schema, parameterized inserts, swap,
-    then the exact golden tuples back from the PROD tables."""
-    model = example_model()
+def _swap(con) -> None:
+    """Publish every tmp table with the default dialect's statements,
+    the way ``collect_sql`` builds its script."""
     d = dialect_for("jdbc:sqlite://mem")
+    for tmp in sorted(_tables(con)):
+        if tmp.startswith(TEMP_PREFIX):
+            for stmt in d.swap_sql(tmp, tmp[len(TEMP_PREFIX):]):
+                con.execute(stmt)
+
+
+def test_insert_swap_roundtrip_golden(con):
+    """The reference's test_update flow (sql_test.py:70-128) published
+    by the default dialect's swap: tmp schema, inserts, swap, then the
+    exact golden tuples back from the PROD tables."""
+    model = example_model()
     _create_tmp_schema(con, model)
     docs = example_docs()
 
     for doc in (docs[0], docs[1]):
         kind = doc["reported"]["kind"]
-        props = _props(model, kind)
-        con.execute(
-            d.insert_sql(get_table_name(kind, with_tmp_prefix=True), props, model),
-            _flatten(doc, props),
-        )
+        _insert(con, get_table_name(kind, with_tmp_prefix=True), _flatten(doc, _columns(model, kind)))
     edge = docs[2]
-    con.execute(
-        d.insert_sql(
-            get_link_table_name("some_instance", "some_volume", with_tmp_prefix=True),
-            LINK_PROPS,
-            model,
-        ),
+    _insert(
+        con,
+        get_link_table_name("some_instance", "some_volume", with_tmp_prefix=True),
         [edge["from"], edge["to"]],
     )
 
-    for stmt in swap_temp_tables_sql(_tables(con)):
-        con.execute(stmt)
+    _swap(con)
     assert sorted(_tables(con)) == [
         "link_some_instance_some_volume",
         "some_instance",
@@ -132,112 +135,12 @@ def test_insert_swap_roundtrip_golden(con):
 def test_swap_is_replacement_not_merge(con):
     """A second sync's swap must REPLACE prod contents, not append."""
     model = example_model()
-    d = dialect_for("jdbc:sqlite://mem")
-    props = _props(model, "some_volume")
+    columns = _columns(model, "some_volume")
     docs = example_docs()
 
     for round_no in (1, 2):
         _create_tmp_schema(con, model)
-        vol = docs[1]
-        con.execute(
-            d.insert_sql(get_table_name("some_volume", with_tmp_prefix=True), props, model),
-            _flatten(vol, props),
-        )
-        for stmt in swap_temp_tables_sql(_tables(con)):
-            con.execute(stmt)
+        _insert(con, get_table_name("some_volume", with_tmp_prefix=True), _flatten(docs[1], columns))
+        _swap(con)
         n, = con.execute("SELECT count(*) FROM some_volume").fetchone()
         assert n == 1, f"round {round_no}: swap merged instead of replaced"
-
-
-def test_swap_no_temp_tables_reference_cases(con):
-    """Reference sql_test.py:54-67: with no tmp tables a swap is a
-    no-op, and drop_existing_tables=True drops everything."""
-    model = example_model()
-    _create_tmp_schema(con, model)
-    for stmt in swap_temp_tables_sql(_tables(con)):
-        con.execute(stmt)
-    assert len(_tables(con)) == 3
-
-    # no tmp tables now: plain swap emits nothing
-    assert swap_temp_tables_sql(_tables(con)) == []
-    # drop_existing_tables drops the 3 stale prod tables
-    for stmt in swap_temp_tables_sql(_tables(con), drop_existing_tables=True):
-        con.execute(stmt)
-    assert _tables(con) == []
-
-
-def test_swap_drop_existing_spares_updated_tables(con):
-    """drop_existing_tables only drops tables NOT updated this sync
-    (reference sql.py:147-151): a fresh tmp_some_instance survives, the
-    stale some_volume goes."""
-    model = example_model()
-    _create_tmp_schema(con, model)
-    for stmt in swap_temp_tables_sql(_tables(con)):
-        con.execute(stmt)
-    # stage only some_instance for the next sync
-    d = dialect_for("jdbc:sqlite://mem")
-    con.execute("DROP TABLE some_instance")
-    con.execute(
-        d.create_table_sql(
-            get_table_name("some_instance", with_tmp_prefix=True),
-            _props(model, "some_instance"),
-            model,
-        )
-    )
-    for stmt in swap_temp_tables_sql(_tables(con), drop_existing_tables=True):
-        con.execute(stmt)
-    assert sorted(_tables(con)) == ["some_instance"]
-
-
-def test_nested_values_roundtrip_as_json_text(con):
-    """The default dialect ships array/dict/complex values as JSON TEXT
-    (the reference's JSON column type, sql.py:75-80): insert json.dumps
-    values through our rendered statement, read identical strings back."""
-    from resotodatalink_spark.model.kinds import Kind, Property
-
-    kinds = [
-        Kind("string", runtime_kind=None),
-        Kind("int32", runtime_kind=None),
-        Kind(
-            "thing",
-            properties=[
-                Property("id", "string"),
-                Property("tags", "dictionary[string, string]"),
-                Property("aliases", "string[]"),
-            ],
-            bases=[],
-            aggregate_root=True,
-        ),
-    ]
-    model = Model({k.fqn: k for k in kinds})
-    d = dialect_for("jdbc:sqlite://mem")
-    props = [("id", "string"), ("tags", "dictionary[string, string]"),
-             ("aliases", "string[]")]
-    con.execute(d.create_table_sql("thing", props, model))
-    tags = json.dumps({"env": "prod"}, separators=(",", ":"))
-    aliases = json.dumps(["a", "b"], separators=(",", ":"))
-    con.execute(
-        d.insert_sql("thing", props, model, n_rows=2),
-        ["t-1", tags, aliases, "t-2", None, None],
-    )
-    assert con.execute("SELECT * FROM thing ORDER BY id").fetchall() == [
-        ("t-1", '{"env":"prod"}', '["a","b"]'),
-        ("t-2", None, None),
-    ]
-
-
-def test_multirow_insert_batch_shape(con):
-    """n_rows>1 renders one statement with chunk-size placeholders —
-    the reference's insert_batch_size chunking (sql.py:245-261)."""
-    model = example_model()
-    d = dialect_for("jdbc:sqlite://mem")
-    props = [("a", "int32"), ("b", "string")]
-    con.execute(d.create_table_sql("t", props, model))
-    rows = [(i, f"s{i}") for i in range(7)]
-    batch = 3
-    for i in range(0, len(rows), batch):
-        chunk = rows[i:i + batch]
-        flat = [v for r in chunk for v in r]
-        con.execute(d.insert_sql("t", props, model, n_rows=len(chunk)), flat)
-    assert con.execute("SELECT count(*) FROM t").fetchone() == (7,)
-    assert con.execute("SELECT a, b FROM t ORDER BY a").fetchall() == rows

@@ -7,8 +7,11 @@ swaps its own tables would be a second publish path with its own crash
 window.  The ``STAGING_SUFFIX``/``OLD_SUFFIX`` directory names are used
 by no module but ``sinks/files.py``, which lists and reads every
 generation (``published_tables``, ``read_table``): a module that
-matches them itself would be a second owner of the layout.  These
-scans fail the moment either appears.  No Spark is needed.
+matches them itself would be a second owner of the layout.  The SQL
+sink has one publish path too: only ``operators/sync.collect_sql``
+renders a dialect's ``swap_sql`` and runs it through
+``execute_statements``.  These scans fail the moment a second path
+appears.  No Spark is needed.
 """
 
 from __future__ import annotations
@@ -57,3 +60,10 @@ def test_staging_dir_names_are_used_only_by_the_sink():
     defines, uses = _publish_sites({"STAGING_SUFFIX", "OLD_SUFFIX"})
     assert defines == {"sinks/files.py"}
     assert uses == set()
+
+
+def test_sql_publish_has_one_caller():
+    for name, home in (("swap_sql", "sinks/dialects.py"), ("execute_statements", "sinks/jdbc.py")):
+        defines, uses = _publish_sites({name})
+        assert defines == {home}
+        assert uses == {"operators/sync.py"}

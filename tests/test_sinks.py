@@ -44,7 +44,8 @@ def test_parquet_staging_swap_roundtrip(spark, tmp_path):
 def test_swap_replaces_existing(spark, tmp_path):
     dest = str(tmp_path)
     df1 = spark.range(3).withColumnRenamed("id", "v")
-    write_table(df1, dest, "t", staging=False)
+    write_table(df1, dest, "t")
+    swap_staging(dest, tables=["t"])
     assert read_table(spark, dest, "t").count() == 3
     df2 = spark.range(5).withColumnRenamed("id", "v")
     write_table(df2, dest, "t")  # staged
@@ -58,7 +59,8 @@ def test_csv_stringifies_nested(spark, tmp_path):
     df = spark.sql(
         "select 1 as a, array('x','y') as arr, named_struct('k', 2) as st"
     )
-    write_table(df, dest, "t", fmt="csv", staging=False)
+    write_table(df, dest, "t", fmt="csv")
+    swap_staging(dest, tables=["t"])
     back = read_table(spark, dest, "t", fmt="csv")
     row = back.collect()[0]
     assert row["arr"] == '["x","y"]' and row["st"] == '{"k":2}'
@@ -74,7 +76,9 @@ def test_dialect_registry_url_dispatch():
 
     assert dialect_for("jdbc:snowflake://acct.snowflakecomputing.com/").name == "snowflake"
     assert dialect_for("snowflake").name == "snowflake"
-    assert dialect_for("jdbc:postgresql://localhost/db").name == "postgresql"
+    # Postgres needs no dialect of its own: the default drop+rename
+    # runs in execute_statements' one transaction
+    assert dialect_for("jdbc:postgresql://localhost/db").name == "default"
     assert dialect_for("jdbc:mysql://localhost/db").name == "mysql"
     assert dialect_for("jdbc:derby:memory:x;create=true").name == "derby"
     assert dialect_for("jdbc:unknowndb://localhost/db").name == "default"
@@ -87,88 +91,33 @@ def test_dialect_registry_url_dispatch():
     DIALECTS.pop("mydb")
 
 
-def _nested_model():
-    from resotodatalink_spark.model.kinds import Kind, Model, Property
-
-    kinds = [
-        Kind("string", runtime_kind=None),
-        Kind("int32", runtime_kind=None),
-        Kind(
-            "thing",
-            properties=[
-                Property("id", "string"),
-                Property("cores", "int32"),
-                Property("tags", "dictionary[string, string]"),
-                Property("aliases", "string[]"),
-            ],
-            bases=[],
-            aggregate_root=True,
-        ),
-    ]
-    return Model({k.fqn: k for k in kinds})
-
-
-def test_snowflake_structured_insert_statement():
-    """The reference's INSERT ... SELECT parse_json shape (reference
-    snowflake.py:66-88): nested columns routed through parse_json,
-    scalars passed through positionally."""
-    from resotodatalink_spark.sinks.dialects import dialect_for
-
-    model = _nested_model()
-    props = [("id", "string"), ("cores", "int32"),
-             ("tags", "dictionary[string, string]"), ("aliases", "string[]")]
-    sf = dialect_for("snowflake")
-    stmt = sf.insert_sql("thing", props, model, n_rows=2)
-    assert stmt == (
-        "INSERT INTO thing (id, cores, tags, aliases) "
-        "SELECT column1, column2, parse_json(column3), parse_json(column4) "
-        "FROM VALUES (?, ?, ?, ?), (?, ?, ?, ?)"
-    )
-    assert sf.column_type(model, "string[]") == "ARRAY"
-    assert sf.column_type(model, "dictionary[string, string]") == "OBJECT"
-    assert sf.column_type(model, "thing") == "OBJECT"
-    assert sf.column_type(model, "double") == "FLOAT"
-
-
 def test_dialect_unknown_kind_raises_no_substring_match():
     """The reference accepts any substring of 'float'/'double' as a
-    kind (snowflake.py:33-35 `kind_name in "float"`); fixed here —
-    equality only, unknown kinds raise."""
-    import pytest
+    kind (snowflake.py:33-35 `kind_name in "float"`); not here.  On the
+    SQL path Spark's JDBC writer types each column from the compiled
+    schema, whose compiler raises on an unknown kind, and on every
+    dialect the P9 width rule sizes only kinds EQUAL to string or
+    duration."""
+    from resotodatalink_spark.model.compiler import kind_to_spark_type
+    from resotodatalink_spark.model.kinds import Kind, Model, Property
+    from resotodatalink_spark.sinks.dialects import dialect_for, jdbc_column_types
 
-    from resotodatalink_spark.sinks.dialects import dialect_for
-
-    model = _nested_model()
-    for dialect in ("snowflake", "default"):
+    model = Model(
+        kinds={
+            "thing": Kind(
+                fqn="thing",
+                aggregate_root=True,
+                properties=[Property("a", "trin"), Property("b", "t"), Property("c", "loa")],
+            )
+        }
+    )
+    for name in ("loa", "t", "trin"):
         with pytest.raises(ValueError):
-            dialect_for(dialect).column_type(model, "loa")
-        with pytest.raises(ValueError):
-            dialect_for(dialect).column_type(model, "t")
-
-
-def test_default_dialect_create_and_insert():
-    from resotodatalink_spark.sinks.dialects import dialect_for
-
-    model = _nested_model()
-    props = [("id", "string"), ("cores", "int32"), ("tags", "dictionary[string, string]")]
-    d = dialect_for("jdbc:sqlite://h/db")
-    assert d.create_table_sql("thing", props, model) == (
-        "CREATE TABLE IF NOT EXISTS thing (id VARCHAR(255), cores INTEGER, tags TEXT)"
-    )
-    assert d.insert_sql("thing", props, model, n_rows=1) == (
-        "INSERT INTO thing (id, cores, tags) VALUES (?, ?, ?)"
-    )
-    # Postgres ships nested values as JSONB, MySQL as native JSON
-    pg = dialect_for("jdbc:postgresql://h/db")
-    assert pg.create_table_sql("thing", props, model) == (
-        "CREATE TABLE IF NOT EXISTS thing (id VARCHAR(255), cores INTEGER, tags JSONB)"
-    )
-    my = dialect_for("jdbc:mysql://h/db")
-    assert my.create_table_sql("thing", props, model) == (
-        "CREATE TABLE IF NOT EXISTS thing (id VARCHAR(255), cores INTEGER, tags JSON)"
-    )
-    assert my.column_type(model, "double") == "DOUBLE"
-    assert my.column_type(model, "datetime") == "DATETIME"
+            kind_to_spark_type(model, name)
+    for dialect in ("default", "derby", "mysql"):
+        frag = jdbc_column_types(dialect_for(dialect), model, "thing")
+        assert "`zone` VARCHAR(255)" in frag
+        assert not any(f"`{c}`" in frag for c in "abc")
 
 
 def test_dialect_swap_statements():
@@ -187,13 +136,12 @@ def test_dialect_swap_statements():
         "ALTER TABLE tmp_t SWAP WITH t",
         "DROP TABLE tmp_t",
     ]
-    # Postgres: the whole publish inside one transaction (DDL is
-    # transactional there, so the swap is atomic for readers)
-    assert dialect_for("postgresql").swap_sql("tmp_t", "t") == [
-        "BEGIN",
+    # Postgres: the default drop+rename; execute_statements runs the
+    # whole publish as one transaction (DDL is transactional there, so
+    # every table flips for readers at once)
+    assert dialect_for("jdbc:postgresql://h/db").swap_sql("tmp_t", "t") == [
         "DROP TABLE IF EXISTS t",
         "ALTER TABLE tmp_t RENAME TO t",
-        "COMMIT",
     ]
     # MySQL: both renames in ONE atomic RENAME TABLE statement — the
     # table is never observed missing
@@ -252,7 +200,8 @@ def test_orc_and_json_roundtrip(spark, tmp_path):
     )
     dest = str(tmp_path)
     for fmt in ("orc", "json"):
-        write_table(df, dest, f"t_{fmt}", fmt=fmt, staging=False)
+        write_table(df, dest, f"t_{fmt}", fmt=fmt)
+        swap_staging(dest, tables=[f"t_{fmt}"])
         back = read_table(spark, dest, f"t_{fmt}", fmt=fmt)
         got = sorted((r.id, list(r.arr)) for r in back.collect())
         assert got == [(0, [0, 0]), (1, [1, 2]), (2, [2, 4])]
@@ -272,7 +221,7 @@ def test_json_roundtrip_keeps_temporal_and_decimal_types(spark, tmp_path):
         " 'x' AS s"
     )
     dest = str(tmp_path)
-    write_table(df, dest, "typed", fmt="json", staging=True)
+    write_table(df, dest, "typed", fmt="json")
     assert swap_staging(dest, tables=["typed"]) == ["typed"]
     back = read_table(spark, dest, "typed", fmt="json")
     # nullability is reader policy (JSON always reads nullable);
@@ -289,19 +238,23 @@ def test_json_roundtrip_keeps_temporal_and_decimal_types(spark, tmp_path):
     assert _shape(explicit.schema) == _shape(df.schema)
     # csv marker carries the stringified shape
     df2 = df.select("ts", "d", "amt", "s")
-    write_table(df2, dest, "typed_csv", fmt="csv", staging=False)
+    write_table(df2, dest, "typed_csv", fmt="csv")
+    swap_staging(dest, tables=["typed_csv"])
     back_csv = read_table(spark, dest, "typed_csv", fmt="csv")
     assert _shape(back_csv.schema) == _shape(df2.schema)
 
 
 def test_p9_varchar_width_heuristic():
-    """P9 (reference sql.py:92-100, mirroring sql_test.py:34-38):
-    string columns size power-of-2 from ``metadata["len"]`` — 34 ->
+    """P9 (reference sql.py:92-100, mirroring sql_test.py:34-38) on the
+    production path's ``createTableColumnTypes`` fragment: string and
+    duration columns size power-of-2 from ``metadata["len"]`` — 34 ->
     VARCHAR(64), no metadata -> VARCHAR(255), tiny -> the VARCHAR(32)
-    floor, >1024 -> the dialect's unbounded text type (TEXT, or CLOB
-    on Derby which has none); Snowflake ignores widths (STRING)."""
+    floor, 1024 -> VARCHAR(1024), >1024 -> no override (the engine's
+    unbounded default), a malformed len -> VARCHAR(255).  Derby and
+    MySQL size the same way; Snowflake ignores widths (plain STRING,
+    reference snowflake.py:37-38)."""
     from resotodatalink_spark.model.kinds import Kind, Model, Property
-    from resotodatalink_spark.sinks.dialects import ddl_props, dialect_for
+    from resotodatalink_spark.sinks.dialects import dialect_for, jdbc_column_types
 
     model = Model(
         kinds={
@@ -312,41 +265,53 @@ def test_p9_varchar_width_heuristic():
                     Property("name", "string", metadata={"len": 34}),
                     Property("note", "string"),
                     Property("code", "string", metadata={"len": 3}),
+                    Property("edge", "string", metadata={"len": 1024}),
                     Property("blob", "string", metadata={"len": 1500}),
+                    Property("wait", "duration", metadata={"len": 34}),
+                    Property("bad", "string", metadata={"len": "34"}),
+                    Property("cores", "int32", metadata={"len": 34}),
                 ],
             )
         }
     )
-    d = dialect_for("default")
-    assert d.column_type(model, "string", {"len": 34}) == "VARCHAR(64)"
-    assert d.column_type(model, "string") == "VARCHAR(255)"
-    assert d.column_type(model, "string", {"len": 3}) == "VARCHAR(32)"
-    assert d.column_type(model, "string", {"len": 1024}) == "VARCHAR(1024)"
-    assert d.column_type(model, "string", {"len": 1025}) == "TEXT"
-    assert d.column_type(model, "duration", {"len": 34}) == "VARCHAR(64)"
-    # the triple-prop production path threads metadata through DDL
-    props = ddl_props(model, "thing")
-    ddl = d.create_table_sql("thing", props, model)
-    assert "name VARCHAR(64)" in ddl
-    assert "note VARCHAR(255)" in ddl
-    assert "code VARCHAR(32)" in ddl
-    assert "blob TEXT" in ddl
-    assert "_id VARCHAR(255)" in ddl  # synthesized id column
-    # per-dialect unbounded text type
-    assert dialect_for("jdbc:derby:memory:x").column_type(
-        model, "string", {"len": 1500}
-    ) == "CLOB"
-    assert dialect_for("jdbc:mysql://h/db").column_type(
-        model, "string", {"len": 1500}
-    ) == "TEXT"
-    # Snowflake has no width heuristic (reference snowflake.py:37-38)
-    assert dialect_for("snowflake://h/db").column_type(
-        model, "string", {"len": 34}
-    ) == "STRING"
-    # pairs (no metadata) still accepted
-    assert "id VARCHAR(255)" in d.create_table_sql(
-        "t", [("id", "string")], model
+    frag = jdbc_column_types(dialect_for("default"), model, "thing")
+    assert frag == (
+        "`_id` VARCHAR(255), `name` VARCHAR(64), `note` VARCHAR(255),"
+        " `code` VARCHAR(32), `edge` VARCHAR(1024), `wait` VARCHAR(64),"
+        " `bad` VARCHAR(255), `cloud` VARCHAR(255), `account` VARCHAR(255),"
+        " `region` VARCHAR(255), `zone` VARCHAR(255)"
     )
+    for url in ("jdbc:derby:memory:x", "jdbc:mysql://h/db", "jdbc:postgresql://h/db"):
+        assert jdbc_column_types(dialect_for(url), model, "thing") == frag
+    assert jdbc_column_types(dialect_for("snowflake://h/db"), model, "thing") is None
+
+
+def test_snowflake_url_gets_no_varchar_override(spark, monkeypatch):
+    """``collect_sql`` sizes columns with the dialect of its URL: a
+    Snowflake sync writes every table, links included, with no
+    ``createTableColumnTypes`` override, so its strings stay unbounded
+    as in the reference (snowflake.py:37-38)."""
+    from resotodatalink_spark.operators.sync import collect_sql
+    from resotodatalink_spark.sinks import jdbc
+
+    written = {}
+
+    def fake_write(df, url, table, batch_size, column_types):
+        written[table] = column_types
+
+    monkeypatch.setattr(jdbc, "write_jdbc", fake_write)
+    stmts = collect_sql(
+        spark,
+        GraphSource.from_docs(spark, example_docs()),
+        example_model(),
+        "jdbc:snowflake://acct.snowflakecomputing.com/",
+    )
+    assert written == {
+        "tmp_link_some_instance_some_volume": None,
+        "tmp_some_instance": None,
+        "tmp_some_volume": None,
+    }
+    assert "ALTER TABLE tmp_some_volume SWAP WITH some_volume" in stmts
 
 
 def test_p9_jdbc_column_types_fragment():
@@ -356,7 +321,7 @@ def test_p9_jdbc_column_types_fragment():
     TEXT/CLOB, and the dialect default IS the unbounded type), and
     None when nothing needs an override."""
     from resotodatalink_spark.model.kinds import Kind, Model, Property
-    from resotodatalink_spark.sinks.dialects import jdbc_column_types
+    from resotodatalink_spark.sinks.dialects import dialect_for, jdbc_column_types
 
     model = Model(
         kinds={
@@ -376,14 +341,14 @@ def test_p9_jdbc_column_types_fragment():
             ),
         }
     )
-    frag = jdbc_column_types(model, "thing")
+    frag = jdbc_column_types(dialect_for("default"), model, "thing")
     assert "`name` VARCHAR(64)" in frag
     assert "`_id` VARCHAR(255)" in frag
     assert "blob" not in frag  # >1024: dialect default (unbounded) applies
     assert "cores" not in frag
     # every aggregate kind carries the carz string columns, so the
     # fragment always includes their VARCHAR(255) defaults
-    frag_bare = jdbc_column_types(model, "bare", with_id=False)
+    frag_bare = jdbc_column_types(dialect_for("default"), model, "bare", with_id=False)
     assert frag_bare == (
         "`cloud` VARCHAR(255), `account` VARCHAR(255),"
         " `region` VARCHAR(255), `zone` VARCHAR(255)"
@@ -419,8 +384,8 @@ def test_published_text_tables_cross_read_by_duckdb(spark, tmp_path):
         " UNION ALL SELECT 2, TIMESTAMP '2024-03-01 00:00:00', 'b'"
     )
     dest = str(tmp_path)
-    write_table(df, dest, "tj", fmt="json", staging=True)
-    write_table(df, dest, "tc", fmt="csv", staging=True)
+    write_table(df, dest, "tj", fmt="json")
+    write_table(df, dest, "tc", fmt="csv")
     assert sorted(swap_staging(dest, tables=["tj", "tc"])) == ["tc", "tj"]
     con = duckdb.connect()
     # external readers apply their OWN inference (Spark's ISO-Z
@@ -471,7 +436,8 @@ def test_read_table_applies_schema_to_parquet(spark, tmp_path):
     """An explicit ``schema`` shapes a parquet read too: its columns in
     its order, and a column the files lack reads as NULL."""
     dest = str(tmp_path)
-    write_table(spark.range(2).select("id", F.lit("a").alias("s")), dest, "t", staging=False)
+    write_table(spark.range(2).select("id", F.lit("a").alias("s")), dest, "t")
+    swap_staging(dest, tables=["t"])
     schema = T.StructType(
         [T.StructField("s", T.StringType()), T.StructField("id", T.LongType()),
          T.StructField("gained", T.IntegerType())]
@@ -487,7 +453,8 @@ def test_read_table_reads_the_node_index_by_its_data_files(spark, tmp_path, kind
     sink reads it by its data files, on a plain path and on a URI."""
     dest = _dest(tmp_path, kind)
     index = spark.createDataFrame([("a", "k1"), ("b", "k2")], "id string, kind string")
-    write_table(index, dest, NODE_INDEX, staging=False)
+    write_table(index, dest, NODE_INDEX)
+    swap_staging(dest, tables=[NODE_INDEX], spark=spark)
     back = read_table(spark, dest, NODE_INDEX)
     assert sorted(tuple(r) for r in back.collect()) == [("a", "k1"), ("b", "k2")]
     files = back.inputFiles()
@@ -499,7 +466,8 @@ def test_read_table_rejects_another_format_and_reads_an_empty_table(spark, tmp_p
     parquet, before any Spark job, instead of reading as empty; a table
     dir with no data file reads as an empty frame of ``schema``."""
     dest = str(tmp_path)
-    write_table(spark.range(2), dest, "t", fmt="csv", staging=False)
+    write_table(spark.range(2), dest, "t", fmt="csv")
+    swap_staging(dest, tables=["t"])
     with pytest.raises(ValueError, match="not parquet"):
         read_table(spark, dest, "t")
     assert read_table(spark, dest, "t", fmt="csv").count() == 2
