@@ -67,10 +67,10 @@ def kind_to_spark_type(model: Model, kind_name: str) -> T.DataType:
     raise ValueError(f"Unknown kind: {kind_name}")
 
 
-def table_schema(model: Model, kind: Kind, with_id: bool = True) -> T.StructType:
+def table_schema(model: Model, kind: Kind) -> T.StructType:
     """Flattened per-kind table schema: _id + inherited props + carz
     (reference arrow/model.py:31-36 / sql.py:182-188)."""
-    props, _ = model.kind_properties(kind, with_id=with_id)
+    props, _ = model.kind_properties(kind, with_id=True)
     return T.StructType(
         [T.StructField(p.name, kind_to_spark_type(model, p.kind), True) for p in props]
     )

@@ -58,8 +58,8 @@ the writes overlapping on up to ``defaultParallelism`` driver threads:
 
 The published layout belongs to ``sinks/files.py``: the planner lists
 tables with ``published_tables`` and reads them, the index included,
-with ``read_table``; its one file operation of its own removes a staged
-table the plan could not rule out that turned out unchanged.
+with ``read_table``; a staged table the plan could not rule out that
+turned out unchanged is removed with ``discard_staged``.
 """
 
 from __future__ import annotations
@@ -77,7 +77,7 @@ from resotodatalink_spark.operators.flatten import flatten_nodes, sync_views  # 
 from resotodatalink_spark.operators.sync import Feedback, NoFeedback
 from resotodatalink_spark.sinks.files import (
     NODE_INDEX,
-    _fs,
+    discard_staged,
     published_tables,
     read_table,
     stage_tables,
@@ -230,7 +230,7 @@ def sync_delta(
     of many generations, with ``collect_to_files`` instead."""
     feedback = feedback or NoFeedback()
     deleted = sorted(set(deleted_ids or []))
-    listed = published_tables(dest_dir, spark)
+    listed = published_tables(spark, dest_dir)
     on_disk = listed - {NODE_INDEX}
     index = _node_index(spark, dest_dir, listed)
     kind_tables = {get_table_name(k.fqn): k for k in model.table_kinds()}
@@ -295,10 +295,10 @@ def sync_delta(
         else:
             sweeps = [("_id", swept)]
         merged, before, after = _merge(old, sweeps, dv)
-        path = write_table(merged, dest_dir, name)
+        write_table(merged, dest_dir, name)
         removed = before.get["n"] - after.get["n"]
         if not (upserted.get(name) or removed):
-            _fs(dest_dir, spark).rmtree(path)  # the plan could not rule it out; nothing changed
+            discard_staged(spark, dest_dir, name)  # the plan could not rule it out; nothing changed
         return removed
 
     def stage_index() -> None:
@@ -326,5 +326,5 @@ def sync_delta(
 
     # publish once every table is staged, the index last: a crash during
     # the tables' renames leaves it at N, and a replay plans against N again
-    swap_staging(dest_dir, tables=[*staged, NODE_INDEX], spark=spark)
+    swap_staging(spark, dest_dir, tables=[*staged, NODE_INDEX])
     return stats

@@ -100,7 +100,7 @@ def collect_to_files(
     )
     for i in range(1, len(tables) + 1):
         feedback.progress_done("write_tables", i, len(tables))
-    swap_staging(dest_dir, tables=[*tables, NODE_INDEX])
+    swap_staging(spark, dest_dir, tables=[*tables, NODE_INDEX])
     feedback.progress_done("swap", len(tables), len(tables))
     return tables
 
@@ -154,18 +154,14 @@ def collect_sql(
     id_type = dialect.string_type(None)
     link_types = id_type and f"`from_id` {id_type}, `to_id` {id_type}"
     for i, name in enumerate(names, 1):
-        # The link-table fragment applies ONLY to names carrying the
-        # link-table convention (link_<from>_<to>); any other name
-        # missing from col_types writes unsized (None) rather than
-        # with from_id/to_id types its schema doesn't have — which
-        # Spark would reject with a confusing DDL error (r12 ADVICE).
-        is_link = name[len(TEMP_PREFIX):].startswith("link_")
+        # sync_views names kind tables exactly as col_types keys them;
+        # every other name is a link table
         write_jdbc(
             views[name],
             url,
             name,
             batch_size=batch_size,
-            column_types=col_types.get(name, link_types if is_link else None),
+            column_types=col_types.get(name, link_types),
         )
         feedback.progress_done("write_jdbc", i, len(names))
     stmts: list[str] = []

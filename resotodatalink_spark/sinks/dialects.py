@@ -122,7 +122,7 @@ class DerbyDialect(SqlDialect):
     def swap_sql(self, tmp_table: str, prod_table: str) -> list[str]:
         """No DROP IF EXISTS in Derby: the first publish's DROP fails
         with SQLState 42Y55 (object does not exist), which
-        ``execute_statements`` tolerates by default."""
+        ``execute_statements`` tolerates on a DROP."""
         return [
             f"DROP TABLE {prod_table}",
             f"RENAME TABLE {tmp_table} TO {prod_table}",
@@ -137,16 +137,14 @@ def _resolve_scalar(model: Model, kind_name: str) -> str:
     return kind_name
 
 
-def jdbc_column_types(
-    dialect: SqlDialect, model: Model, kind_name: str, with_id: bool = True
-) -> str | None:
+def jdbc_column_types(dialect: SqlDialect, model: Model, kind_name: str) -> str | None:
     """Spark JDBC ``createTableColumnTypes`` fragment that applies the
     dialect's P9 widths (``string_type``) to the string columns of
     ``kind_name``'s table, from the model's property metadata (reference
     sql.py:182-188 + 92-100).  Without it Spark's writer gives every
     string column the engine's unbounded default.  Returns None when no
     column needs an override (always, on Snowflake)."""
-    props, _ = model.kind_properties(model.kinds[kind_name], with_id=with_id)
+    props, _ = model.kind_properties(model.kinds[kind_name], with_id=True)
     parts = []
     for p in props:
         if _resolve_scalar(model, p.kind) not in _SIZED_KINDS:

@@ -11,32 +11,33 @@ directories renamed in one final pass.
 This module alone owns the published layout: which directories under
 a destination are tables (``published_tables``), which files of a
 table hold its data (``read_table``), and how a generation is staged
-and published (``write_table``, ``stage_tables``, ``swap_staging``).
+and published (``write_table``, ``stage_tables``, ``discard_staged``,
+``swap_staging``).
 Every other module lists and reads through these.
 
 CSV cannot hold nested types; nested columns are JSON-stringified the
 way the reference's CSV type map does (type_converter.py:35-55,
 writer.py:130-146).
 
-Cloud paths (s3a://, gs://) work through the Hadoop filesystem — the
-reference's spool-and-upload dance (writer.py:187-219) disappears:
-``df.write`` resolves the scheme itself, and ``published_tables``,
-``read_table`` and ``swap_staging`` route their list/exists/rename/
-delete through the Hadoop FileSystem API whenever the destination is a
-URI (exercised in CI over ``file:`` URIs, which take
-the exact same FS-API path as ``s3a://`` minus the S3 connector —
-tests/test_sinks.py).  NOTE on object stores: S3 "rename" is
-copy+delete (not atomic, O(data)); for heavy S3 publishing prefer a
-table format with a metastore pointer flip.  The FS-API path is still
-correct there — just not instantaneous.
+Every destination, a plain path or a URI (``file:``, ``hdfs://``,
+``s3a://``, ``gs://``), is listed, renamed and deleted through one
+Hadoop FileSystem: the one ``df.write`` resolves it to, a plain path
+against ``fs.defaultFS`` exactly as the write did.  The reference's
+spool-and-upload dance (writer.py:187-219) disappears, and the sink
+never looks at the driver's local disk on its own (exercised in CI on
+plain paths and ``file:`` URIs, which take the same FS-API path as
+``s3a://`` minus the S3 connector — tests/test_sinks.py).  NOTE on
+object stores: S3 "rename" is copy+delete (not atomic, O(data)); for
+heavy S3 publishing prefer a table format with a metastore pointer
+flip.  The FS-API path is still correct there — just not
+instantaneous.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 from concurrent.futures import ThreadPoolExecutor
-from typing import Callable, NamedTuple, TypeVar
+from typing import Callable, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -54,28 +55,26 @@ STAGING_SUFFIX = "__staging"
 NODE_INDEX = "_node_index"
 
 
-def _is_uri(path: str) -> bool:
-    return "://" in path or path.startswith("file:")
-
-
 class _HadoopFs:
-    """Minimal list/isdir/exists/rename/rmtree over the JVM Hadoop
-    FileSystem — the routing layer that makes the staged-publish
-    sequence work on any scheme Spark can write to (K8, reference
+    """List/isdir/exists/rename/rmtree over the Hadoop FileSystem that
+    ``df.write`` resolves ``dest_dir`` to — the one file system of every
+    destination, whatever its scheme (K8, reference
     writer.py:187-219)."""
 
-    def __init__(self, spark: SparkSession, base: str):
-        jvm = spark._jvm
-        self._Path = jvm.org.apache.hadoop.fs.Path
+    def __init__(self, spark: SparkSession, dest_dir: str):
+        self._Path = spark._jvm.org.apache.hadoop.fs.Path
         hconf = spark._jsc.hadoopConfiguration()
-        self._fs = self._Path(base).getFileSystem(hconf)
+        self._fs = self._Path(dest_dir).getFileSystem(hconf)
 
-    def listdir(self, d: str) -> list[str]:
-        return [s.getPath().getName() for s in self._fs.listStatus(self._Path(d))]
+    def listdir(self, d: str) -> dict[str, bool]:
+        """Each entry's name, and whether it is a directory."""
+        return {
+            s.getPath().getName(): s.isDirectory()
+            for s in self._fs.listStatus(self._Path(d))
+        }
 
     def isdir(self, p: str) -> bool:
-        path = self._Path(p)
-        return bool(self._fs.exists(path) and self._fs.getFileStatus(path).isDirectory())
+        return bool(self._fs.isDirectory(self._Path(p)))
 
     def exists(self, p: str) -> bool:
         return bool(self._fs.exists(self._Path(p)))
@@ -153,44 +152,15 @@ def _write_schema_marker(df: DataFrame, table_path: str) -> None:
 OLD_SUFFIX = "__old"
 
 
-class _Fs(NamedTuple):
-    listdir: Callable[[str], list[str]]
-    isdir: Callable[[str], bool]
-    exists: Callable[[str], bool]
-    rename: Callable[[str, str], None]
-    rmtree: Callable[[str], None]
-    join: Callable[..., str]
-
-
-def _fs(dest_dir: str, spark: SparkSession | None) -> _Fs:
-    """The file primitives for ``dest_dir``: ``os`` for a plain local
-    path, the Hadoop FileSystem of the active session for a URI."""
-    if _is_uri(dest_dir):
-        spark = spark or SparkSession.getActiveSession()
-        if spark is None:
-            raise ValueError("URI destination needs an active SparkSession")
-        fs = _HadoopFs(spark, dest_dir)
-        join = lambda *parts: "/".join(p.rstrip("/") for p in parts)  # noqa: E731
-        return _Fs(fs.listdir, fs.isdir, fs.exists, fs.rename, fs.rmtree, join)
-    return _Fs(
-        os.listdir, os.path.isdir, os.path.exists, os.rename, shutil.rmtree, os.path.join
-    )
-
-
-def swap_staging(
-    dest_dir: str,
-    tables: list[str],
-    spark: SparkSession | None = None,
-) -> list[str]:
+def swap_staging(spark: SparkSession, dest_dir: str, tables: list[str]) -> list[str]:
     """Publish the ``<t>__staging`` dir of each name in ``tables``, in
     the order given, and return the names (reference swap_temp_tables,
     sql.py:129-159).  A name with no staged dir fails in its rename, and
-    no unnamed staging dir is ever published.  A plain local path uses
-    ``os`` primitives; a URI destination (``file:``, ``hdfs://``,
-    ``s3a://``, ``gs://``) routes every rename/delete through the Hadoop
-    FileSystem API of the active Spark session — the same resolver
-    ``df.write`` used, so any scheme the write reached can also be
-    published (K8, reference writer.py:187-219).
+    no unnamed staging dir is ever published.  Every rename and delete
+    goes through the Hadoop FileSystem of ``spark`` that ``df.write``
+    staged the tables through, so any destination the write reached,
+    plain path or URI, is published where the write put it (K8,
+    reference writer.py:187-219).
 
     Per table the order is: rename the live dir aside to ``<t>__old``,
     rename staging into place, delete the old dir LAST.  This is
@@ -200,9 +170,9 @@ def swap_staging(
     concurrent reader fails.  If true no-gap reads are required,
     publish through a symlink flipped atomically (or a metastore
     pointer) instead."""
-    fs = _fs(dest_dir, spark)
+    fs = _HadoopFs(spark, dest_dir)
     for final in tables:
-        final_path = fs.join(dest_dir, final)
+        final_path = os.path.join(dest_dir, final)
         old_path = final_path + OLD_SUFFIX
         if fs.exists(old_path):  # leftover from a prior crash
             fs.rmtree(old_path)
@@ -245,22 +215,27 @@ def stage_tables(spark: SparkSession, stages: list[Callable[[], R]]) -> list[R]:
     return [f.result() for f in futures]
 
 
-def published_tables(dest_dir: str, spark: SparkSession | None = None) -> set[str]:
+def published_tables(spark: SparkSession, dest_dir: str) -> set[str]:
     """The tables published under ``dest_dir``: every directory except
     the ``<t>__staging`` and ``<t>__old`` dirs of a publish (in flight,
     or left by a crash) and ``_``-prefixed names other than
-    ``NODE_INDEX``.  A URI destination lists through the Hadoop
-    FileSystem of ``spark`` (else the active session)."""
-    fs = _fs(dest_dir, spark)
+    ``NODE_INDEX``, read from one listing."""
+    fs = _HadoopFs(spark, dest_dir)
     if not fs.isdir(dest_dir):
         return set()
     return {
         e
-        for e in fs.listdir(dest_dir)
-        if fs.isdir(fs.join(dest_dir, e))
+        for e, is_dir in fs.listdir(dest_dir).items()
+        if is_dir
         and not e.endswith((STAGING_SUFFIX, OLD_SUFFIX))
         and (e == NODE_INDEX or not e.startswith("_"))
     }
+
+
+def discard_staged(spark: SparkSession, dest_dir: str, table_name: str) -> None:
+    """Delete ``table_name``'s staged dir unpublished: a staged write
+    that turned out to change nothing."""
+    _HadoopFs(spark, dest_dir).rmtree(os.path.join(dest_dir, table_name + STAGING_SUFFIX))
 
 
 def read_table(
@@ -271,7 +246,7 @@ def read_table(
     schema: T.StructType | str | None = None,
 ) -> DataFrame:
     """Read a published table back by its data files: the entries of its
-    directory, listed through ``_fs`` (a plain path or a URI), whose
+    directory, listed through the destination's Hadoop FileSystem, whose
     names do not start with ``_`` or ``.``.  Spark's ``DataSource``
     treats a path named ``_…`` as hidden, so reading files rather than
     the directory lets ``_node_index`` and the schema marker read like
@@ -288,10 +263,9 @@ def read_table(
     never filtered by extension, so a table published in another format
     cannot read as empty.  A table with no data file reads as an empty
     frame of ``schema``."""
-    fs = _fs(dest_dir, spark)
-    path = fs.join(dest_dir, table_name)
-    entries = sorted(fs.listdir(path))
-    files = [fs.join(path, e) for e in entries if not e.startswith(("_", "."))]
+    path = os.path.join(dest_dir, table_name)
+    entries = sorted(_HadoopFs(spark, dest_dir).listdir(path))
+    files = [os.path.join(path, e) for e in entries if not e.startswith(("_", "."))]
     if wrong := [f for f in files if fmt not in f.rsplit("/", 1)[-1].split(".")[1:]]:
         raise ValueError(f"{table_name} under {dest_dir} holds {wrong[0]}, which is not {fmt}")
     if fmt in ("csv", "json") and schema is None and SCHEMA_MARKER in entries:

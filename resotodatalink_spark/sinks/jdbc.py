@@ -44,12 +44,11 @@ def write_jdbc(
     w.jdbc(url=url, table=table, mode="overwrite", properties={"batchsize": str(batch_size)})
 
 
-def execute_statements(
-    spark: SparkSession,
-    url: str,
-    statements: list[str],
-    tolerate_sqlstates: tuple[str, ...] = ("42Y55",),
-) -> list[str]:
+# Derby's "object does not exist": a guardless DROP of a missing table
+MISSING_OBJECT_SQLSTATE = "42Y55"
+
+
+def execute_statements(spark: SparkSession, url: str, statements: list[str]) -> list[str]:
     """Execute DDL/DML statements as ONE JDBC transaction over a live
     connection from the driver JVM's ``DriverManager`` (how the
     reference's engine connection runs the swap, sql.py:129-159).
@@ -64,13 +63,13 @@ def execute_statements(
     generation.  MySQL and Snowflake commit each DDL statement
     implicitly, so there the publish stays atomic per table only.
 
-    ``tolerate_sqlstates`` skips engines' missing-object errors where
-    the dialect has no ``IF EXISTS`` guard (Derby 42Y55) — but ONLY on
-    ``DROP`` statements, which are the guardless case, and without
-    ending the transaction.  A RENAME that hits the same state (e.g. the
-    tmp table is missing after a partial prior run) is a failed publish,
-    not a benign first-run drop, and must raise rather than let the old
-    generation silently stay live.  Anything else re-raises.  Returns
+    ``MISSING_OBJECT_SQLSTATE`` is skipped where the dialect has no
+    ``IF EXISTS`` guard (Derby) — but ONLY on ``DROP`` statements,
+    which are the guardless case, and without ending the transaction.
+    A RENAME that hits the same state (e.g. the tmp table is missing
+    after a partial prior run) is a failed publish, not a benign
+    first-run drop, and must raise rather than let the old generation
+    silently stay live.  Anything else re-raises.  Returns
     the statements that actually executed."""
     jvm = spark._jvm
     conn = jvm.java.sql.DriverManager.getConnection(url)
@@ -90,7 +89,7 @@ def execute_statements(
                     else None
                 )
                 is_drop = s.lstrip().upper().startswith("DROP ")
-                if not is_drop or state not in tolerate_sqlstates:
+                if not is_drop or state != MISSING_OBJECT_SQLSTATE:
                     raise
         conn.commit()
     except BaseException:

@@ -78,8 +78,7 @@ def _read_any(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if "://" in sf_dir or sf_dir.startswith("file:"):
         # Hadoop-compatible URI (s3a://, hdfs://, file:): the local
         # os.path probes below can't see it — keep the original
-        # behavior and let Spark resolve the parquet path remotely
-        # (sinks/files._is_uri routes the write side the same way).
+        # behavior and let Spark resolve the parquet path remotely.
         return spark.read.parquet(f"{base}.parquet")
     if os.path.exists(f"{base}.parquet"):
         return spark.read.parquet(f"{base}.parquet")

@@ -123,6 +123,25 @@ def test_volume_delta_job_count_and_untouched_tables(spark, tmp_path):
     assert _rows(spark, dest, "some_volume")[0][1] == 99
 
 
+@pytest.mark.parametrize("kind", ["plain", "uri"])
+def test_affected_table_that_merges_to_no_change_is_discarded(spark, tmp_path, kind):
+    """A changed instance without edges makes its link table affected;
+    the merge removes and adds nothing, so its staged copy is deleted
+    unpublished and the published table is left as it was."""
+    dest = str(tmp_path)
+    base = [_inst("i-1", 1), _inst("i-2", 2), _vol("v-1", 10), _edge("i-1", "v-1")]
+    collect_to_files(spark, GraphSource.from_docs(spark, base), example_model(), dest)
+    link = "link_some_instance_some_volume"
+    before = _mtimes(dest, link)
+    stats = sync_delta(
+        spark, GraphSource.from_docs(spark, [_inst("i-2", 5)]), example_model(),
+        dest if kind == "plain" else "file:" + dest,
+    )
+    assert stats[link] == {"upserted": 0, "removed": 0}
+    assert not [e for e in os.listdir(dest) if e.endswith("__staging")]
+    assert _mtimes(dest, link) == before
+
+
 def test_three_generations_equal_full_resync(spark, tmp_path):
     """Three generations on an indexed destination: kind changes, a
     tombstone with inbound links, an edge to an unchanged node, and a
@@ -402,10 +421,10 @@ def test_delta_replayed_after_crash_during_publish(
     # v-1 becomes an instance; v-2 dies with two inbound links
     docs = [_inst("v-1", 3), _inst("i-1", 1), _edge("i-1", "v-1")]
 
-    def crash(dest_dir, tables, spark=None):
+    def crash(spark, dest_dir, tables):
         # the publish renames in the order given, the index last: -1
         # stops after every table but the index
-        swap_staging(dest_dir, tables=tables[:published])
+        swap_staging(spark, dest_dir, tables=tables[:published])
         raise RuntimeError("crash during publish")
 
     monkeypatch.setattr(incremental, "swap_staging", crash)
@@ -436,10 +455,10 @@ def test_each_generation_publishes_in_one_call_with_the_index_last(
     calls = []
     for module in (sync, incremental):
 
-        def recording(dest_dir, tables, spark=None, _real=module.swap_staging,
+        def recording(spark, dest_dir, tables, _real=module.swap_staging,
                       _entry=module.__name__.rsplit(".", 1)[-1]):
             calls.append((_entry, list(tables)))
-            return _real(dest_dir, tables, spark=spark)
+            return _real(spark, dest_dir, tables)
 
         monkeypatch.setattr(module, "swap_staging", recording)
     dest = str(tmp_path)

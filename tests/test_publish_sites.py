@@ -10,7 +10,11 @@ generation (``published_tables``, ``read_table``): a module that
 matches them itself would be a second owner of the layout.  The SQL
 sink has one publish path too: only ``operators/sync.collect_sql``
 renders a dialect's ``swap_sql`` and runs it through
-``execute_statements``.  These scans fail the moment a second path
+``execute_statements``.  Every destination has one file system: the
+sink's ``_HadoopFs``, the Hadoop FileSystem ``df.write`` resolved it
+to; no module on the sync path lists, renames or deletes a
+destination's files through ``os`` or ``shutil``, which see only the
+driver's local disk.  These scans fail the moment a second path
 appears.  No Spark is needed.
 """
 
@@ -67,3 +71,43 @@ def test_sql_publish_has_one_caller():
         defines, uses = _publish_sites({name})
         assert defines == {home}
         assert uses == {"operators/sync.py"}
+
+
+# modules on the sync path, and the os/shutil file operations that
+# would fork their destination away from the Hadoop FileSystem
+SYNC_PATH = ("sinks/", "operators/sync.py", "operators/incremental.py", "streaming/delta_sync.py")
+LOCAL_FS_CALLS = {
+    "os": {"rename", "replace", "listdir", "remove"},
+    "os.path": {"isdir", "exists"},
+}
+
+
+def _local_fs_calls(path: Path) -> list[str]:
+    """``shutil.*`` and the ``LOCAL_FS_CALLS`` referenced in ``path``,
+    as attributes or imports; ``os.path.join`` string building is not
+    a file operation."""
+    found = []
+    for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+        if isinstance(node, ast.Attribute):
+            base = ast.unparse(node.value)
+            if base == "shutil" or node.attr in LOCAL_FS_CALLS.get(base, ()):
+                found.append(f"{base}.{node.attr}")
+        elif isinstance(node, (ast.Import, ast.ImportFrom)):
+            module = getattr(node, "module", None)
+            for a in node.names:
+                if "shutil" in (module, a.name) or a.name in LOCAL_FS_CALLS.get(module, ()):
+                    found.append(f"import {module or a.name}")
+    return found
+
+
+def test_every_destination_has_one_file_system():
+    defines, uses = _publish_sites({"_HadoopFs"})
+    assert defines == {"sinks/files.py"}
+    assert uses == set()
+    calls = {
+        rel: found
+        for path in sorted(PACKAGE.rglob("*.py"))
+        if (rel := path.relative_to(PACKAGE).as_posix()).startswith(SYNC_PATH)
+        and (found := _local_fs_calls(path))
+    }
+    assert calls == {}

@@ -30,7 +30,7 @@ def test_parquet_staging_swap_roundtrip(spark, tmp_path):
         write_table(df, dest, name)
     # nothing published yet
     assert all(e.endswith("__staging") for e in os.listdir(dest))
-    published = swap_staging(dest, tables=sorted(views))
+    published = swap_staging(spark, dest, tables=sorted(views))
     assert sorted(published) == [
         "link_some_instance_some_volume",
         "some_instance",
@@ -45,12 +45,12 @@ def test_swap_replaces_existing(spark, tmp_path):
     dest = str(tmp_path)
     df1 = spark.range(3).withColumnRenamed("id", "v")
     write_table(df1, dest, "t")
-    swap_staging(dest, tables=["t"])
+    swap_staging(spark, dest, tables=["t"])
     assert read_table(spark, dest, "t").count() == 3
     df2 = spark.range(5).withColumnRenamed("id", "v")
     write_table(df2, dest, "t")  # staged
     assert read_table(spark, dest, "t").count() == 3  # still old data
-    swap_staging(dest, tables=["t"])
+    swap_staging(spark, dest, tables=["t"])
     assert read_table(spark, dest, "t").count() == 5
 
 
@@ -60,7 +60,7 @@ def test_csv_stringifies_nested(spark, tmp_path):
         "select 1 as a, array('x','y') as arr, named_struct('k', 2) as st"
     )
     write_table(df, dest, "t", fmt="csv")
-    swap_staging(dest, tables=["t"])
+    swap_staging(spark, dest, tables=["t"])
     back = read_table(spark, dest, "t", fmt="csv")
     row = back.collect()[0]
     assert row["arr"] == '["x","y"]' and row["st"] == '{"k":2}'
@@ -173,7 +173,7 @@ def test_cloud_uri_staged_publish_roundtrip(spark, tmp_path):
     # staged, not yet live
     assert os.path.isdir(tmp_path / "bucket" / "t__staging")
     assert not os.path.exists(tmp_path / "bucket" / "t")
-    assert swap_staging(uri, tables=["t"], spark=spark) == ["t"]
+    assert swap_staging(spark, uri, tables=["t"]) == ["t"]
     assert not os.path.exists(tmp_path / "bucket" / "t__staging")
     got = read_table(spark, uri, "t")
     assert sorted(r["v"] for r in got.collect()) == [0, 2, 4, 6, 8]
@@ -181,7 +181,7 @@ def test_cloud_uri_staged_publish_roundtrip(spark, tmp_path):
     # generation 2 replaces, old dir cleaned up
     df2 = spark.range(3).select(F.col("id"), (F.col("id") + 10).alias("v"))
     write_table(df2, uri, "t")
-    assert swap_staging(uri, tables=["t"], spark=spark) == ["t"]
+    assert swap_staging(spark, uri, tables=["t"]) == ["t"]
     assert sorted(
         r["v"] for r in read_table(spark, uri, "t").collect()
     ) == [10, 11, 12]
@@ -201,7 +201,7 @@ def test_orc_and_json_roundtrip(spark, tmp_path):
     dest = str(tmp_path)
     for fmt in ("orc", "json"):
         write_table(df, dest, f"t_{fmt}", fmt=fmt)
-        swap_staging(dest, tables=[f"t_{fmt}"])
+        swap_staging(spark, dest, tables=[f"t_{fmt}"])
         back = read_table(spark, dest, f"t_{fmt}", fmt=fmt)
         got = sorted((r.id, list(r.arr)) for r in back.collect())
         assert got == [(0, [0, 0]), (1, [1, 2]), (2, [2, 4])]
@@ -222,7 +222,7 @@ def test_json_roundtrip_keeps_temporal_and_decimal_types(spark, tmp_path):
     )
     dest = str(tmp_path)
     write_table(df, dest, "typed", fmt="json")
-    assert swap_staging(dest, tables=["typed"]) == ["typed"]
+    assert swap_staging(spark, dest, tables=["typed"]) == ["typed"]
     back = read_table(spark, dest, "typed", fmt="json")
     # nullability is reader policy (JSON always reads nullable);
     # names and TYPES are the fidelity under test
@@ -239,7 +239,7 @@ def test_json_roundtrip_keeps_temporal_and_decimal_types(spark, tmp_path):
     # csv marker carries the stringified shape
     df2 = df.select("ts", "d", "amt", "s")
     write_table(df2, dest, "typed_csv", fmt="csv")
-    swap_staging(dest, tables=["typed_csv"])
+    swap_staging(spark, dest, tables=["typed_csv"])
     back_csv = read_table(spark, dest, "typed_csv", fmt="csv")
     assert _shape(back_csv.schema) == _shape(df2.schema)
 
@@ -346,11 +346,12 @@ def test_p9_jdbc_column_types_fragment():
     assert "`_id` VARCHAR(255)" in frag
     assert "blob" not in frag  # >1024: dialect default (unbounded) applies
     assert "cores" not in frag
-    # every aggregate kind carries the carz string columns, so the
-    # fragment always includes their VARCHAR(255) defaults
-    frag_bare = jdbc_column_types(dialect_for("default"), model, "bare", with_id=False)
+    # every kind table carries _id, and every aggregate kind the carz
+    # string columns, so the fragment always includes their
+    # VARCHAR(255) defaults
+    frag_bare = jdbc_column_types(dialect_for("default"), model, "bare")
     assert frag_bare == (
-        "`cloud` VARCHAR(255), `account` VARCHAR(255),"
+        "`_id` VARCHAR(255), `cloud` VARCHAR(255), `account` VARCHAR(255),"
         " `region` VARCHAR(255), `zone` VARCHAR(255)"
     )
 
@@ -386,7 +387,7 @@ def test_published_text_tables_cross_read_by_duckdb(spark, tmp_path):
     dest = str(tmp_path)
     write_table(df, dest, "tj", fmt="json")
     write_table(df, dest, "tc", fmt="csv")
-    assert sorted(swap_staging(dest, tables=["tj", "tc"])) == ["tc", "tj"]
+    assert sorted(swap_staging(spark, dest, tables=["tj", "tc"])) == ["tc", "tj"]
     con = duckdb.connect()
     # external readers apply their OWN inference (Spark's ISO-Z
     # timestamp strings read back as text); the claim under test is
@@ -405,30 +406,40 @@ def test_published_text_tables_cross_read_by_duckdb(spark, tmp_path):
     assert got_c == want
 
 
-def test_collect_sql_fallback_keys_on_link_prefix():
-    """r12 ADVICE: the from_id/to_id createTableColumnTypes fragment
-    must apply ONLY to link-table names; a kind table missing from
-    col_types gets None (unsized) instead of a fragment referencing
-    columns its schema doesn't have."""
-    from resotodatalink_spark.model.kinds import TEMP_PREFIX
+def test_collect_sql_sizes_kind_tables_and_link_tables(spark, monkeypatch):
+    """r12 ADVICE, checked on a real ``collect_sql`` call: on a
+    default-dialect URL each kind table is written with its own P9
+    fragment, keyed by the name ``sync_views`` gives it, and the link
+    table with sized ``from_id``/``to_id`` columns."""
+    from resotodatalink_spark.operators.sync import collect_sql
+    from resotodatalink_spark.sinks import jdbc
+    from resotodatalink_spark.sinks.dialects import dialect_for, jdbc_column_types
 
-    # mirror collect_sql's keying expression on representative names
-    link_types = "`from_id` VARCHAR(255), `to_id` VARCHAR(255)"
-    def pick(name, col_types):
-        is_link = name[len(TEMP_PREFIX):].startswith("link_")
-        return col_types.get(name, link_types if is_link else None)
+    written = {}
 
-    col_types = {TEMP_PREFIX + "some_instance": "`name` VARCHAR(64)"}
-    assert pick(TEMP_PREFIX + "some_instance", col_types) == "`name` VARCHAR(64)"
-    assert pick(TEMP_PREFIX + "link_a_b", col_types) == link_types
-    # a kind table whose name failed to match col_types' keying:
-    # unsized write, NOT the link fragment
-    assert pick(TEMP_PREFIX + "unmatched_kind", col_types) is None
+    def fake_write(df, url, table, batch_size, column_types):
+        written[table] = column_types
+
+    monkeypatch.setattr(jdbc, "write_jdbc", fake_write)
+    model = example_model()
+    url = "jdbc:postgresql://h/db"
+    collect_sql(spark, GraphSource.from_docs(spark, example_docs()), model, url)
+    kind_types = {
+        f"tmp_{k}": jdbc_column_types(dialect_for(url), model, k)
+        for k in ("some_instance", "some_volume")
+    }
+    assert all(t.startswith("`_id` VARCHAR(255), ") for t in kind_types.values())
+    assert written == {
+        **kind_types,
+        "tmp_link_some_instance_some_volume": "`from_id` VARCHAR(255), `to_id` VARCHAR(255)",
+    }
 
 
 def _dest(tmp_path, kind):
-    """``tmp_path`` as a plain path or as a ``file:`` URI, which takes the
-    Hadoop FileSystem route an ``s3a://`` destination would."""
+    """``tmp_path`` as a plain path or as a ``file:`` URI.  Both go
+    through the one Hadoop FileSystem an ``s3a://`` destination would;
+    they differ in how the path is qualified: the plain one resolves
+    against ``fs.defaultFS``, the URI names its scheme."""
     return str(tmp_path) if kind == "plain" else "file:" + str(tmp_path)
 
 
@@ -437,7 +448,7 @@ def test_read_table_applies_schema_to_parquet(spark, tmp_path):
     its order, and a column the files lack reads as NULL."""
     dest = str(tmp_path)
     write_table(spark.range(2).select("id", F.lit("a").alias("s")), dest, "t")
-    swap_staging(dest, tables=["t"])
+    swap_staging(spark, dest, tables=["t"])
     schema = T.StructType(
         [T.StructField("s", T.StringType()), T.StructField("id", T.LongType()),
          T.StructField("gained", T.IntegerType())]
@@ -454,7 +465,7 @@ def test_read_table_reads_the_node_index_by_its_data_files(spark, tmp_path, kind
     dest = _dest(tmp_path, kind)
     index = spark.createDataFrame([("a", "k1"), ("b", "k2")], "id string, kind string")
     write_table(index, dest, NODE_INDEX)
-    swap_staging(dest, tables=[NODE_INDEX], spark=spark)
+    swap_staging(spark, dest, tables=[NODE_INDEX])
     back = read_table(spark, dest, NODE_INDEX)
     assert sorted(tuple(r) for r in back.collect()) == [("a", "k1"), ("b", "k2")]
     files = back.inputFiles()
@@ -467,7 +478,7 @@ def test_read_table_rejects_another_format_and_reads_an_empty_table(spark, tmp_p
     dir with no data file reads as an empty frame of ``schema``."""
     dest = str(tmp_path)
     write_table(spark.range(2), dest, "t", fmt="csv")
-    swap_staging(dest, tables=["t"])
+    swap_staging(spark, dest, tables=["t"])
     with pytest.raises(ValueError, match="not parquet"):
         read_table(spark, dest, "t")
     assert read_table(spark, dest, "t", fmt="csv").count() == 2
@@ -482,5 +493,5 @@ def test_published_tables_lists_tables_and_the_node_index(spark, tmp_path, kind)
         os.makedirs(tmp_path / name)
     (tmp_path / "loose_file").write_text("")
     dest = _dest(tmp_path, kind)
-    assert published_tables(dest, spark) == {"t", NODE_INDEX}
-    assert published_tables(_dest(tmp_path / "missing", kind), spark) == set()
+    assert published_tables(spark, dest) == {"t", NODE_INDEX}
+    assert published_tables(spark, _dest(tmp_path / "missing", kind)) == set()
