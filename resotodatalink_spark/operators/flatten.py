@@ -91,7 +91,6 @@ def sync_views(
     spark: SparkSession,
     source: GraphSource,
     model: Model,
-    temp_prefix: bool = False,
 ) -> dict[str, DataFrame]:
     """Register every kind table and link table as temp views; returns
     name -> DataFrame.  View names follow reference schema_utils.py:28-36.
@@ -99,13 +98,11 @@ def sync_views(
     can share one name; that table holds the union of their edges, as
     a delta's link rows do (``operators.incremental._plan``)."""
     out = {
-        get_table_name(kind.fqn, with_tmp_prefix=temp_prefix): flatten_nodes(
-            source.nodes, model, kind
-        )
+        get_table_name(kind.fqn): flatten_nodes(source.nodes, model, kind)
         for kind in model.table_kinds()
     }
     for (fk, tk), df in link_tables(source).items():
-        name = get_link_table_name(fk, tk, with_tmp_prefix=temp_prefix)
+        name = get_link_table_name(fk, tk)
         out[name] = out[name].unionByName(df) if name in out else df
     for name, df in out.items():
         df.createOrReplaceTempView(name)

@@ -66,7 +66,6 @@ from __future__ import annotations
 
 import functools
 
-import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -74,7 +73,7 @@ from resotodatalink_spark.model.compiler import link_table_schema
 from resotodatalink_spark.model.kinds import Model, get_link_table_name, get_table_name
 # sync_views is not called here; syncbench/spans.py wraps it in this module
 from resotodatalink_spark.operators.flatten import flatten_nodes, sync_views  # noqa: F401
-from resotodatalink_spark.operators.sync import Feedback, NoFeedback
+from resotodatalink_spark.operators.sync import Progress, no_progress
 from resotodatalink_spark.sinks.files import (
     NODE_INDEX,
     discard_staged,
@@ -84,7 +83,7 @@ from resotodatalink_spark.sinks.files import (
     swap_staging,
     write_table,
 )
-from resotodatalink_spark.sources.graph import GraphSource
+from resotodatalink_spark.sources.graph import GraphSource, local_frame
 
 
 def _node_index(spark: SparkSession, dest_dir: str, listed: set[str]) -> DataFrame:
@@ -100,7 +99,7 @@ def _node_index(spark: SparkSession, dest_dir: str, listed: set[str]) -> DataFra
         raise ValueError(
             f"{dest_dir} holds tables but no {NODE_INDEX}: republish it with collect_to_files"
         )
-    return _local(spark, id=[], kind=[])
+    return local_frame(spark, id=[], kind=[])
 
 
 def _merge(
@@ -123,14 +122,6 @@ def _merge(
 
 def _tag(df: DataFrame, what: str, a: str, b: str) -> DataFrame:
     return df.select(F.lit(what).alias("what"), F.col(a).alias("a"), F.col(b).alias("b"))
-
-
-def _local(spark: SparkSession, **columns: list) -> DataFrame:
-    """Driver-side string columns as a local relation, built in one JVM
-    call (a parallelized list would run Python tasks on every read)."""
-    return spark.createDataFrame(
-        pa.table({c: pa.array(v, pa.string()) for c, v in columns.items()})
-    )
 
 
 def _plan(
@@ -200,7 +191,7 @@ def sync_delta(
     model: Model,
     dest_dir: str,
     deleted_ids: list[str] | None = None,
-    feedback: Feedback | None = None,
+    progress: Progress = no_progress,
 ) -> dict[str, dict[str, int]]:
     """Advance the published tables under ``dest_dir`` by one
     generation.  ``delta`` holds ONLY changed/new nodes and the
@@ -216,8 +207,8 @@ def sync_delta(
     holds tables but no index raises ``ValueError`` before anything is
     staged (republish it with ``collect_to_files``).
 
-    Affected tables stage concurrently; feedback reports every table in
-    order, on the caller's thread, once all of them are staged.
+    Affected tables stage concurrently; ``progress`` reports every
+    table in order, on the caller's thread, once all of them are staged.
     ``delta`` is read once per affected kind table: pass a materialized
     one (``streaming.delta_sync.apply_delta_batch`` does) when its
     source is expensive to re-read.
@@ -228,7 +219,6 @@ def sync_delta(
     relation.  The driver holds the delta's ids and edges at once, so
     a delta must be change-sized; publish a whole graph, or a catch-up
     of many generations, with ``collect_to_files`` instead."""
-    feedback = feedback or NoFeedback()
     deleted = sorted(set(deleted_ids or []))
     listed = published_tables(spark, dest_dir)
     on_disk = listed - {NODE_INDEX}
@@ -242,7 +232,7 @@ def sync_delta(
     # them to the driver anyway.
     nodes = delta.nodes.select("id", "kind")
     edges = delta.default_edges().select("from_id", "to_id")
-    gone = _local(spark, id=deleted)
+    gone = local_frame(spark, id=deleted)
     mentioned = (
         nodes.select("id")
         .unionByName(gone)
@@ -261,7 +251,7 @@ def sync_delta(
     # table's delta rows contain.  A changed node whose outbound edges
     # all vanished ships no link row, and a node whose kind changed has
     # no row in its old kind's delta; both still own stale rows.
-    swept = _local(spark, id=changed + deleted)
+    swept = local_frame(spark, id=changed + deleted)
 
     def frames(name: str) -> tuple[DataFrame | None, DataFrame | None]:
         """One affected table's delta rows, and its published rows unless
@@ -273,7 +263,7 @@ def sync_delta(
             dv = flatten_nodes(delta.nodes, model, kind_tables[name])
         elif name in links:
             f, t = zip(*links[name])
-            dv = _local(spark, from_id=list(f), to_id=list(t))
+            dv = local_frame(spark, from_id=list(f), to_id=list(t))
         if name not in on_disk:
             return dv, None
         if name.startswith("link_"):
@@ -322,7 +312,7 @@ def sync_delta(
     stats: dict[str, dict[str, int]] = {}
     for i, name in enumerate(names, 1):
         stats[name] = {"upserted": upserted.get(name, 0), "removed": removed.get(name, 0)}
-        feedback.progress_done("sync_delta", i, len(names))
+        progress("sync_delta", i, len(names))
 
     # publish once every table is staged, the index last: a crash during
     # the tables' renames leaves it at N, and a replay plans against N again

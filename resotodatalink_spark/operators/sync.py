@@ -10,10 +10,12 @@ the cluster scheduler replace the hand-rolled batching, and the tables'
 staged writes overlap on a bounded driver pool instead of queueing on
 one IO thread.
 
-Progress feedback mirrors the reference's ``CoreFeedback.progress_done``
-threading (collect_plugins.py:34, 95-96, 196-212) as a plain callback
-protocol — table-level granularity, since tasks inside a write are the
-cluster's business, not the driver loop's.
+Progress is one callable, ``progress(step, current, total)``: the
+signature of the reference's ``CoreFeedback.progress_done``
+(collect_plugins.py:34, 95-96, 196-212), so a caller holding such an
+object passes its bound ``progress_done``.  Granularity is per table,
+since tasks inside a write are the cluster's business, not the driver
+loop's.
 """
 
 from __future__ import annotations
@@ -22,38 +24,19 @@ import functools
 from collections.abc import Iterable
 from typing import Callable, Protocol
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from resotodatalink_spark.model.kinds import Model
 from resotodatalink_spark.operators.flatten import sync_views
 from resotodatalink_spark.sinks.files import NODE_INDEX, stage_tables, swap_staging, write_table
 from resotodatalink_spark.sources.graph import GraphSource
 
-
-class Feedback(Protocol):
-    def progress_done(self, step: str, current: int, total: int) -> None: ...
+Progress = Callable[[str, int, int], None]
 
 
-class NoFeedback:
-    """No-op feedback (the reference's analytics NoEventSender spirit,
-    analytics.py:13-62 — nothing leaves the process)."""
-
-    def progress_done(self, step: str, current: int, total: int) -> None:
-        pass
-
-
-def collect_to_views(
-    spark: SparkSession,
-    source: GraphSource,
-    model: Model,
-    feedback: Feedback | None = None,
-) -> dict[str, DataFrame]:
-    """Graph -> registered per-kind + link views (the in-session analog
-    of collect_sql's table sync)."""
-    feedback = feedback or NoFeedback()
-    views = sync_views(spark, source, model)
-    feedback.progress_done("sync_views", len(views), len(views))
-    return views
+def no_progress(step: str, current: int, total: int) -> None:
+    """The default hook: nothing leaves the process (the reference's
+    analytics NoEventSender stance, analytics.py:13-62)."""
 
 
 def collect_to_files(
@@ -63,7 +46,7 @@ def collect_to_files(
     dest_dir: str,
     fmt: str = "parquet",
     swap: bool = True,
-    feedback: Feedback | None = None,
+    progress: Progress = no_progress,
     node_index: bool = True,
 ) -> list[str]:
     """Graph -> staged table files -> one publish pass (collect_to_file
@@ -80,13 +63,12 @@ def collect_to_files(
     table, against which ``sync_delta`` plans each delta.  It is staged
     with the tables, as parquet whatever ``fmt`` is (only ``sync_delta``
     reads it), and published last in the same pass, so a crash during
-    the publish never leaves it newer than a table.  The return
-    value and the feedback list only the kind and link tables, the SQL
-    surface.  ``swap`` and ``node_index`` select nothing: they accept
+    the publish never leaves it newer than a table.  The return value
+    and the progress calls count only the kind and link tables, the
+    SQL surface.  ``swap`` and ``node_index`` select nothing: they accept
     ``True`` only, so callers that pass it keep working."""
     if not (swap and node_index):
         raise ValueError("collect_to_files always publishes its tables and _node_index")
-    feedback = feedback or NoFeedback()
     views = sync_views(spark, source, model)
     tables = sorted(views)
     index = source.nodes.select("id", "kind")
@@ -99,9 +81,9 @@ def collect_to_files(
         + [functools.partial(write_table, index, dest_dir, NODE_INDEX)],
     )
     for i in range(1, len(tables) + 1):
-        feedback.progress_done("write_tables", i, len(tables))
+        progress("write_tables", i, len(tables))
     swap_staging(spark, dest_dir, tables=[*tables, NODE_INDEX])
-    feedback.progress_done("swap", len(tables), len(tables))
+    progress("swap", len(tables), len(tables))
     return tables
 
 
@@ -110,7 +92,7 @@ def collect_sql(
     source: GraphSource,
     model: Model,
     url: str,
-    feedback: Feedback | None = None,
+    progress: Progress = no_progress,
     batch_size: int = 5000,
     run_swap: bool = False,
     drop_existing_tables: bool = False,
@@ -137,8 +119,7 @@ def collect_sql(
         write_jdbc,
     )
 
-    feedback = feedback or NoFeedback()
-    views = sync_views(spark, source, model, temp_prefix=True)
+    views = sync_views(spark, source, model)
     names = sorted(views)
     dialect = dialect_for(url)
     # P9 on the production path: Spark's JDBC writer generates the
@@ -146,9 +127,7 @@ def collect_sql(
     # createTableColumnTypes option (kind tables from the model's
     # metadata; link tables are two id columns).
     col_types = {
-        get_table_name(k.fqn, with_tmp_prefix=True): jdbc_column_types(
-            dialect, model, k.fqn
-        )
+        get_table_name(k.fqn): jdbc_column_types(dialect, model, k.fqn)
         for k in model.table_kinds()
     }
     id_type = dialect.string_type(None)
@@ -159,18 +138,12 @@ def collect_sql(
         write_jdbc(
             views[name],
             url,
-            name,
+            TEMP_PREFIX + name,
             batch_size=batch_size,
             column_types=col_types.get(name, link_types),
         )
-        feedback.progress_done("write_jdbc", i, len(names))
-    stmts: list[str] = []
-    updated: set[str] = set()
-    for name in names:
-        if name.startswith(TEMP_PREFIX):
-            prod = name[len(TEMP_PREFIX):]
-            updated.add(prod)
-            stmts.extend(dialect.swap_sql(name, prod))
+        progress("write_jdbc", i, len(names))
+    stmts = [s for name in names for s in dialect.swap_sql(TEMP_PREFIX + name, name)]
     if run_swap:
         executed = execute_statements(spark, url, stmts)
         if drop_existing_tables:
@@ -185,23 +158,13 @@ def collect_sql(
             stale = [
                 t
                 for t in list_jdbc_tables(spark, url)
-                if t not in updated and not t.startswith(TEMP_PREFIX)
+                if t not in views and not t.startswith(TEMP_PREFIX)
             ]
             executed += execute_statements(
                 spark, url, [f"DROP TABLE {t}" for t in stale]
             )
-        feedback.progress_done("swap", len(executed), len(executed))
+        progress("swap", len(executed), len(executed))
     return stmts
-
-
-def on_progress(fn: Callable[[str, int, int], None]) -> Feedback:
-    """Adapt a bare callable to the Feedback protocol."""
-
-    class _F:
-        def progress_done(self, step: str, current: int, total: int) -> None:
-            fn(step, current, total)
-
-    return _F()
 
 
 class CollectorGraph(Protocol):
@@ -237,46 +200,35 @@ def collect_plugin(
     collector: CollectorPlugin,
     dest_dir: str,
     fmt: str = "parquet",
-    feedback: Feedback | None = None,
+    progress: Progress = no_progress,
 ) -> tuple[str, int, int]:
     """Invoke a collector plugin end-to-end — the U4 driver loop, the
     Spark analog of reference ``collect_to_file``/``collect_sql``
     (collect_plugins.py:30-68, 103-152) with the reference's stage
-    names: ``progress_done(cloud, 0, 1)`` before ``collect()``,
-    ``"sync_db"`` progress while tables write, ``progress_done(cloud,
-    1, 1)`` at the end, returning ``(cloud, n_nodes, n_edges)``.
+    names: ``progress(cloud, 0, 1)`` before ``collect()``, the table
+    writes and swap of ``collect_to_files`` reported as ``"sync_db"``
+    (collect_plugins.py:40, 95-96), ``progress(cloud, 1, 1)`` at the
+    end, returning ``(cloud, n_nodes, n_edges)``.
 
     The kind model comes from ``collector.graph.export_model()``
     (collect_plugins.py:116-117) and the data path is the standard
     docs -> GraphSource -> model-compiled flatten -> staged write ->
-    swap pipeline.  ``from_docs`` parallelizes the in-memory
-    doc list; a collector too large for the driver should spill NDJSON
-    and use ``GraphSource.from_json_lines`` instead (same downstream
-    path)."""
-    feedback = feedback or NoFeedback()
-    feedback.progress_done(collector.cloud, 0, 1)
+    swap pipeline.  ``from_docs`` holds the in-memory doc list on the
+    driver; a collector too large for that should spill NDJSON and use
+    ``GraphSource.from_json_lines`` instead (same downstream path)."""
+    progress(collector.cloud, 0, 1)
     collector.collect()
     model = Model.from_json(collector.graph.export_model())
     docs = list(collector.graph.export_docs())
     n_nodes = sum(1 for d in docs if d.get("type") == "node")
     n_edges = sum(1 for d in docs if d.get("type") == "edge")
-    source = GraphSource.from_docs(spark, docs)
-
-    class _SyncDb:
-        """Reference stage-name adapter: table-write/swap progress
-        surfaces as the reference's "sync_db" step
-        (collect_plugins.py:40, 95-96)."""
-
-        def progress_done(self, step: str, current: int, total: int) -> None:
-            feedback.progress_done("sync_db", current, total)
-
     collect_to_files(
         spark,
-        source,
+        GraphSource.from_docs(spark, docs),
         model,
         dest_dir,
         fmt=fmt,
-        feedback=_SyncDb(),
+        progress=lambda _, current, total: progress("sync_db", current, total),
     )
-    feedback.progress_done(collector.cloud, 1, 1)
+    progress(collector.cloud, 1, 1)
     return collector.cloud, n_nodes, n_edges

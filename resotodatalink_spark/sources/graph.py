@@ -22,11 +22,22 @@ import json
 from collections.abc import Iterable
 from typing import Any
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 NODE_COLS = ("id", "kind", "reported", "ancestors")
 EDGE_COLS = ("from_id", "to_id", "edge_type")
+
+
+def local_frame(spark: SparkSession, **columns: list) -> DataFrame:
+    """Driver-side string columns as one DataFrame, built in one JVM
+    call from an Arrow table (a parallelized list would run Python
+    tasks on every read).  The one way the sync path turns driver rows
+    into a frame."""
+    return spark.createDataFrame(
+        pa.table({c: pa.array(v, pa.string()) for c, v in columns.items()})
+    )
 
 
 class GraphSource:
@@ -48,11 +59,10 @@ class GraphSource:
     def from_docs(
         spark: SparkSession, docs: Iterable[dict[str, Any]]
     ) -> "GraphSource":
-        """In-memory docs (collector-plugin path, collect_plugins.py:30-68).
-        Test/small-graph convenience; big graphs should come via files."""
-        rows = [(json.dumps(d),) for d in docs]
-        raw = spark.createDataFrame(rows, "doc: string")
-        return GraphSource._split(raw)
+        """In-memory docs (collector-plugin path, collect_plugins.py:30-68)
+        as one ``doc`` string column built by ``local_frame``.  For
+        small graphs; big graphs come via files (``from_json_lines``)."""
+        return GraphSource._split(local_frame(spark, doc=[json.dumps(d) for d in docs]))
 
     @staticmethod
     def parse_docs(raw: DataFrame) -> DataFrame:

@@ -19,6 +19,7 @@ for the JVM's lifetime, and the Spark JVM is session-scoped.
 
 from __future__ import annotations
 
+import threading
 import uuid
 
 import pytest
@@ -71,6 +72,29 @@ def test_collect_sql_live_roundtrip_golden(spark):
     assert _rows(spark, url, "link_some_instance_some_volume") == [
         ("i-123", "v-123")
     ]
+
+
+def test_collect_sql_reports_progress_on_the_callers_thread(spark):
+    """``progress`` gets one ``write_jdbc`` call per table in order,
+    then one ``swap`` call counting the statements executed: on a fresh
+    database only the RENAMEs (each DROP of a missing production table
+    is skipped), on the second sync every statement returned."""
+    url = _derby_url()
+    events = []
+
+    def record(step, current, total):
+        events.append((step, current, total, threading.get_ident()))
+
+    me = threading.get_ident()
+    writes = [("write_jdbc", i, 3, me) for i in (1, 2, 3)]
+    src = GraphSource.from_docs(spark, example_docs())
+    collect_sql(spark, src, example_model(), url, run_swap=True, progress=record)
+    assert events == writes + [("swap", 3, 3, me)]
+
+    events.clear()
+    stmts = collect_sql(spark, src, example_model(), url, run_swap=True, progress=record)
+    assert len(stmts) == 6
+    assert events == writes + [("swap", 6, 6, me)]
 
 
 def test_second_sync_replaces_not_merges(spark):

@@ -14,8 +14,12 @@ renders a dialect's ``swap_sql`` and runs it through
 sink's ``_HadoopFs``, the Hadoop FileSystem ``df.write`` resolved it
 to; no module on the sync path lists, renames or deletes a
 destination's files through ``os`` or ``shutil``, which see only the
-driver's local disk.  These scans fail the moment a second path
-appears.  No Spark is needed.
+driver's local disk.  Driver rows become a frame one way: on the sync
+path and in ``sources/graph.py`` only ``sources/graph.local_frame``
+(one Arrow call) and ``read_table``'s empty frame call
+``createDataFrame``, and nothing parallelizes a Python list, whose
+every read would run Python tasks.  These scans fail the moment a
+second path appears.  No Spark is needed.
 """
 
 from __future__ import annotations
@@ -111,3 +115,34 @@ def test_every_destination_has_one_file_system():
         and (found := _local_fs_calls(path))
     }
     assert calls == {}
+
+
+def _frame_builds(path: Path) -> set[tuple[str, str]]:
+    """(innermost enclosing function, attribute) for every
+    ``createDataFrame`` or ``parallelize`` referenced in ``path``."""
+    found = set()
+
+    def visit(node: ast.AST, fn: str) -> None:
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.Attribute) and child.attr in {"createDataFrame", "parallelize"}:
+                found.add((fn, child.attr))
+            inner = isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef))
+            visit(child, child.name if inner else fn)
+
+    visit(ast.parse(path.read_text(), filename=str(path)), "<module>")
+    return found
+
+
+def test_driver_rows_have_one_builder():
+    builds = {
+        (rel, *site)
+        for path in sorted(PACKAGE.rglob("*.py"))
+        if (rel := path.relative_to(PACKAGE).as_posix()).startswith(
+            (*SYNC_PATH, "sources/graph.py")
+        )
+        for site in _frame_builds(path)
+    }
+    assert builds == {
+        ("sources/graph.py", "local_frame", "createDataFrame"),
+        ("sinks/files.py", "read_table", "createDataFrame"),
+    }

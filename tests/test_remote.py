@@ -9,7 +9,7 @@ import json
 import socket
 import threading
 
-from resotodatalink_spark.operators.sync import collect_to_views
+from resotodatalink_spark.operators.flatten import sync_views
 from resotodatalink_spark.sources.remote import (
     read_spooled_graph,
     stitch,
@@ -38,7 +38,7 @@ def test_remote_roundtrip_dir_stream(spark, tmp_path):
     assert g.nodes.count() == 2
     assert g.edges.count() == 1
     # the rebuilt source feeds the existing sync path unchanged
-    views = collect_to_views(spark, g, example_model())
+    views = sync_views(spark, g, example_model())
     assert views["some_instance"].count() == 1
     assert views["some_volume"].count() == 1
 

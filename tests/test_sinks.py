@@ -409,8 +409,8 @@ def test_published_text_tables_cross_read_by_duckdb(spark, tmp_path):
 def test_collect_sql_sizes_kind_tables_and_link_tables(spark, monkeypatch):
     """r12 ADVICE, checked on a real ``collect_sql`` call: on a
     default-dialect URL each kind table is written with its own P9
-    fragment, keyed by the name ``sync_views`` gives it, and the link
-    table with sized ``from_id``/``to_id`` columns."""
+    fragment, written to its ``tmp_`` table, and the link table with
+    sized ``from_id``/``to_id`` columns."""
     from resotodatalink_spark.operators.sync import collect_sql
     from resotodatalink_spark.sinks import jdbc
     from resotodatalink_spark.sinks.dialects import dialect_for, jdbc_column_types

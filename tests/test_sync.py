@@ -1,33 +1,18 @@
-"""Pipeline entry points: collect_to_views / collect_to_files with
-progress feedback + execute_sql bind vars (reference
+"""Pipeline entry points: collect_to_files / sync_delta with a
+progress callable + execute_sql bind vars (reference
 collect_plugins.py:103-152, 220-228)."""
 
 from __future__ import annotations
 
 import threading
 
+from resotodatalink_spark.operators.flatten import sync_views
 from resotodatalink_spark.operators.incremental import sync_delta
 from resotodatalink_spark.operators.sql import execute_sql, stream_rows
-from resotodatalink_spark.operators.sync import (
-    collect_to_files,
-    collect_to_views,
-    on_progress,
-)
+from resotodatalink_spark.operators.sync import collect_to_files
 from resotodatalink_spark.sinks.files import read_table
 from resotodatalink_spark.sources.graph import GraphSource
 from tests.fixtures import example_docs, example_model
-
-
-def test_collect_to_views_with_feedback(spark):
-    events = []
-    views = collect_to_views(
-        spark,
-        GraphSource.from_docs(spark, example_docs()),
-        example_model(),
-        feedback=on_progress(lambda s, c, t: events.append((s, c, t))),
-    )
-    assert len(views) == 3
-    assert events == [("sync_views", 3, 3)]
 
 
 def test_collect_to_files_swaps_atomically(spark, tmp_path):
@@ -45,7 +30,7 @@ def test_collect_to_files_swaps_atomically(spark, tmp_path):
         GraphSource.from_docs(spark, example_docs()),
         example_model(),
         dest,
-        feedback=on_progress(record),
+        progress=record,
     )
     assert sorted(published) == [
         "link_some_instance_some_volume",
@@ -62,13 +47,13 @@ def test_collect_to_files_swaps_atomically(spark, tmp_path):
     delta = [d for d in example_docs() if d.get("id") != "v-123"]
     sync_delta(
         spark, GraphSource.from_docs(spark, delta), example_model(), dest,
-        feedback=on_progress(record),
+        progress=record,
     )
     assert events == [("sync_delta", i, 3, me) for i in (1, 2, 3)]
 
 
 def test_execute_sql_bind_vars_and_row_stream(spark):
-    collect_to_views(
+    sync_views(
         spark, GraphSource.from_docs(spark, example_docs()), example_model()
     )
     df = execute_sql(
@@ -137,7 +122,7 @@ def test_collect_plugin_protocol_golden_counts(spark, tmp_path):
     cloud 1/1 last — collect_plugins.py:34, 40, 66) and the
     reference's (cloud, n_nodes, n_edges) return."""
     from resotodatalink_spark.model.kinds import Model
-    from resotodatalink_spark.operators.sync import collect_plugin, on_progress
+    from resotodatalink_spark.operators.sync import collect_plugin
     from resotodatalink_spark.sinks.files import read_table
     from tests.fixtures import example_collector_docs, example_collector_model
 
@@ -190,7 +175,7 @@ def test_collect_plugin_protocol_golden_counts(spark, tmp_path):
         spark,
         plugin,
         str(tmp_path),
-        feedback=on_progress(lambda s, c, t: steps.append((s, c, t))),
+        progress=lambda s, c, t: steps.append((s, c, t)),
     )
     assert plugin.collected
     assert (cloud, n_nodes, n_edges) == ("example", 10, 13)
