@@ -5,7 +5,7 @@
   ``reported.*`` to the top level with a fixed, model-derived column
   set (missing props materialize as typed NULLs), inject ``_id`` from
   the node id, drop ``kind``, and denormalize the four ancestor
-  columns from ``ancestors.<x>.reported.id`` (sql.py:231-234).
+  columns from ``sources.graph.ancestors`` (sql.py:231-234).
 * ``link_tables`` — the edge-endpoint resolution the reference does
   with a driver-side ``node_by_chksum`` dict (collect_plugins.py:50-62,
   126-138), re-expressed as TWO broadcast hash joins of edges against
@@ -29,23 +29,17 @@ from resotodatalink_spark.model.kinds import (
     get_link_table_name,
     get_table_name,
 )
-from resotodatalink_spark.sources.graph import GraphSource
+from resotodatalink_spark.sources.graph import GraphSource, ancestors
 
 
 def flatten_nodes(nodes: DataFrame, model: Model, kind: Kind) -> DataFrame:
     """Per-kind flattened table from the generic nodes DataFrame."""
-    schema = reported_schema(model, kind)
     parsed = nodes.filter(F.col("kind") == kind.fqn).select(
         F.col("id").alias("_id"),
-        F.from_json("reported", schema).alias("r"),
-        F.col("ancestors"),
+        F.from_json("reported", reported_schema(model, kind)).alias("r"),
+        ancestors().alias("a"),
     )
-    carz_cols = [
-        F.get_json_object("ancestors", f"$.{c}.reported.id").alias(c) for c in CARZ
-    ]
-    return parsed.select(
-        "_id", *[F.col(f"r.{f.name}").alias(f.name) for f in schema.fields], *carz_cols
-    )
+    return parsed.select("_id", "r.*", *[F.col(f"a.{c}.reported.id").alias(c) for c in CARZ])
 
 
 def edge_kinds(source: GraphSource) -> DataFrame:

@@ -5,8 +5,8 @@ create_all + full re-insert, sql.py:193-198; its "delta" is only
 visual, the progress tree).  At 100 TB a full rewrite per sync is the
 single biggest cost in the pipeline, so this module is the documented
 beyond-reference extension: the collector ships only the nodes that
-changed since the last generation (plus a deleted-id list), and each
-table advances by MERGE algebra instead of a rebuild:
+changed since the last generation (plus a tombstone doc per vanished
+node), and each table advances by MERGE algebra instead of a rebuild:
 
 * kind tables   — updated rows replace same-``_id`` rows (anti join on
   the delta's key set + union), deleted ids drop out;
@@ -32,16 +32,18 @@ a table already at N+1 merges to the same rows.
 Scale shape — one planning action, then one write per affected table,
 the writes overlapping on up to ``defaultParallelism`` driver threads:
 
-* plan: one collect returns the delta's (id, kind) rows and edges and,
-  for every id the delta mentions, its published kind: the ids are
-  broadcast against the narrow ``_node_index`` (one scan of it, no
-  shuffle).  All of it is change-sized by contract, and the broadcast
-  brings the ids to the driver in any case.  The driver tags the delta edges with endpoint
-  kinds and derives every table's ``upserted`` count and the affected
-  set: the old and new kind table of each changed id, the kind table
+* plan: one collect returns the delta's (id, kind) rows, edges and
+  tombstone ids and, for every id the delta mentions, its published
+  kind: the ids are broadcast against the narrow ``_node_index`` (one
+  scan of it, no shuffle).  All of it is change-sized by contract, and
+  the broadcast brings the ids to the driver in any case.  The driver
+  tags the delta edges with endpoint kinds and derives every table's
+  ``upserted`` count and the affected set: the old and new kind table of each changed id, the kind table
   of each deleted id, link tables whose from-kind is the kind of a
   changed or deleted id, link tables whose to-kind is the kind of a
-  deleted id, and the link pairs in the delta;
+  deleted id, the link pairs in the delta, and every kind table of the
+  model not yet published (empty if the delta has no rows for it, as
+  in a full sync);
 * skip: every other table is reported ``{"upserted": 0, "removed": 0}``
   without being read;
 * merge: an affected table is swept by a broadcast anti join against
@@ -146,7 +148,7 @@ def _plan(
             edges.append((a, b))
         elif what == "old":
             old_kind[a] = b
-        else:
+        elif what == "node":
             if b is not None and (name := get_table_name(b)) in kind_tables:
                 upserted[name] = upserted.get(name, 0) + 1
             if a is not None:
@@ -182,6 +184,7 @@ def _plan(
 
     affected = set(upserted) | {get_table_name(k) for k in owners | gone}
     affected |= link_tables(owners | gone, "from") | link_tables(gone, "to")
+    affected |= kind_tables - on_disk
     return upserted, links, affected, list(new_kind)
 
 
@@ -190,16 +193,17 @@ def sync_delta(
     delta: GraphSource,
     model: Model,
     dest_dir: str,
-    deleted_ids: list[str] | None = None,
     progress: Progress = no_progress,
 ) -> dict[str, dict[str, int]]:
     """Advance the published tables under ``dest_dir`` by one
-    generation.  ``delta`` holds ONLY changed/new nodes and the
-    complete current outbound edge set of those nodes; ``deleted_ids``
-    lists nodes that vanished.  Returns per-table
+    generation.  ``delta`` holds ONLY changed/new nodes, the complete
+    current outbound edge set of those nodes, and as ``deleted`` the
+    ids of its tombstone docs (``{"type": "deleted", "id": ...}``) for
+    nodes that vanished.  Returns per-table
     ``{"upserted": n, "removed": m}`` (removed = replaced + deleted
     rows) for every kind table of the model, link pair of the delta and
-    table on disk; tables with both zero are not rewritten.
+    table on disk; tables with both zero are not rewritten, except a
+    kind table not published yet, which is published empty.
 
     The generation is planned against the published ``_node_index``,
     which ``collect_to_files`` and every delta publish with their
@@ -209,9 +213,10 @@ def sync_delta(
 
     Affected tables stage concurrently; ``progress`` reports every
     table in order, on the caller's thread, once all of them are staged.
-    ``delta`` is read once per affected kind table: pass a materialized
-    one (``streaming.delta_sync.apply_delta_batch`` does) when its
-    source is expensive to re-read.
+    ``delta`` is read by the planning collect and once per affected
+    kind table, change-sized each time.  A cached one costs more than
+    it saves: adaptive execution fills an empty cache once per scan of
+    the planning collect, each in a job of its own.
 
     Size bound: the planning collect brings to the driver one row per
     delta node, per delta edge and per index row of an id the delta
@@ -219,23 +224,21 @@ def sync_delta(
     relation.  The driver holds the delta's ids and edges at once, so
     a delta must be change-sized; publish a whole graph, or a catch-up
     of many generations, with ``collect_to_files`` instead."""
-    deleted = sorted(set(deleted_ids or []))
     listed = published_tables(spark, dest_dir)
     on_disk = listed - {NODE_INDEX}
     index = _node_index(spark, dest_dir, listed)
     kind_tables = {get_table_name(k.fqn): k for k in model.table_kinds()}
 
-    # The one planning action: the delta's node kinds and edges, and the
-    # published kind of every id the delta mentions (one scan of the
-    # narrow index against the broadcast ids, no shuffle of it).  All
-    # of it is change-sized by contract; broadcasting the ids brings
-    # them to the driver anyway.
+    # The one planning action: the delta's node kinds, edges and
+    # tombstones, and the published kind of every id the delta mentions
+    # (one scan of the narrow index against the broadcast ids, no
+    # shuffle of it).  All of it is change-sized by contract; the
+    # broadcast brings the ids to the driver anyway.
     nodes = delta.nodes.select("id", "kind")
     edges = delta.default_edges().select("from_id", "to_id")
-    gone = local_frame(spark, id=deleted)
     mentioned = (
         nodes.select("id")
-        .unionByName(gone)
+        .unionByName(delta.deleted.select("id"))
         .unionByName(edges.select(F.col("from_id").alias("id")))
         .unionByName(edges.select(F.col("to_id").alias("id")))
     )
@@ -243,9 +246,13 @@ def sync_delta(
     rows = (
         _tag(nodes, "node", "id", "kind")
         .unionByName(_tag(edges, "edge", "from_id", "to_id"))
+        .unionByName(_tag(delta.deleted, "gone", "id", "id"))
         .unionByName(_tag(old, "old", "id", "kind"))
         .collect()
     )
+    # a tombstone is a ("gone", id, id) row; one without an id deletes nothing
+    deleted = sorted({a for what, a, _ in rows if what == "gone"} - {None})
+    gone = local_frame(spark, id=deleted)
     upserted, links, affected, changed = _plan(rows, deleted, set(kind_tables), on_disk)
     # The sweep key set: EVERY changed node id, not just the ids a
     # table's delta rows contain.  A changed node whose outbound edges
@@ -275,10 +282,8 @@ def sync_delta(
     def stage(name: str, dv: DataFrame | None, old: DataFrame | None) -> int:
         """Stage one affected table's merge; returns its removed rows."""
         if old is None:
-            # brand-new table this generation (e.g. first node of a
-            # kind): change-sized, one file
-            if upserted.get(name):
-                write_table(dv.coalesce(1), dest_dir, name)
+            # not published yet (a kind of the model, a new link pair): one file
+            write_table(dv.coalesce(1), dest_dir, name)
             return 0
         if name.startswith("link_"):
             sweeps = [("from_id", swept)] + ([("to_id", gone)] if deleted else [])
@@ -307,7 +312,7 @@ def sync_delta(
         spark, [functools.partial(stage, n, *b) for n, b in zip(work, built)] + [stage_index]
     )
     removed = dict(zip(work, counts))
-    staged = [n for n in work if upserted.get(n) or removed[n]]
+    staged = [n for n in work if n not in on_disk or upserted.get(n) or removed[n]]
 
     stats: dict[str, dict[str, int]] = {}
     for i, name in enumerate(names, 1):

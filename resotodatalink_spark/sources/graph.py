@@ -1,19 +1,21 @@
-"""Graph source: node/edge JSON documents -> two DataFrames.
+"""Graph source: node/edge JSON documents -> DataFrames.
 
 The reference ingests a stream of prepared JSON docs — nodes
 ``{type:"node", id, reported:{kind,...}, ancestors:{...}}`` and edges
 ``{type:"edge", from, to, edge_type}`` (schema_utils.py:66-85,
 sql_test.py:71-107) — from either an in-process collector plugin
 (collect_plugins.py:30-68) or a resotocore server stream
-(remote_graph.py:59-91).
+(remote_graph.py:59-91); a delta adds tombstones ``{type:"deleted", id}``.
 
 Spark-first shape: ONE nodes DataFrame for all kinds, keeping
 ``reported`` as raw JSON text plus the extracted ``kind`` — per-kind
 projection parses it with the model-derived schema lazily
 (operators/flatten.py).  This is the scale answer to "thousands of
 kinds": no per-kind driver loop at ingest, kind is just a partition
-column.  ``get_json_object`` is used for envelope fields so object
-values survive as JSON text regardless of their schema.
+column.  This module alone decodes the doc protocol: ``parse_docs``
+parses each doc once with ``json_tuple`` (object values stay JSON
+text; a duplicate key takes its last value, as ``json.loads`` does),
+and ``ancestors`` parses the ancestors layout once.
 """
 
 from __future__ import annotations
@@ -23,11 +25,22 @@ from collections.abc import Iterable
 from typing import Any
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from resotodatalink_spark.model.kinds import CARZ
 
 NODE_COLS = ("id", "kind", "reported", "ancestors")
 EDGE_COLS = ("from_id", "to_id", "edge_type")
+DELETED_TYPE = "deleted"
+# the ancestors layout (reference sql.py:231-234, remote_graph.py:71-78)
+ANCESTORS = ", ".join(f"{k} struct<reported: struct<id: string, name: string>>" for k in CARZ)
+
+
+def ancestors() -> Column:
+    """Nodes' ``ancestors`` parsed once: ``[key]["reported"]["id"]`` and
+    ``["name"]`` per ``CARZ`` key (JSON text for a number or object)."""
+    return F.from_json("ancestors", ANCESTORS)
 
 
 def local_frame(spark: SparkSession, **columns: list) -> DataFrame:
@@ -41,12 +54,14 @@ def local_frame(spark: SparkSession, **columns: list) -> DataFrame:
 
 
 class GraphSource:
-    """nodes_df: (id, kind, reported<json str>, ancestors<json str>)
-    edges_df: (from_id, to_id, edge_type)"""
+    """nodes: (id, kind, reported<json str>, ancestors<json str>)
+    edges: (from_id, to_id, edge_type)
+    deleted: (id) of the tombstones, by default none"""
 
-    def __init__(self, nodes: DataFrame, edges: DataFrame):
+    def __init__(self, nodes: DataFrame, edges: DataFrame, deleted: DataFrame | None = None):
         self.nodes = nodes
         self.edges = edges
+        self.deleted = nodes.select("id").limit(0) if deleted is None else deleted
 
     @staticmethod
     def from_json_lines(spark: SparkSession, path: str) -> "GraphSource":
@@ -66,28 +81,25 @@ class GraphSource:
 
     @staticmethod
     def parse_docs(raw: DataFrame) -> DataFrame:
-        """Every envelope field of every doc in one projection:
+        """Every envelope field of every doc, each doc parsed once:
         (type, id, kind, reported, ancestors, from_id, to_id, edge_type).
         A doc leaves the fields of the other doc types NULL; ``id`` is
         also the id of a ``deleted`` tombstone."""
-        field = lambda path: F.get_json_object("doc", path)  # noqa: E731
-        return raw.select(
-            field("$.type").alias("type"),
-            field("$.id").alias("id"),
-            field("$.reported.kind").alias("kind"),
-            field("$.reported").alias("reported"),
-            field("$.ancestors").alias("ancestors"),
-            field("$.from").alias("from_id"),
-            field("$.to").alias("to_id"),
-            field("$.edge_type").alias("edge_type"),
+        envelope = raw.select(
+            F.json_tuple("doc", "type", "id", "reported", "ancestors", "from", "to", "edge_type")
+            .alias("type", "id", "reported", "ancestors", *EDGE_COLS)
         )
+        kind = F.get_json_object("reported", "$.kind").alias("kind")
+        return envelope.select("type", "id", kind, "reported", "ancestors", *EDGE_COLS)
 
     @staticmethod
     def from_parsed(parsed: DataFrame) -> "GraphSource":
-        """Nodes and edges of a ``parse_docs`` frame."""
+        """Nodes, edges and tombstone ids of a ``parse_docs`` frame."""
+        of = lambda t: parsed.filter(F.col("type") == t)  # noqa: E731
         return GraphSource(
-            parsed.filter(F.col("type") == "node").select(*NODE_COLS),
-            parsed.filter(F.col("type") == "edge").select(*EDGE_COLS),
+            of("node").select(*NODE_COLS),
+            of("edge").select(*EDGE_COLS),
+            of(DELETED_TYPE).select("id"),
         )
 
     @staticmethod

@@ -21,11 +21,11 @@ graph-sized ever sits on the driver:
   ``GraphSource._split`` projection as the batch path) — executors do
   the JSON work, the driver only schedules.
 * ``stitch`` replaces the lookup dict with joins: ancestor synthesis is
-  a distinct-aggregate over the ancestors JSON anti-joined against
-  existing node ids, and edge resolution is two semi-joins against the
-  (stitched) node ids — the reference's ``lookup.get(js["from"])``
-  guard (remote_graph.py:85-87), expressed as a shuffle instead of a
-  driver dict.
+  a distinct-aggregate over the ancestors (``sources.graph.ancestors``,
+  one parse per node) anti-joined against existing node ids, and edge
+  resolution is two semi-joins against the (stitched) node ids — the
+  reference's ``lookup.get(js["from"])`` guard (remote_graph.py:85-87),
+  expressed as a shuffle instead of a driver dict.
 """
 
 from __future__ import annotations
@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from resotodatalink_spark.sources.graph import GraphSource
+from resotodatalink_spark.sources.graph import GraphSource, ancestors
 
 # Reference remote_graph.py:34: carz = {cloud: Cloud, account:
 # UnknownAccount, region: UnknownRegion, zone: UnknownZone} — the
@@ -116,20 +116,16 @@ def stitch(source: GraphSource) -> GraphSource:
     2. Keep only edges whose endpoints resolve against the stitched
        node set (two semi-joins == the reference's lookup.get guards).
     """
-    per_key = []
-    for key, kind in ANCESTOR_KINDS.items():
-        per_key.append(
-            source.nodes.select(
-                F.get_json_object("ancestors", f"$.{key}.reported.id").alias("id"),
-                F.get_json_object("ancestors", f"$.{key}.reported.name").alias(
-                    "name"
-                ),
-                F.lit(kind).alias("kind"),
-            ).filter(F.col("id").isNotNull() & F.col("name").isNotNull())
-        )
-    anc = per_key[0]
-    for df in per_key[1:]:
-        anc = anc.unionByName(df)
+    a = F.col("a")
+    carz = [
+        F.struct(a[k]["reported"]["id"], a[k]["reported"]["name"], F.lit(kind).alias("kind"))
+        for k, kind in ANCESTOR_KINDS.items()
+    ]
+    anc = (
+        source.nodes.select(ancestors().alias("a"))
+        .select(F.inline(F.array(*carz)))
+        .filter(F.col("id").isNotNull() & F.col("name").isNotNull())
+    )
     synthetic = (
         anc.groupBy("id")
         .agg(F.min("kind").alias("kind"), F.min("name").alias("name"))

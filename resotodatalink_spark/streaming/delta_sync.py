@@ -14,8 +14,8 @@ timer (full rebuild per run); here steady-state work is proportional
 to the change rate, not the corpus.
 
 Scale notes: the foreachBatch body is the batch sync_delta — all data
-movement is distributed joins; only the tombstone id list and
-sync_delta's planning rows (change-sized, like a broadcast) are
+movement is distributed joins; only sync_delta's planning rows
+(change-sized, like a broadcast; the tombstones among them) are
 collected to the driver.  With ``Trigger.AvailableNow`` the stream
 drains spooled chunks and stops (the T3 end-of-stream semantic);
 ``maxFilesPerTrigger=1`` makes each spooled chunk file one generation,
@@ -32,30 +32,17 @@ from resotodatalink_spark.model.kinds import Model
 from resotodatalink_spark.operators.incremental import sync_delta
 from resotodatalink_spark.sources.graph import GraphSource
 
-DELETED_TYPE = "deleted"
-
 
 def apply_delta_batch(
     spark: SparkSession, docs: DataFrame, model: Model, dest_dir: str
 ) -> dict[str, dict[str, int]]:
     """One delta generation from a raw doc frame (column ``doc``:
-    NDJSON strings of node/edge/deleted records).  The docs are parsed
-    once: the parsed frame is kept in memory for the tombstone collect
-    and every read ``sync_delta`` makes.  A batch must be change-sized:
-    its parsed docs are cached, and its ids and edges are collected to
-    the driver to plan the generation (see ``sync_delta``)."""
-    parsed = GraphSource.parse_docs(docs).persist()
-    try:
-        deleted = [
-            r["id"]
-            for r in parsed.filter(F.col("type") == DELETED_TYPE)
-            .select("id")
-            .collect()  # tombstones are collector metadata: broadcast-sized
-        ]
-        delta = GraphSource.from_parsed(parsed)
-        return sync_delta(spark, delta, model, dest_dir, deleted_ids=deleted)
-    finally:
-        parsed.unpersist()
+    NDJSON strings of node/edge/deleted records).  Tombstones reach
+    ``sync_delta`` as docs, in its one planning collect, so this runs
+    no Spark job of its own.  A batch must be change-sized: its ids and
+    edges are collected to the driver to plan the generation, and each
+    of ``sync_delta``'s reads re-reads and re-parses it (see there)."""
+    return sync_delta(spark, GraphSource._split(docs), model, dest_dir)
 
 
 def stream_delta_sync(

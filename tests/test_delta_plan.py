@@ -1,17 +1,17 @@
 """The planned delta merge: Spark jobs per generation, untouched tables
 left unread, equivalence with a full resync over several generations,
-file counts held, a model that gained a property, nodes only the
-node index knows, a destination without an index, link pairs that
+file counts held, a model that gained a property or a kind, nodes only
+the node index knows, a destination without an index, link pairs that
 share one truncated name, a destination published in another format,
-a full resync
-between deltas, a delta replayed after a crash during its publish, one
-publish call per generation with the node index last, a `file:` URI
-destination, and the concurrently staged writes: the
-caller's job group on every job, and a failed write that publishes
-nothing."""
+a full resync between deltas, a delta replayed after a crash during its
+publish, one publish call per generation with the node index last, a
+`file:` URI destination, a batch of docs that runs no job of its own,
+and the concurrently staged writes: the caller's job group on every
+job, and a failed write that publishes nothing."""
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import warnings
@@ -23,7 +23,8 @@ from resotodatalink_spark.operators import incremental, sync
 from resotodatalink_spark.operators.incremental import sync_delta
 from resotodatalink_spark.operators.sync import collect_to_files
 from resotodatalink_spark.sinks.files import NODE_INDEX, read_table, swap_staging
-from resotodatalink_spark.sources.graph import GraphSource
+from resotodatalink_spark.sources.graph import GraphSource, local_frame
+from resotodatalink_spark.streaming.delta_sync import apply_delta_batch
 from tests.fixtures import carz_ancestors, example_docs, example_model
 
 # Spark jobs one volume-only generation runs on the fixture graph: the
@@ -80,6 +81,10 @@ def _node(nid, kind):
 
 def _edge(a, b):
     return {"type": "edge", "from": a, "to": b, "edge_type": "default"}
+
+
+def _gone(nid):
+    return {"type": "deleted", "id": nid}
 
 
 def _assert_full_sync_of(spark, dest, docs, ref):
@@ -196,8 +201,8 @@ def test_three_generations_equal_full_resync(spark, tmp_path):
     for step, make in enumerate((gen1, gen2, gen3), 1):
         delta, deleted = make()
         sync_delta(
-            spark, GraphSource.from_docs(spark, delta), example_model(), dest,
-            deleted_ids=deleted,
+            spark, GraphSource.from_docs(spark, delta + [_gone(d) for d in deleted]),
+            example_model(), dest,
         )
         ref = str(tmp_path / f"ref-{step}")
         collect_to_files(
@@ -241,6 +246,31 @@ def test_model_gains_a_property_between_generations(spark, tmp_path):
     assert got.columns == read_table(spark, ref, "some_volume").columns
     assert "iops" in got.columns
     assert _rows(spark, dest, "some_volume") == _rows(spark, ref, "some_volume")
+
+
+def test_model_gains_a_kind_between_generations(spark, tmp_path):
+    """A delta published under a model that gained a table kind
+    publishes that kind's table, empty because the delta has no rows
+    for it, as a full sync of the final graph under that model does:
+    the same table set, and in every table the same columns, types and
+    rows."""
+    dest, ref = str(tmp_path / "inc"), str(tmp_path / "ref")
+    collect_to_files(
+        spark, GraphSource.from_docs(spark, example_docs()), example_model(), dest
+    )
+    grown = Model({
+        **example_model().kinds,
+        "some_bucket": Kind("some_bucket", bases=["resource"], aggregate_root=True),
+    })
+    delta = [_vol("v-123", 99)]
+    sync_delta(spark, GraphSource.from_docs(spark, delta), grown, dest)
+    final = [d for d in example_docs() if d.get("id") != "v-123"] + delta
+    collect_to_files(spark, GraphSource.from_docs(spark, final), grown, ref)
+    assert "some_bucket" in _tables(ref)
+    assert _tables(dest) == _tables(ref)
+    for t in sorted(_tables(ref)):
+        assert read_table(spark, dest, t).dtypes == read_table(spark, ref, t).dtypes, t
+        assert _rows(spark, dest, t) == _rows(spark, ref, t), t
 
 
 def test_default_publish_resolves_nodes_known_only_to_the_index(spark, tmp_path):
@@ -381,8 +411,8 @@ def test_full_resync_without_index_between_deltas(spark, tmp_path):
 
     def delta(docs, deleted=()):
         sync_delta(
-            spark, GraphSource.from_docs(spark, docs), example_model(), dest,
-            deleted_ids=list(deleted),
+            spark, GraphSource.from_docs(spark, docs + [_gone(d) for d in deleted]),
+            example_model(), dest,
         )
 
     sync([_inst("i-1", 1), _vol("v-1", 10), _edge("i-1", "v-1")])
@@ -431,14 +461,14 @@ def test_delta_replayed_after_crash_during_publish(
     index_n = _rows(spark, dest, NODE_INDEX)
     with pytest.raises(RuntimeError):
         sync_delta(
-            spark, GraphSource.from_docs(spark, docs), example_model(), dest,
-            deleted_ids=["v-2"],
+            spark, GraphSource.from_docs(spark, docs + [_gone("v-2")]),
+            example_model(), dest,
         )
     assert _rows(spark, dest, NODE_INDEX) == index_n
     monkeypatch.undo()
     sync_delta(
-        spark, GraphSource.from_docs(spark, docs), example_model(), dest,
-        deleted_ids=["v-2"],
+        spark, GraphSource.from_docs(spark, docs + [_gone("v-2")]),
+        example_model(), dest,
     )
     final = [_inst("i-1", 1), _inst("i-2", 2), _inst("v-1", 3), _edge("i-1", "v-1")]
     _assert_full_sync_of(spark, dest, final, str(tmp_path / "ref"))
@@ -513,10 +543,43 @@ def test_uri_destination_generations_equal_full_resync(spark, tmp_path):
     for step, make in enumerate((gen1, gen2, gen3), 1):
         docs, deleted = make()
         sync_delta(
-            spark, GraphSource.from_docs(spark, docs), example_model(), uri,
-            deleted_ids=deleted,
+            spark, GraphSource.from_docs(spark, docs + [_gone(d) for d in deleted]),
+            example_model(), uri,
         )
         _assert_full_sync_of(spark, dest, graph(), str(tmp_path / f"ref-{step}"))
+
+
+def test_apply_delta_batch_runs_no_job_of_its_own(spark, tmp_path):
+    """One generation with a tombstone, run through ``apply_delta_batch``
+    and through ``sync_delta`` of the same docs on a copy of the same
+    destination, gives equal stats in an equal number of Spark jobs:
+    the batch path collects its tombstones in the planning collect, not
+    in a job of its own."""
+    base = str(tmp_path / "base")
+    collect_to_files(
+        spark, GraphSource.from_docs(spark, example_docs()), example_model(), base
+    )
+    docs = [_inst("i-123", 5), _vol("v-9", 1), _edge("i-123", "v-9"), _gone("v-123")]
+    sc = spark.sparkContext
+    runs = {}
+    for how in ("batch", "docs"):
+        dest = str(tmp_path / how)
+        shutil.copytree(base, dest)
+        group = f"{how}-{tmp_path.name}"
+        sc.setJobGroup(group, "one generation with a tombstone")
+        try:
+            if how == "batch":
+                raw = local_frame(spark, doc=[json.dumps(d) for d in docs])
+                stats = apply_delta_batch(spark, raw, example_model(), dest)
+            else:
+                stats = sync_delta(
+                    spark, GraphSource.from_docs(spark, docs), example_model(), dest
+                )
+        finally:
+            sc.setJobGroup("tests", "tests")
+        runs[how] = stats, len(_job_ids(sc, group))
+    assert runs["batch"][0]["some_volume"] == {"upserted": 1, "removed": 1}
+    assert runs["batch"] == runs["docs"]
 
 
 def _job_ids(sc, group):
@@ -547,9 +610,10 @@ def test_staged_jobs_keep_the_callers_job_group(spark, tmp_path):
         lambda: sync_delta(
             spark,
             GraphSource.from_docs(
-                spark, [_inst("i-123", 5), _vol("v-9", 1), _edge("i-123", "v-9")]
+                spark,
+                [_inst("i-123", 5), _vol("v-9", 1), _edge("i-123", "v-9"), _gone("v-123")],
             ),
-            example_model(), dest, deleted_ids=["v-123"],
+            example_model(), dest,
         ),
     ]
     try:

@@ -75,9 +75,9 @@ def test_two_generation_delta_sync_goldens(spark, tmp_path):
         {"type": "edge", "from": "i-123", "to": "v-456",
          "edge_type": "default"},
     ]
+    delta_docs.append({"type": "deleted", "id": "v-123"})
     stats = sync_delta(
-        spark, GraphSource.from_docs(spark, delta_docs), example_model(),
-        dest, deleted_ids=["v-123"],
+        spark, GraphSource.from_docs(spark, delta_docs), example_model(), dest,
     )
 
     # exact generation-2 goldens: same rows a full resync of the final
@@ -261,9 +261,10 @@ def test_random_delta_sequences_equal_full_resync(spark, tmp_path):
             gone = rng.choice(orphans)
             del vols[gone]
             deleted.append(gone)
+        tombstones = [{"type": "deleted", "id": d} for d in deleted]
         sync_delta(
-            spark, GraphSource.from_docs(spark, delta_docs),
-            example_model(), dest, deleted_ids=deleted,
+            spark, GraphSource.from_docs(spark, delta_docs + tombstones),
+            example_model(), dest,
         )
 
         # oracle: full resync of the current state into a fresh dir
@@ -284,8 +285,8 @@ def test_deleting_a_node_drops_inbound_links(spark, tmp_path):
     AND any link rows pointing at it (no dangling edges)."""
     dest = _gen1(spark, tmp_path)
     stats = sync_delta(
-        spark, GraphSource.from_docs(spark, []), example_model(), dest,
-        deleted_ids=["v-123"],
+        spark, GraphSource.from_docs(spark, [{"type": "deleted", "id": "v-123"}]),
+        example_model(), dest,
     )
     assert _rows(spark, dest, "some_volume") == []
     assert _rows(spark, dest, "link_some_instance_some_volume") == []
@@ -399,9 +400,9 @@ def test_node_index_resolution_and_maintenance(spark, tmp_path):
         {"type": "edge", "from": "i-999", "to": "v-123",
          "edge_type": "default"},
     ]
+    delta_docs.append({"type": "deleted", "id": "i-123"})
     sync_delta(
-        spark, GraphSource.from_docs(spark, delta_docs), example_model(),
-        dest, deleted_ids=["i-123"],
+        spark, GraphSource.from_docs(spark, delta_docs), example_model(), dest,
     )
     assert _rows(spark, dest, "link_some_instance_some_volume") == [
         ("i-999", "v-123")

@@ -18,13 +18,17 @@ driver's local disk.  Driver rows become a frame one way: on the sync
 path and in ``sources/graph.py`` only ``sources/graph.local_frame``
 (one Arrow call) and ``read_table``'s empty frame call
 ``createDataFrame``, and nothing parallelizes a Python list, whose
-every read would run Python tasks.  These scans fail the moment a
-second path appears.  No Spark is needed.
+every read would run Python tasks.  The doc protocol has one decoder:
+on the sync path, in the flatten operators and the remote source, only
+``sources/graph.py`` parses a doc or its ancestors, and only it spells
+the tombstone type.  These scans fail the moment a second path
+appears.  No Spark is needed.
 """
 
 from __future__ import annotations
 
 import ast
+from collections.abc import Callable
 from pathlib import Path
 
 import resotodatalink_spark
@@ -117,20 +121,27 @@ def test_every_destination_has_one_file_system():
     assert calls == {}
 
 
-def _frame_builds(path: Path) -> set[tuple[str, str]]:
-    """(innermost enclosing function, attribute) for every
-    ``createDataFrame`` or ``parallelize`` referenced in ``path``."""
+def _sites(path: Path, match: Callable[[ast.AST], str | None]) -> set[tuple[str, str]]:
+    """(innermost enclosing function, ``match(node)``) for every node of
+    ``path`` that ``match`` names."""
     found = set()
 
     def visit(node: ast.AST, fn: str) -> None:
         for child in ast.iter_child_nodes(node):
-            if isinstance(child, ast.Attribute) and child.attr in {"createDataFrame", "parallelize"}:
-                found.add((fn, child.attr))
+            if (what := match(child)) is not None:
+                found.add((fn, what))
             inner = isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef))
             visit(child, child.name if inner else fn)
 
     visit(ast.parse(path.read_text(), filename=str(path)), "<module>")
     return found
+
+
+def _frame_build(node: ast.AST) -> str | None:
+    """``createDataFrame`` or ``parallelize``, referenced as an attribute."""
+    if isinstance(node, ast.Attribute) and node.attr in {"createDataFrame", "parallelize"}:
+        return node.attr
+    return None
 
 
 def test_driver_rows_have_one_builder():
@@ -140,9 +151,57 @@ def test_driver_rows_have_one_builder():
         if (rel := path.relative_to(PACKAGE).as_posix()).startswith(
             (*SYNC_PATH, "sources/graph.py")
         )
-        for site in _frame_builds(path)
+        for site in _sites(path, _frame_build)
     }
     assert builds == {
         ("sources/graph.py", "local_frame", "createDataFrame"),
         ("sinks/files.py", "read_table", "createDataFrame"),
     }
+
+
+# every module that reads docs, nodes or ancestors, and the Spark
+# functions that decode JSON text
+DOC_READERS = (*SYNC_PATH, "operators/flatten.py", "sources/remote.py", "sources/graph.py")
+JSON_DECODERS = {"get_json_object", "json_tuple", "from_json"}
+
+
+def _json_decoder(node: ast.AST) -> str | None:
+    """A Spark JSON decoder: ``F.<decoder>``, a decoder imported from
+    ``pyspark.sql.functions``, or one called in a SQL string."""
+    if isinstance(node, ast.Attribute) and node.attr in JSON_DECODERS:
+        return node.attr if ast.unparse(node.value) in {"F", "functions"} else None
+    if isinstance(node, ast.ImportFrom) and node.module == "pyspark.sql.functions":
+        return next((a.name for a in node.names if a.name in JSON_DECODERS), None)
+    if isinstance(node, ast.Constant) and isinstance(node.value, str):
+        return next((d for d in JSON_DECODERS if f"{d}(" in node.value), None)
+    return None
+
+
+def _doc_readers() -> list[tuple[str, Path]]:
+    return [
+        (rel, path)
+        for path in sorted(PACKAGE.rglob("*.py"))
+        if (rel := path.relative_to(PACKAGE).as_posix()).startswith(DOC_READERS)
+    ]
+
+
+def test_doc_protocol_has_one_decoder():
+    """Docs and their ancestors are parsed in ``sources/graph.py`` only,
+    each once: ``parse_docs``' one ``json_tuple`` (and the node kind
+    from its ``reported``), and ``ancestors``' one ``from_json``.  The
+    one other decoder is ``flatten_nodes``' model-typed parse of
+    ``reported``.  The tombstone type is spelled in ``graph.py`` only."""
+    decodes = {(rel, *site) for rel, path in _doc_readers() for site in _sites(path, _json_decoder)}
+    assert decodes == {
+        ("sources/graph.py", "parse_docs", "json_tuple"),
+        ("sources/graph.py", "parse_docs", "get_json_object"),
+        ("sources/graph.py", "ancestors", "from_json"),
+        ("operators/flatten.py", "flatten_nodes", "from_json"),
+    }
+    spelled = {
+        rel
+        for rel, path in _doc_readers()
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path)))
+        if isinstance(node, ast.Constant) and node.value == "deleted"
+    }
+    assert spelled == {"sources/graph.py"}
