@@ -47,7 +47,10 @@ Semantics follow the reference where observable:
   set within the depth range (min..max hops, outbound for ``->``,
   inbound for ``<-``), implemented with the iterative-join BFS
   (operators/traversal.py) — each hop is one distributed join, no
-  server round-trip.  A TYPE inside the arrow (``-delete->``)
+  server round-trip.  A range of up to three hops is one lazy plan
+  that runs with the search's own action; deeper ranges prune and
+  stop early every three hops.  An open range ``-[a:]->`` is capped
+  at ``a+8`` hops.  A TYPE inside the arrow (``-delete->``)
   traverses only edges of that type — the reference's edge-type
   selector (its EdgeType.default/delete split, collect_plugins.py:
   45-47); untyped arrows traverse ``default`` edges.

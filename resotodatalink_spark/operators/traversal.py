@@ -6,17 +6,30 @@ implement the traversal natively as iterative equi-joins over the edge
 table — the link tables produced by our ETL are exactly this shape
 (``link_<a>_<b>(from_id, to_id)``, reference sql.py:190-201).
 
-Scale notes: each hop is one shuffle join keyed on the node id.  The
-frontier is usually much smaller than the edge set, so we broadcast it
-when small; the visited set is persisted per level so lineage doesn't
-re-execute earlier hops.  Depth is bounded by ``max_depth`` (cycles are
-handled by the visited-set anti-join).
+Scale notes: each hop is one join keyed on the node id.  Hops run in
+lazy chunks of ``CHUNK_HOPS``: inside a chunk the plan only grows (no
+Spark job), so a range of up to ``CHUNK_HOPS`` hops is ONE plan that
+runs with the caller's action.  Only at a chunk boundary with hops
+still after it are the nodes found so far reduced to their least
+depth and localCheckpointed (lineage stays flat on deep ranges); the
+next frontier is the boundary level's new nodes (the BFS prune, so
+cycles terminate), and an emptiness probe on it ends the search early.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# Hops per lazy chunk.  At small sizes a traversal's cost is its fixed
+# per-job overhead, not its data: every checkpoint and emptiness probe
+# is a Spark job, and each hop's shuffle stages are more.  Three keeps
+# the search DSL's depth-2 ranges and graph_shortest_paths' depth 3
+# fully lazy, while a deep or open-ended range (``-[a:]->`` runs to
+# ``a+8``) still prunes and exits early every three hops.
+CHUNK_HOPS = 3
 
 
 def reachable(
@@ -32,43 +45,44 @@ def reachable(
     min_depth..max_depth hops (start nodes excluded).  ``min_depth=2``
     reproduces the reference's default search ``is(graph_root) -[2:]->``
     (remote_graph.py:30-32): nodes whose SHORTEST distance from the
-    roots is at least 2."""
-    frontier = start_nodes.select(F.col(id_col)).distinct()
-    visited = frontier.withColumn("depth", F.lit(0).cast("int"))
-    if max_depth > 1:
-        # the edge frame is re-entered once per hop: materialize it
-        # once so hop k reads blocks instead of re-running the edge
-        # plan (graph_shortest_paths' edges are a 3-scan union — the
-        # old shape re-scanned lineitem twice per hop; optimization
-        # round 13, guide §1.3).  Same operators/-level checkpoint
-        # class as the per-level frontier below: driver-side iteration
-        # infrastructure, guarded by the operator tests.
-        edges = edges.localCheckpoint(eager=True)
-    out: DataFrame | None = None
+    roots is at least 2.
+
+    Hop ``d`` keeps the distinct ends of all ``d``-edge walks; a node's
+    least walk length is its shortest distance, so ``min(depth)`` over
+    the levels is the BFS level.  Within a chunk of ``CHUNK_HOPS`` hops
+    nothing runs.  At a boundary before ``max_depth`` one checkpoint
+    holds every node found so far at its least depth; its nodes at the
+    boundary depth are the next frontier, and when there are none the
+    search ends on that checkpoint.  ``node_id`` keeps its input type;
+    ``depth`` is int."""
+    starts = start_nodes.select(F.col(id_col)).distinct()
+    if max_depth < 1:
+        return starts.withColumn("depth", F.lit(0).cast("int")).limit(0)
+
+    def least_depth(levels: list[DataFrame]) -> DataFrame:
+        return (
+            reduce(DataFrame.unionByName, levels)
+            .groupBy(id_col)
+            .agg(F.min("depth").alias("depth"))
+            .join(starts, id_col, "left_anti")
+        )
+
+    walk = starts
+    levels: list[DataFrame] = []
     for depth in range(1, max_depth + 1):
-        nxt = (
-            edges.join(frontier.withColumnRenamed(id_col, src_col), src_col)
+        walk = (
+            edges.join(walk.withColumnRenamed(id_col, src_col), src_col)
             .select(F.col(dst_col).alias(id_col))
             .distinct()
-            .join(visited.select(id_col), id_col, "left_anti")
-            .withColumn("depth", F.lit(depth).cast("int"))
         )
-        # localCheckpoint truncates lineage so deep traversals don't
-        # grow the logical plan each hop (persist alone does not)
-        nxt = nxt.localCheckpoint(eager=True)
-        # the emptiness probe is an extra job — only worth it when there
-        # are more levels left to prune
-        if depth < max_depth and nxt.isEmpty():
-            break
-        out = nxt if out is None else out.unionByName(nxt)
-        visited = visited.unionByName(nxt)
-        frontier = nxt.select(id_col)
-    if out is None:
-        schema_src = start_nodes.select(F.col(id_col)).withColumn(
-            "depth", F.lit(0).cast("int")
-        )
-        return schema_src.limit(0)
-    return out.filter(F.col("depth") >= min_depth)
+        levels.append(walk.withColumn("depth", F.lit(depth).cast("int")))
+        if depth % CHUNK_HOPS == 0 and depth < max_depth:
+            found = least_depth(levels).localCheckpoint(eager=True)
+            walk = found.filter(F.col("depth") == depth).select(id_col)
+            if walk.isEmpty():
+                return found.filter(F.col("depth") >= min_depth)
+            levels = [found]
+    return least_depth(levels).filter(F.col("depth") >= min_depth)
 
 
 def pagerank(

@@ -680,15 +680,16 @@ def graph_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     C->O->L->S DAG from a root subset of customers — the deep-traversal
     generalization of graph_reachability, value-hash-checked against a
     DuckDB ``WITH RECURSIVE`` walk (min(depth) per node = the BFS
-    first-reach level, because the iterative frontier anti-joins the
-    visited set).
+    first-reach level; ``reachable`` takes the same min over the
+    distinct ends of each hop's walks).
 
-    Scale shape: one equi-join per hop keyed on node id; the frontier
-    is localCheckpointed per level so lineage stays flat; visited-set
-    anti-join bounds repeated work on converging paths — the recursive
-    CTE's path enumeration (all C->O->L->S walks) is exactly what the
-    BFS avoids, which is why the Spark side is the one that survives a
-    high-fan-in graph."""
+    Scale shape: one equi-join per hop keyed on node id, each hop's
+    ends deduplicated before the next hop, so converging paths cost
+    one row per node per level — the recursive CTE's path enumeration
+    (all C->O->L->S walks) is exactly what the BFS avoids, which is
+    why the Spark side is the one that survives a high-fan-in graph.
+    Depth 3 is one chunk of ``reachable``: one lazy plan, no
+    checkpoint or emptiness probe of its own."""
     orders = table(spark, sf_dir, "orders")
     lineitem = table(spark, sf_dir, "lineitem")
     customer = table(spark, sf_dir, "customer")
@@ -698,20 +699,19 @@ def graph_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     # on a packed 8-byte long (tag<<60 | key<<4 | linenumber; keys are
     # < 2^56 at any conceivable SF, linenumber <= 7) and the string is
     # reconstructed ONLY on the output frame (72k rows at sf1), not on
-    # the 13.5M-row edge frame that every hop re-reads.  Narrower
-    # types through the hot path (guide §2.3): the eager edge
-    # checkpoint holds 16-byte rows instead of two ~10-16 char
-    # strings, and each hop's join probes/dedups hash longs.  Packing
-    # is injective, so distinct/anti-join semantics are unchanged and
-    # the reconstructed strings are bit-identical to the old concat.
-    # Same-session A/Bs (optimization round 13 continuation): sf1
-    # shuffle 199.2 -> 1.0 MB (the hop-3 frontier now fits AQE's
-    # broadcast threshold as longs; >64 MB frontiers still go SMJ off
-    # the materialized checkpoint size), stages 38 -> 33, edge-build
-    # stage CPU 162 -> 71 s cumulative, sf1 wall a wash (10.59 vs
-    # 10.77s medians), sf0.1 wall 5.51 -> 3.79s median.  A
-    # merge-pinned variant was tested and REJECTED: pinning shuffles
-    # the full edge frame every hop (199 -> 467 MB).
+    # the 13.5M-row edge frame that every hop joins.  Narrower types
+    # through the hot path (guide §2.3): each hop's edge side carries
+    # 16-byte rows instead of two ~10-16 char strings, and each hop's
+    # join probes/dedups hash longs.  Packing is injective, so
+    # distinct/anti-join semantics are unchanged and the reconstructed
+    # strings are bit-identical to the old concat.  Same-session A/Bs
+    # (optimization round 13 continuation, then with an eager edge
+    # checkpoint and a checkpoint per hop): sf1 shuffle 199.2 -> 1.0
+    # MB (the hop-3 frontier fits AQE's broadcast threshold as longs),
+    # stages 38 -> 33, edge-build stage CPU 162 -> 71 s cumulative,
+    # sf1 wall a wash (10.59 vs 10.77s medians), sf0.1 wall 5.51 ->
+    # 3.79s median.  A merge-pinned variant was tested and REJECTED:
+    # pinning shuffles the full edge frame every hop (199 -> 467 MB).
     C, O, L, S = (1 << 60), (2 << 60), (3 << 60), (4 << 60)
 
     def pk(tag: int, col: str):
