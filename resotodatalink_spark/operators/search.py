@@ -40,9 +40,11 @@ Semantics follow the reference where observable:
 
 * ``is(k)`` matches kind ``k`` AND every kind that (transitively)
   lists it in ``bases`` — the inheritance-aware type filter.
-* property paths address the raw ``reported`` JSON (nested paths with
-  dots); ``kind``/``id`` address the envelope; numeric comparisons
-  cast to double, ``~`` uses regex.
+* comparison predicates (``path op value``) address the raw
+  ``reported`` JSON (nested paths with dots), ``id`` and ``kind``
+  included; numeric comparisons cast to double, ``~`` uses regex.
+  Sort, aggregate and ``has_key``/``in_subnet`` paths read
+  ``id``/``kind`` from the envelope columns instead.
 * a trailing traversal returns the nodes reached from the filtered
   set within the depth range (min..max hops, outbound for ``->``,
   inbound for ``<-``), implemented with the iterative-join BFS
@@ -666,6 +668,14 @@ def _path_column(path: str) -> Column:
     return F.get_json_object("reported", f"$.{path}")
 
 
+def _arrow_edges(source: GraphSource, edge_type: str | None) -> DataFrame:
+    """The edges an arrow traverses: those of its TYPE, or ``default``
+    edges when it names none."""
+    if edge_type is None:
+        return source.default_edges()
+    return source.edges.filter(F.col("edge_type") == edge_type)
+
+
 def _apply_with(
     out: DataFrame,
     w: WithClause,
@@ -681,18 +691,13 @@ def _apply_with(
         neighbor = neighbor.filter(_filter_column(w.filter, model, now))
     if w.nested is not None:
         neighbor = _apply_with(neighbor, w.nested, source, model, now)
-    wedges = (
-        source.default_edges()
-        if w.edge_type is None
-        else source.edges.filter(F.col("edge_type") == w.edge_type)
-    )
     # outbound: keep nodes by their successors (from_id side);
     # inbound: keep nodes by their predecessors (to_id side)
     near, far = ("from_id", "to_id") if w.direction == "out" else (
         "to_id", "from_id"
     )
     linked = (
-        wedges.join(
+        _arrow_edges(source, w.edge_type).join(
             neighbor.select(F.col("id").alias(far)), far, "left_semi"
         ).select(F.col(near).alias("id"))
     )
@@ -717,12 +722,7 @@ def execute_search(
         out = matched.select("id", "kind", "reported")
     else:
         t = search.traversal
-        typed = (
-            source.default_edges()
-            if t.edge_type is None
-            else source.edges.filter(F.col("edge_type") == t.edge_type)
-        )
-        edges = typed.select(
+        edges = _arrow_edges(source, t.edge_type).select(
             F.col("from_id").alias("src"), F.col("to_id").alias("dst")
         )
         if t.direction == "in":

@@ -37,15 +37,13 @@ def reachable(
     start_nodes: DataFrame,
     max_depth: int,
     min_depth: int = 1,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    id_col: str = "node_id",
 ) -> DataFrame:
-    """Min-depth BFS: (node_id, depth) for nodes first reached within
-    min_depth..max_depth hops (start nodes excluded).  ``min_depth=2``
-    reproduces the reference's default search ``is(graph_root) -[2:]->``
-    (remote_graph.py:30-32): nodes whose SHORTEST distance from the
-    roots is at least 2.
+    """Min-depth BFS over ``edges`` (``src``, ``dst``) from
+    ``start_nodes`` (``node_id``): (node_id, depth) for nodes first
+    reached within min_depth..max_depth hops (start nodes excluded).
+    ``min_depth=2`` reproduces the reference's default search
+    ``is(graph_root) -[2:]->`` (remote_graph.py:30-32): nodes whose
+    SHORTEST distance from the roots is at least 2.
 
     Hop ``d`` keeps the distinct ends of all ``d``-edge walks; a node's
     least walk length is its shortest distance, so ``min(depth)`` over
@@ -55,30 +53,30 @@ def reachable(
     boundary depth are the next frontier, and when there are none the
     search ends on that checkpoint.  ``node_id`` keeps its input type;
     ``depth`` is int."""
-    starts = start_nodes.select(F.col(id_col)).distinct()
+    starts = start_nodes.select("node_id").distinct()
     if max_depth < 1:
         return starts.withColumn("depth", F.lit(0).cast("int")).limit(0)
 
     def least_depth(levels: list[DataFrame]) -> DataFrame:
         return (
             reduce(DataFrame.unionByName, levels)
-            .groupBy(id_col)
+            .groupBy("node_id")
             .agg(F.min("depth").alias("depth"))
-            .join(starts, id_col, "left_anti")
+            .join(starts, "node_id", "left_anti")
         )
 
     walk = starts
     levels: list[DataFrame] = []
     for depth in range(1, max_depth + 1):
         walk = (
-            edges.join(walk.withColumnRenamed(id_col, src_col), src_col)
-            .select(F.col(dst_col).alias(id_col))
+            edges.join(walk.withColumnRenamed("node_id", "src"), "src")
+            .select(F.col("dst").alias("node_id"))
             .distinct()
         )
         levels.append(walk.withColumn("depth", F.lit(depth).cast("int")))
         if depth % CHUNK_HOPS == 0 and depth < max_depth:
             found = least_depth(levels).localCheckpoint(eager=True)
-            walk = found.filter(F.col("depth") == depth).select(id_col)
+            walk = found.filter(F.col("depth") == depth).select("node_id")
             if walk.isEmpty():
                 return found.filter(F.col("depth") >= min_depth)
             levels = [found]
@@ -89,13 +87,11 @@ def pagerank(
     edges: DataFrame,
     iterations: int,
     damping: float = 0.85,
-    src_col: str = "src",
-    dst_col: str = "dst",
     quantize: float | None = None,
 ) -> DataFrame:
-    """Fixed-iteration PageRank over an edge DataFrame: (node_id, rank)
-    after ``iterations`` synchronous updates from a uniform start,
-    ``rank = (1-d)/n + d * sum(rank_in/outdeg_in)``.
+    """Fixed-iteration PageRank over an edge DataFrame (``src``,
+    ``dst``): (node_id, rank) after ``iterations`` synchronous updates
+    from a uniform start, ``rank = (1-d)/n + d * sum(rank_in/outdeg_in)``.
 
     Scale shape: ONE equi-join + one aggregation per iteration, both
     keyed on the node id; the out-degree table is computed once; each
@@ -113,15 +109,15 @@ def pagerank(
     oracle applies the same floor), while perturbing ranks by at most
     1/quantize per round."""
     nodes = (
-        edges.select(F.col(src_col).alias("node_id"))
-        .unionByName(edges.select(F.col(dst_col).alias("node_id")))
+        edges.select(F.col("src").alias("node_id"))
+        .unionByName(edges.select(F.col("dst").alias("node_id")))
         .distinct()
         .localCheckpoint(eager=True)
     )
     n = nodes.count()
-    outdeg = edges.groupBy(src_col).agg(F.count("*").alias("outdeg"))
-    e = edges.join(outdeg, src_col).select(
-        F.col(src_col).alias("e_src"), F.col(dst_col).alias("e_dst"), "outdeg"
+    outdeg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
+    e = edges.join(outdeg, "src").select(
+        F.col("src").alias("e_src"), F.col("dst").alias("e_dst"), "outdeg"
     ).localCheckpoint(eager=True)
     ranks = nodes.withColumn("rank", F.lit(1.0 / n))
     base = (1.0 - damping) / n

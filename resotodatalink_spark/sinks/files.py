@@ -15,9 +15,11 @@ and published (``write_table``, ``stage_tables``, ``discard_staged``,
 ``swap_staging``).
 Every other module lists and reads through these.
 
-CSV cannot hold nested types; nested columns are JSON-stringified the
-way the reference's CSV type map does (type_converter.py:35-55,
-writer.py:130-146).
+A table is written as parquet or CSV, the reference's two formats, and
+read back as parquet only: like the reference, nothing in the package
+reads a CSV table back.  CSV cannot hold nested types; nested columns
+are JSON-stringified the way the reference's CSV type map does
+(type_converter.py:35-55, writer.py:130-146).
 
 Every destination, a plain path or a URI (``file:``, ``hdfs://``,
 ``s3a://``, ``gs://``), is listed, renamed and deleted through one
@@ -104,49 +106,18 @@ def write_table(
     table_name: str,
     fmt: str = "parquet",
 ) -> str:
-    """Stage one table under ``dest_dir``: the data lands in
-    ``<table>__staging`` until ``swap_staging`` publishes it.  Returns
-    the staged path."""
+    """Stage one table under ``dest_dir`` as parquet or CSV, the
+    reference's two formats (writer.py:171-184, 222-253): the data lands
+    in ``<table>__staging`` until ``swap_staging`` publishes it.
+    Returns the staged path."""
     path = os.path.join(dest_dir, table_name + STAGING_SUFFIX)
     if fmt == "csv":
-        flat = stringify_nested(df)
-        flat.write.mode("overwrite").option("header", True).csv(path)
-        _write_schema_marker(flat, path)
+        stringify_nested(df).write.mode("overwrite").option("header", True).csv(path)
     elif fmt == "parquet":
         df.write.mode("overwrite").parquet(path)
-    elif fmt == "orc":
-        df.write.mode("overwrite").orc(path)
-    elif fmt == "json":
-        # JSON-lines keeps nested types natively; no stringification.
-        # Type fidelity on re-read comes from the schema marker: JSON
-        # text cannot distinguish timestamp/date/decimal from string,
-        # so inference alone would round-trip them as strings.
-        df.write.mode("overwrite").json(path)
-        _write_schema_marker(df, path)
     else:
         raise ValueError(f"unsupported format: {fmt}")
     return path
-
-
-SCHEMA_MARKER = "_schema.parquet"
-
-
-def _write_schema_marker(df: DataFrame, table_path: str) -> None:
-    """Zero-row parquet carrying the exact write-side schema for text
-    formats, written INSIDE the table directory (the sink-side twin of
-    ``sources.tables._read_any``'s schema-sibling convention, round-11
-    advice) so a JSON/CSV round-trip keeps timestamp/date/decimal
-    columns typed instead of falling back to string inference.
-
-    Living inside the data dir (underscore-prefixed, so every Spark
-    reader's hidden-file filter skips it) means it rides the SAME
-    staging rename as its data — no publish-order crash window where a
-    new schema could silently misparse old data, no extra entry in the
-    swap, and ``df.write`` resolves cloud URIs the exact same way the
-    data write did."""
-    df.limit(0).write.mode("overwrite").parquet(
-        table_path.rstrip("/") + "/" + SCHEMA_MARKER
-    )
 
 
 OLD_SUFFIX = "__old"
@@ -242,40 +213,30 @@ def read_table(
     spark: SparkSession,
     dest_dir: str,
     table_name: str,
-    fmt: str = "parquet",
     schema: T.StructType | str | None = None,
 ) -> DataFrame:
-    """Read a published table back by its data files: the entries of its
-    directory, listed through the destination's Hadoop FileSystem, whose
-    names do not start with ``_`` or ``.``.  Spark's ``DataSource``
-    treats a path named ``_…`` as hidden, so reading files rather than
-    the directory lets ``_node_index`` and the schema marker read like
-    any table.
+    """Read a published parquet table back by its data files: the
+    entries of its directory, listed through the destination's Hadoop
+    FileSystem, whose names do not start with ``_`` or ``.``.  Spark's
+    ``DataSource`` treats a path named ``_…`` as hidden, so reading
+    files rather than the directory lets ``_node_index`` read like any
+    table.
 
-    The schema is the explicit ``schema`` when given, for every format
-    (a column the files lack reads as NULL); else, for text formats
-    (csv/json), the zero-row ``_schema.parquet`` marker
-    (``SCHEMA_MARKER``) ``write_table`` publishes inside the table
-    directory; else inference — the ladder that keeps
-    timestamp/date/decimal columns typed across a JSON/CSV round-trip.
-    A data file whose name does not carry ``fmt`` (``….snappy.parquet``,
-    ``….csv``) raises ``ValueError`` before any Spark job: files are
-    never filtered by extension, so a table published in another format
-    cannot read as empty.  A table with no data file reads as an empty
-    frame of ``schema``."""
+    The schema is the explicit ``schema`` when given (a column the
+    files lack reads as NULL), else the files' own.  A data file whose
+    name does not carry ``parquet`` (a CSV table's ``….csv``) raises
+    ``ValueError`` before any Spark job: files are never filtered by
+    extension, so a table published in another format cannot read as
+    empty.  A table with no data file reads as an empty frame of
+    ``schema``."""
     path = os.path.join(dest_dir, table_name)
     entries = sorted(_HadoopFs(spark, dest_dir).listdir(path))
     files = [os.path.join(path, e) for e in entries if not e.startswith(("_", "."))]
-    if wrong := [f for f in files if fmt not in f.rsplit("/", 1)[-1].split(".")[1:]]:
-        raise ValueError(f"{table_name} under {dest_dir} holds {wrong[0]}, which is not {fmt}")
-    if fmt in ("csv", "json") and schema is None and SCHEMA_MARKER in entries:
-        schema = read_table(spark, path, SCHEMA_MARKER).schema
+    if wrong := [f for f in files if "parquet" not in f.rsplit("/", 1)[-1].split(".")[1:]]:
+        raise ValueError(f"{table_name} under {dest_dir} holds {wrong[0]}, which is not parquet")
     if not files:
         return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema or T.StructType())
-    reader = spark.read.format(fmt)
-    if fmt == "csv":
-        reader = reader.option("header", True).option("inferSchema", schema is None)
+    reader = spark.read.format("parquet")
     if schema is not None:
         reader = reader.schema(schema)
-    # format().load(), not orc(*files): orc's second positional is mergeSchema
     return reader.load(files)

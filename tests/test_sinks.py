@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from resotodatalink_spark.operators.flatten import sync_views
+from resotodatalink_spark.operators.sync import collect_to_files
 from resotodatalink_spark.sinks.files import (
     NODE_INDEX,
     published_tables,
@@ -61,7 +62,7 @@ def test_csv_stringifies_nested(spark, tmp_path):
     )
     write_table(df, dest, "t", fmt="csv")
     swap_staging(spark, dest, tables=["t"])
-    back = read_table(spark, dest, "t", fmt="csv")
+    back = spark.read.option("header", True).csv(os.path.join(dest, "t"))
     row = back.collect()[0]
     assert row["arr"] == '["x","y"]' and row["st"] == '{"k":2}'
 
@@ -186,62 +187,6 @@ def test_cloud_uri_staged_publish_roundtrip(spark, tmp_path):
         r["v"] for r in read_table(spark, uri, "t").collect()
     ) == [10, 11, 12]
     assert not os.path.exists(tmp_path / "bucket" / "t__old")
-
-
-def test_orc_and_json_roundtrip(spark, tmp_path):
-    """K6/K7 widened symmetrically with the source-side fallbacks:
-    ORC preserves types natively; JSON-lines keeps nested values as
-    JSON (no stringification pass needed) and round-trips through
-    the schema-inferring reader."""
-    from pyspark.sql import functions as F
-
-    df = spark.range(3).select(
-        "id", F.array(F.col("id"), F.col("id") * 2).alias("arr")
-    )
-    dest = str(tmp_path)
-    for fmt in ("orc", "json"):
-        write_table(df, dest, f"t_{fmt}", fmt=fmt)
-        swap_staging(spark, dest, tables=[f"t_{fmt}"])
-        back = read_table(spark, dest, f"t_{fmt}", fmt=fmt)
-        got = sorted((r.id, list(r.arr)) for r in back.collect())
-        assert got == [(0, [0, 0]), (1, [1, 2]), (2, [2, 4])]
-
-
-def test_json_roundtrip_keeps_temporal_and_decimal_types(spark, tmp_path):
-    """Round-11 advice: JSON text can't distinguish timestamp/date/
-    decimal from string, so write_table publishes a zero-row
-    ``_schema.parquet`` marker (``SCHEMA_MARKER``) INSIDE the table
-    directory and read_table applies it — the
-    types must survive the round-trip, through the staging swap too,
-    and an explicit ``schema=`` must also be honored."""
-    df = spark.sql(
-        "SELECT TIMESTAMP '2024-02-29 12:34:56' AS ts,"
-        " DATE '2024-02-29' AS d,"
-        " CAST(12.34 AS DECIMAL(10,2)) AS amt,"
-        " 'x' AS s"
-    )
-    dest = str(tmp_path)
-    write_table(df, dest, "typed", fmt="json")
-    assert swap_staging(spark, dest, tables=["typed"]) == ["typed"]
-    back = read_table(spark, dest, "typed", fmt="json")
-    # nullability is reader policy (JSON always reads nullable);
-    # names and TYPES are the fidelity under test
-    def _shape(schema):
-        return [(f.name, f.dataType) for f in schema.fields]
-
-    assert _shape(back.schema) == _shape(df.schema)
-    row = back.collect()[0]
-    want = df.collect()[0]
-    assert (row.ts, row.d, row.amt, row.s) == (want.ts, want.d, want.amt, want.s)
-    # explicit schema wins over the marker
-    explicit = read_table(spark, dest, "typed", fmt="json", schema=df.schema)
-    assert _shape(explicit.schema) == _shape(df.schema)
-    # csv marker carries the stringified shape
-    df2 = df.select("ts", "d", "amt", "s")
-    write_table(df2, dest, "typed_csv", fmt="csv")
-    swap_staging(spark, dest, tables=["typed_csv"])
-    back_csv = read_table(spark, dest, "typed_csv", fmt="csv")
-    assert _shape(back_csv.schema) == _shape(df2.schema)
 
 
 def test_p9_varchar_width_heuristic():
@@ -372,12 +317,9 @@ def test_string_type_malformed_metadata_degrades(spark):
 
 
 def test_published_text_tables_cross_read_by_duckdb(spark, tmp_path):
-    """r12 verdict item 5: the in-directory ``_schema.parquet`` marker
-    is underscore-hidden from Spark readers, but an EXTERNAL reader of
-    a published table dir must also be able to consume the table — the
-    conventional per-extension glob skips the marker (a parquet dir)
-    and _SUCCESS naturally, so the marker neither corrupts rows nor
-    leaks as data."""
+    """An external reader of a published CSV table dir consumes the
+    table: the conventional per-extension glob skips ``_SUCCESS``, so
+    nothing but data rows leaks in."""
     import duckdb
 
     df = spark.sql(
@@ -385,24 +327,18 @@ def test_published_text_tables_cross_read_by_duckdb(spark, tmp_path):
         " UNION ALL SELECT 2, TIMESTAMP '2024-03-01 00:00:00', 'b'"
     )
     dest = str(tmp_path)
-    write_table(df, dest, "tj", fmt="json")
     write_table(df, dest, "tc", fmt="csv")
-    assert sorted(swap_staging(spark, dest, tables=["tj", "tc"])) == ["tc", "tj"]
+    assert swap_staging(spark, dest, tables=["tc"]) == ["tc"]
     con = duckdb.connect()
     # external readers apply their OWN inference (Spark's ISO-Z
     # timestamp strings read back as text); the claim under test is
-    # row fidelity and marker hygiene, so normalize ts with a cast
-    got_j = con.execute(
-        "SELECT id, CAST(ts AS TIMESTAMP) AS ts, s"
-        f" FROM read_json_auto('{dest}/tj/*.json') ORDER BY id"
-    ).fetchall()
+    # row fidelity, so normalize ts with a cast
     got_c = con.execute(
         "SELECT id, CAST(ts AS TIMESTAMP) AS ts, s"
         f" FROM read_csv('{dest}/tc/*.csv', header=true) ORDER BY id"
     ).fetchall()
     con.close()
     want = [(r.id, r.ts, r.s) for r in df.orderBy("id").collect()]
-    assert got_j == want
     assert got_c == want
 
 
@@ -481,7 +417,7 @@ def test_read_table_rejects_another_format_and_reads_an_empty_table(spark, tmp_p
     swap_staging(spark, dest, tables=["t"])
     with pytest.raises(ValueError, match="not parquet"):
         read_table(spark, dest, "t")
-    assert read_table(spark, dest, "t", fmt="csv").count() == 2
+    assert spark.read.option("header", True).csv(os.path.join(dest, "t")).count() == 2
     os.makedirs(os.path.join(dest, "none"))
     empty = read_table(spark, dest, "none", schema="id string, kind string")
     assert empty.columns == ["id", "kind"] and empty.count() == 0
@@ -495,3 +431,40 @@ def test_published_tables_lists_tables_and_the_node_index(spark, tmp_path, kind)
     dest = _dest(tmp_path, kind)
     assert published_tables(spark, dest) == {"t", NODE_INDEX}
     assert published_tables(spark, _dest(tmp_path / "missing", kind)) == set()
+
+
+@pytest.mark.parametrize("fmt", ["orc", "json"])
+def test_write_table_writes_parquet_or_csv_only(spark, tmp_path, fmt):
+    """The sink writes the reference's two formats: any other ``fmt``
+    raises, and a sync asked for one publishes nothing."""
+    dest = str(tmp_path)
+    with pytest.raises(ValueError, match=f"unsupported format: {fmt}"):
+        write_table(spark.range(2), dest, "t", fmt=fmt)
+    with pytest.raises(ValueError, match=f"unsupported format: {fmt}"):
+        collect_to_files(
+            spark, GraphSource.from_docs(spark, example_docs()), example_model(), dest,
+            fmt=fmt,
+        )
+    assert published_tables(spark, dest) == set()
+
+
+def test_csv_sync_publishes_data_files_only(spark, tmp_path):
+    """A CSV sync's table dirs hold the CSV data files and Spark's own
+    ``_SUCCESS``/``.crc`` files, nothing else, and read back in an
+    external reader with every row."""
+    import duckdb
+
+    dest = str(tmp_path)
+    collect_to_files(
+        spark, GraphSource.from_docs(spark, example_docs()), example_model(), dest,
+        fmt="csv",
+    )
+    tables = published_tables(spark, dest) - {NODE_INDEX}
+    assert tables == {"some_instance", "some_volume", "link_some_instance_some_volume"}
+    con = duckdb.connect()
+    for t in sorted(tables):
+        entries = os.listdir(os.path.join(dest, t))
+        assert all(e.endswith((".csv", ".crc")) or e == "_SUCCESS" for e in entries), entries
+        got = con.execute(f"SELECT count(*) FROM read_csv('{dest}/{t}/*.csv', header=true)")
+        assert got.fetchone() == (1,), t
+    con.close()

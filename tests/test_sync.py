@@ -77,7 +77,7 @@ def test_reference_shaped_config_api(spark, tmp_path):
         OutputConfig(destination=str(tmp_path), format="csv"),
     )
     assert "some_instance" in published
-    back = read_table(spark, str(tmp_path), "some_instance", fmt="csv")
+    back = spark.read.option("header", True).csv(str(tmp_path / "some_instance"))
     assert back.count() == 1
 
 
